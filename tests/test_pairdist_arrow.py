@@ -1,23 +1,21 @@
-"""Round-14 obj_obj pair-distance kernels: the per-frame Arrow kernel
-(`_box_pair_distances`, the shipped default) and the flat HOF fold
-(`min_vertex_distance_flat_fold`, the Python-less escape hatch) must be
-VALUE-IDENTICAL to the round-13 unrolled codegen path on every pair —
-exact doubles, not approximate. The Arrow kernel consumes the identical
-JVM-computed vertex doubles (trig never moves to Python), so parity is
-bit-exact by construction; these tests pin it.
+"""The obj_obj pair-distance kernel (`_box_pair_distances`, a per-frame
+`mapInArrow` numpy stage) against a plain-Python reference over the same
+JVM-computed vertex doubles: same pairs, same categories, bit-equal
+distances — exact doubles, not approximate.
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vlm_data_pipeline_spark.functions import geometry as G
 from vlm_data_pipeline_spark.qa.tasks3d import (
     _box_pair_distances,
-    _box_pairs,
+    _capped_boxes,
+    _slim_verts_payload,
 )
 from vlm_data_pipeline_spark.schemas import BBOX_3D, CAMERA
 
@@ -79,21 +77,53 @@ def _frames(spark, rng, counts):
     return spark.createDataFrame(rows, FRAME_SCHEMA)
 
 
-def _old_path(frames, max_boxes=None):
-    pairs = _box_pairs(frames, with_verts=True, max_boxes=max_boxes)
-    return pairs.select(
+def _ref_pair_distance(va, vb):
+    """sqrt of the min over the 64 squared vertex-pair distances of two
+    flat 24-double vertex lists; terms touching a NULL coordinate are
+    skipped, and a pair with no finite term is NULL."""
+    terms = []
+    for i in range(8):
+        for j in range(8):
+            a, b = va[3 * i : 3 * i + 3], vb[3 * j : 3 * j + 3]
+            if None in a or None in b:
+                continue
+            dx, dy, dz = a[0] - b[0], a[1] - b[1], a[2] - b[2]
+            terms.append(dx * dx + dy * dy + dz * dz)
+    return math.sqrt(min(terms)) if terms else None
+
+
+def _reference(frames, max_boxes=None):
+    """Plain-Python pair enumeration (i < j over capped array positions)
+    and distances over the JVM-computed flat vertices."""
+    payload = frames.select(
         "dataset",
         "image_id",
         "scene_id",
         "frame_id",
-        "pos_a",
-        "pos_b",
-        "cat_a",
-        "cat_b",
-        G.min_vertex_distance_flat(
-            F.col("verts_a"), F.col("verts_b")
-        ).alias("dist_m"),
-    )
+        _slim_verts_payload(
+            _capped_boxes(F.col("bounding_boxes_3d"), max_boxes)
+        ).alias("bv"),
+    ).collect()
+    rows = []
+    for r in payload:
+        bv = r.bv or []
+        for i in range(len(bv)):
+            for j in range(i + 1, len(bv)):
+                a, b = bv[i], bv[j]
+                rows.append(
+                    (
+                        r.dataset,
+                        r.image_id,
+                        r.scene_id,
+                        r.frame_id,
+                        a.idx,
+                        b.idx,
+                        a.cat,
+                        b.cat,
+                        _ref_pair_distance(a.verts, b.verts),
+                    )
+                )
+    return sorted(rows)
 
 
 def _rowset(df):
@@ -115,66 +145,55 @@ def _rowset(df):
 
 def test_pairdist_arrow_bit_parity(spark):
     """Mixed frame sizes (0, 1, 2, 3, 7, 23 boxes, one NULL array): the
-    Arrow kernel's rows equal the row-space unrolled kernel's rows
-    EXACTLY — same pairs, same categories, bit-equal distances."""
+    Arrow kernel's rows equal the reference rows EXACTLY."""
     rng = np.random.default_rng(4242)
     frames = _frames(spark, rng, [0, 1, 2, 3, 7, 23, None, 5, 2])
-    old = _rowset(_old_path(frames))
+    ref = _reference(frames)
     new = _rowset(_box_pair_distances(frames))
-    assert len(old) == (1 + 3 + 21 + 253 + 10 + 1)
-    assert new == old
+    assert len(ref) == (1 + 3 + 21 + 253 + 10 + 1)
+    assert new == ref
 
 
 def test_pairdist_arrow_bit_parity_capped(spark):
-    """max_boxes engages the volume cap before pairing — both paths must
-    keep the identical survivor set and original positions."""
+    """max_boxes engages the volume cap before pairing: the kernel keeps
+    the capped survivors and their original positions."""
     rng = np.random.default_rng(777)
     frames = _frames(spark, rng, [6, 2, 9])
-    old = _rowset(_old_path(frames, max_boxes=4))
+    ref = _reference(frames, max_boxes=4)
     new = _rowset(_box_pair_distances(frames, max_boxes=4))
-    assert len(old) == (6 + 1 + 6)
-    assert new == old
+    assert len(ref) == (6 + 1 + 6)
+    assert new == ref
 
 
-def test_pairdist_flat_fold_bit_parity(spark):
-    """The flat HOF fold kernel (env escape hatch) equals the unrolled
-    flat kernel bit-for-bit on random oriented pairs."""
-    rng = np.random.default_rng(99)
-    rows = [
-        {"i": i, "ba": _rand_box(rng), "bb": _rand_box(rng)}
-        for i in range(500)
-    ]
-    schema = T.StructType(
+def test_pairdist_analytic_unit_cubes(spark):
+    """Two axis-aligned unit cubes 3 m apart on x → nearest faces 2 m."""
+    a = _rand_box(np.random.default_rng(0), "a") | dict(
+        x=0.0, y=0.0, z=2.0, xl=1.0, yl=1.0, zl=1.0, pitch=0.0, yaw=0.0,
+        roll=0.0,
+    )
+    b = a | {"category": "b", "x": 3.0}
+    frames = spark.createDataFrame(
         [
-            T.StructField("i", T.IntegerType()),
-            T.StructField("ba", BBOX_3D),
-            T.StructField("bb", BBOX_3D),
-        ]
+            {
+                "dataset": "t",
+                "image_id": "img_0",
+                "scene_id": None,
+                "frame_id": None,
+                "camera": None,
+                "bounding_boxes_3d": [a, b],
+            }
+        ],
+        FRAME_SCHEMA,
     )
-    df = spark.createDataFrame(rows, schema).select(
-        "i",
-        G.box_vertices_flat_hof(F.col("ba")).alias("fa"),
-        G.box_vertices_flat_hof(F.col("bb")).alias("fb"),
-    )
-    out = df.select(
-        "i",
-        G.min_vertex_distance_flat(F.col("fa"), F.col("fb")).alias("unr"),
-        G.min_vertex_distance_flat_fold(F.col("fa"), F.col("fb")).alias(
-            "fold"
-        ),
-    ).collect()
-    assert len(out) == 500
-    for r in out:
-        assert r.unr == r.fold, (r.i, r.unr, r.fold)
+    (row,) = _box_pair_distances(frames).collect()
+    assert (row.pos_a, row.pos_b) == (0, 1)
+    assert abs(row.dist_m - 2.0) < 1e-12
 
 
 def test_pairdist_arrow_null_verts_vanish_in_task(spark):
-    """A box with a NULL angle nulls all its vertices: the JVM kernel
-    yields NULL dist, the Arrow kernel NaN — both must vanish from the
-    obj_obj_distance output (the band predicate rejects non-finite and
-    NULL alike), leaving the two task outputs identical."""
-    import os
-
+    """A box with a NULL angle nulls all its vertices: every kernel row
+    touching it has dist_m NULL (not NaN), and obj_obj_distance keeps
+    exactly the one valid pair."""
     from vlm_data_pipeline_spark.qa import tasks3d
 
     rng = np.random.default_rng(5)
@@ -195,24 +214,17 @@ def test_pairdist_arrow_null_verts_vanish_in_task(spark):
     ]
     frames = spark.createDataFrame(rows, FRAME_SCHEMA)
 
-    def run(kernel):
-        os.environ["SPARK_GRAFT_OBJOBJ_KERNEL"] = kernel
-        try:
-            out = tasks3d.obj_obj_distance(frames)
-            return sorted(
-                (r.id, r.question, r.answer, r.answer_type)
-                for r in out.collect()
-            )
-        finally:
-            os.environ.pop("SPARK_GRAFT_OBJOBJ_KERNEL", None)
+    raw = {
+        (r.pos_a, r.pos_b): r.dist_m
+        for r in _box_pair_distances(frames).collect()
+    }
+    assert set(raw) == {(0, 1), (0, 2), (1, 2)}
+    assert raw[(0, 1)] is None and raw[(1, 2)] is None, raw
+    assert raw[(0, 2)] is not None and math.isfinite(raw[(0, 2)])
 
-    arrow_rows = run("arrow")
-    flat_rows = run("flat")
-    assert arrow_rows == flat_rows
-    # exactly the one valid pair survives; pairs touching the broken box
-    # are rejected by the band in both kernels
-    assert len(arrow_rows) == 1
-    assert "the a and the b" in arrow_rows[0][1]
+    out = tasks3d.obj_obj_distance(frames).collect()
+    assert len(out) == 1
+    assert "the a and the b" in out[0].question
 
 
 def test_pairdist_arrow_partial_null_term_skip():

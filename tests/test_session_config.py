@@ -1,27 +1,21 @@
-"""Pin the round-14 JVM/codegen session configuration.
+"""Pin the session configuration `get_spark` ships.
 
-Round 13 shipped ``-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize``
-to rescue a 64-term generated kernel; under the driver's cold-JVM
-protocol those flags made C2 chew giant generated methods for the whole
-suite (18/19 bench queries 2x slower — VERDICT r13). Round 14 removed
-the flags and replaced the kernel (the obj_obj pair stage now computes
-distances in a vectorized Arrow kernel), so the DEFAULT session must
-carry NO JVM flag overrides. These tests pin the removal so a session.py
-edit cannot silently reintroduce a suite-wide tax.
+The default session carries NO JVM flag overrides: the
+``-XX:-DontCompileHugeMethods`` flag once used to JIT a 64-term generated
+kernel taxed every query sharing the JVM about 2x (OPTIMIZATION_r14.md §1).
+These tests pin its absence, Spark's default codegen ceiling, and the
+Python worker path that lets workers import the engine from any cwd.
 """
 
 from __future__ import annotations
 
 import os
 
-import pytest
+import vlm_data_pipeline_spark
 
 
 def test_no_jvm_flag_overrides_by_default(spark):
-    """No -XX overrides ride the driver/executor JVMs unless a
-    deployment explicitly passes SPARK_GRAFT_JVM_OPTS."""
-    if os.environ.get("SPARK_GRAFT_JVM_OPTS", "").strip():
-        pytest.skip("deployment supplied SPARK_GRAFT_JVM_OPTS")
+    """No -XX overrides ride the driver/executor JVMs."""
     for role in ("driver", "executor"):
         try:
             opts = spark.conf.get(f"spark.{role}.extraJavaOptions")
@@ -31,10 +25,8 @@ def test_no_jvm_flag_overrides_by_default(spark):
 
 
 def test_live_driver_jvm_has_no_huge_method_flag(spark):
-    """The live driver JVM really launched without the r13 flag (they
-    are launch-time options; this reads the JVM's input arguments)."""
-    if os.environ.get("SPARK_GRAFT_JVM_OPTS", "").strip():
-        pytest.skip("deployment supplied SPARK_GRAFT_JVM_OPTS")
+    """The live driver JVM really launched without the flag (it is a
+    launch-time option; this reads the JVM's input arguments)."""
     args = (
         spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
         .getInputArguments()
@@ -46,10 +38,16 @@ def test_live_driver_jvm_has_no_huge_method_flag(spark):
 def test_huge_method_limit_default_is_spark_default(spark):
     """The WSCG bytecode ceiling stays at Spark's default: the
     per-operator-fallback alternative measured 2x slower steady-state
-    (r13 ledger section 8) — the env knob exists for JIT-constrained
-    deployments, but the default must not drift. (Skipped when the env
-    knob itself is set: then the session reflects the deployment, not
-    the default — ADVICE r13.)"""
-    if os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT"):
-        pytest.skip("SPARK_GRAFT_HUGE_METHOD_LIMIT set by deployment")
+    (OPTIMIZATION_r13.md §8)."""
     assert spark.conf.get("spark.sql.codegen.hugeMethodLimit") == "65535"
+
+
+def test_worker_pythonpath_holds_package_parent(spark):
+    """Python workers unpickle the engine's kernels by module reference;
+    the executor env must put the package's parent directory on their
+    path so a driver started from any directory still works."""
+    parent = os.path.dirname(
+        os.path.dirname(os.path.abspath(vlm_data_pipeline_spark.__file__))
+    )
+    worker_path = spark.sparkContext.environment["PYTHONPATH"]
+    assert parent in worker_path.split(os.pathsep), worker_path

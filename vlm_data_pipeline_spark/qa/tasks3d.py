@@ -233,23 +233,15 @@ def _slim_verts_payload(kept: F.Column) -> F.Column:
     """array<struct<box, idx>> → array<struct<idx, cat, verts-flat24>>.
 
     Vertices computed AFTER the cap: survivors only pay the trig.
-    The pair payload is SLIM — {idx, cat, verts}, not the full
-    15-field box struct: every field here is copied into ~n/2 pair
-    structs per box by the in-row comprehension, and the only box
-    field the distance task consumes post-explode is category
-    (guide §2.3 "project before the expensive operation", applied
-    in row space). box_vertices_flat_hof, not box_vertices: (a)
-    inside this interpreted transform lambda the flat unroll
-    re-evaluates its trig per coordinate (~290 SIN/COS per box;
-    the let-bound form computes 6), and (b) the flat 24-double
-    layout (one array header, one primitive buffer) beats nested
-    8×3 (nine headers) on allocation alone. Measured on the
-    11.9M-pair sf1 stage, min-of-4 interleaved (round 13): nested
-    full-box 14.0 → flat-verts full-box 11.2 → flat-verts slim
-    payload every-round faster (13.3→12.3 min through the full
-    task). Coordinates are the identical doubles (parity pinned
-    in test_geometry); the slim union is value-identical
-    (exceptAll symdiff 0 on all 118,830 sf0.01 rows).
+    The payload is SLIM — {idx, cat, verts}, not the full 15-field
+    box struct: category is the only box field the distance task
+    consumes downstream. box_vertices_flat_hof, not box_vertices:
+    inside this interpreted transform lambda the flat unroll would
+    re-evaluate its trig per coordinate (~290 SIN/COS per box; the
+    let-bound form computes 6), and the flat 24-double layout is
+    the one :func:`_pairdist_arrow_batches` reshapes to (n, 8, 3).
+    Coordinates are the identical doubles of box_vertices (parity
+    pinned in test_geometry).
     """
     return F.transform(
         kept,
@@ -277,18 +269,15 @@ def _pairdist_arrow_batches(batches):
     per unordered box pair (i < j over array positions) carrying the min
     vertex-pair distance.
 
-    The arithmetic is EXACTLY :func:`geometry.min_vertex_distance_flat`
-    on the same JVM-computed vertex doubles (Arrow float64 transfer is
-    exact): dx*dx + dy*dy + dz*dz with the same left association per
-    term ((d*d).sum(axis=-1) reduces a length-3 axis sequentially), an
-    exact min over the 64 terms, one correctly-rounded sqrt — bit parity
-    pinned in test_pairdist_arrow_bit_parity. NULL handling mirrors
-    ``least``'s null-skip: a term touching a NULL coordinate becomes NaN
-    (Arrow nulls → NaN on to_numpy) and ``np.fmin.reduce`` skips NaNs
-    exactly as ``least`` skips NULLs; an all-NULL pair yields NaN where
-    the JVM kernel yields NULL — both rejected by the finite band
-    predicate every consumer applies (same adjudication as the codegen
-    kernel's NULL note).
+    The arithmetic runs on the JVM-computed vertex doubles (Arrow
+    float64 transfer is exact): dx*dx + dy*dy + dz*dz left-associated
+    per term (add.reduce over a length-3 axis is sequential), an exact
+    min over the 64 terms, one correctly-rounded sqrt — bit parity with
+    a plain-Python reference pinned in test_pairdist_arrow_bit_parity.
+    NULLs follow ``least``'s null-skip: a term touching a NULL
+    coordinate becomes NaN (Arrow nulls → NaN on to_numpy) and
+    ``np.fmin.reduce`` skips it; a pair whose terms are ALL NULL emits
+    ``dist_m`` NULL.
 
     Pair enumeration is vectorized by grouping frames of equal box count
     (np.triu_indices per distinct n — a handful of distinct counts per
@@ -369,8 +358,7 @@ def _pairdist_arrow_batches(batches):
             V = flat.reshape(total, 24)
         else:
             # a NULL verts array (box struct null upstream) pads as NaN:
-            # every term touching it goes NaN and fmin skips it — the
-            # least()-with-NULL-input behavior of the JVM kernels
+            # every term touching it goes NaN and fmin skips it
             V = np.full((total, 24), np.nan)
             V[lens == 24] = flat.reshape(-1, 24)
         V = V.reshape(total, 8, 3)
@@ -405,8 +393,7 @@ def _pairdist_arrow_batches(batches):
             )
             np.multiply(D_[:c], D_[:c], out=D_[:c])
             # add.reduce over the length-3 axis reduces left-to-right:
-            # (dx*dx + dy*dy) + dz*dz — the exact association of
-            # geometry._pair_sqdist
+            # (dx*dx + dy*dy) + dz*dz
             np.add.reduce(D_[:c], axis=3, out=S_[:c])
             with np.errstate(invalid="ignore"):
                 np.fmin.reduce(
@@ -429,7 +416,7 @@ def _pairdist_arrow_batches(batches):
                     pa.array(idx_np[b_idx[s:e]], pa.int32()),
                     cat_arr.take(pa_a),
                     cat_arr.take(pa_b),
-                    pa.array(dist, pa.float64()),
+                    pa.array(dist, pa.float64(), mask=np.isnan(dist)),
                 ],
                 schema=out_schema,
             )
@@ -442,25 +429,10 @@ def _box_pair_distances(
     to the Python worker as n boxes × (idx, cat, 24 vertex doubles) and
     come back as n(n−1)/2 slim pair rows — the guide-§8 shape (move the
     small representation, materialize the quadratic intermediate where
-    it is cheapest).
-
-    Why this exists next to `_box_pairs` + a JVM distance kernel
-    (round 14): every JVM shape measured over two rounds loses on one
-    axis — the interpreted HOF fold is stable but 3-4× off compiled
-    speed at sf1/sf10 (sf10 obj_obj 348s); the unrolled 64-term codegen
-    tree is fast ONLY when HotSpot is told to JIT >8000-byte methods,
-    a global flag that taxed every query in the session 2× (VERDICT
-    r13). This kernel is both: numpy's vectorized loops are compiled
-    code with no JIT threshold to fall over, and the JVM↔Python
-    transfer is per-BOX, not per-pair — the per-pair pandas_udf that
-    lost the round-7/round-13 A/Bs shipped 48 doubles per PAIR (4.6 GB
-    at sf1); this ships 24 per BOX (~0.3 GB) and returns ~50 B/pair.
-
-    The vertex trig stays in the JVM (`_slim_verts_payload`), so the
-    doubles entering the distance are the identical doubles the JVM
-    kernels consume — bit parity with `min_vertex_distance_flat` is
-    pinned per-value in tests, and full-output parity vs the row-space
-    path was verified exceptAll-symdiff-0 at sf0.01/sf0.1 (round 14).
+    it is cheapest). The vertex trig stays in the JVM
+    (`_slim_verts_payload`); only the 64-term min and the sqrt run in
+    Python. The JVM kernels this replaced are compared in
+    OPTIMIZATION_r14.md §1.
     """
     kept = _capped_boxes(F.col("bounding_boxes_3d"), max_boxes)
     inp = (
@@ -481,9 +453,7 @@ def _box_pair_distances(
 
 
 def _box_pairs(
-    frames: DataFrame,
-    with_verts: bool = False,
-    max_boxes: int | None = None,
+    frames: DataFrame, max_boxes: int | None = None
 ) -> DataFrame:
     """J8: all unordered in-frame box pairs (i < j).
 
@@ -493,10 +463,6 @@ def _box_pairs(
     comprehension + one explode — no self-join, no shuffle at all. (The
     equi-join formulation — see plans/star_queries.py j8_pairwise_selfjoin
     — is the right shape when instances arrive as a flat table instead.)
-
-    ``with_verts`` precomputes the 8 oriented vertices once per BOX before
-    pairing; downstream 8×8 distance kernels would otherwise re-run the
-    trig once per PAIR (each box sits in ~n/2 pairs).
 
     ``max_boxes`` — per-frame pair bound (SURVEY §7.3 hard-parts list;
     VERDICT r12 #2): the in-row comprehension materializes all n(n−1)/2
@@ -512,12 +478,8 @@ def _box_pairs(
     the output is row-identical to the unbounded path (the default,
     None, which is exact reference parity).
     """
-    boxes = F.col("bounding_boxes_3d")
-    kept = _capped_boxes(boxes, max_boxes)
-    if with_verts:
-        enriched = _slim_verts_payload(kept)
-    else:
-        enriched = kept
+    kept = _capped_boxes(F.col("bounding_boxes_3d"), max_boxes)
+
     def mk_pairs(bv: F.Column) -> F.Column:
         n = F.size(bv)
         pair = lambda i, j: F.struct(  # noqa: E731
@@ -536,17 +498,15 @@ def _box_pairs(
         )
         return F.when(n >= 2, all_pairs).otherwise(F.array())
 
-    from ..functions.text import let
-
     pairs = frames.select(
         "dataset",
         "image_id",
         "scene_id",
         "frame_id",
         "camera",
-        F.explode(let(enriched, mk_pairs)).alias("p"),
+        F.explode(let(kept, mk_pairs)).alias("p"),
     )
-    cols = [
+    return pairs.select(
         "dataset",
         "image_id",
         "scene_id",
@@ -554,21 +514,9 @@ def _box_pairs(
         "camera",
         F.col("p.pos_a").alias("pos_a"),
         F.col("p.pos_b").alias("pos_b"),
-    ]
-    if with_verts:
-        # slim payload (see above): categories + flat verts, no box structs
-        cols += [
-            F.col("p.a.cat").alias("cat_a"),
-            F.col("p.b.cat").alias("cat_b"),
-            F.col("p.a.verts").alias("verts_a"),
-            F.col("p.b.verts").alias("verts_b"),
-        ]
-    else:
-        cols += [
-            F.col("p.a.box").alias("box_a"),
-            F.col("p.b.box").alias("box_b"),
-        ]
-    return pairs.select(*cols)
+        F.col("p.a.box").alias("box_a"),
+        F.col("p.b.box").alias("box_b"),
+    )
 
 
 def obj_obj_distance(
@@ -587,31 +535,9 @@ def obj_obj_distance(
     predicates (observed live: one exactly-0.2 pair flips between JVM
     and DuckDB trig)."""
     band = F.round(F.col("dist_m"), 6)
-    # Kernel selection (round 14). Default: the per-frame Arrow kernel
-    # (_box_pair_distances) — the only shape measured fast at sf1/sf10
-    # AND stable under a cold JVM. The round-13 unrolled codegen tree
-    # (min_vertex_distance_flat) is steady-state-fastest but emits
-    # >8000-bytecode generated methods HotSpot refuses to JIT, and the
-    # -XX:-DontCompileHugeMethods rescue taxed the whole suite 2×
-    # (VERDICT r13); the HOF fold is stable but interpreted (sf10
-    # obj_obj 348s). All three are value-identical on these pairs
-    # (parity pinned in test_geometry / test_qa_tasks). The env knob is
-    # the deployment escape hatch for Python-less clusters.
-    kernel = os.environ.get("SPARK_GRAFT_OBJOBJ_KERNEL", "arrow")
-    if kernel == "arrow":
-        dists = _box_pair_distances(frames, max_boxes=max_boxes)
-    else:
-        pairs = _box_pairs(frames, with_verts=True, max_boxes=max_boxes)
-        kern = (
-            G.min_vertex_distance_flat
-            if kernel == "flat"
-            else G.min_vertex_distance_flat_fold
-        )
-        dists = pairs.withColumn(
-            "dist_m", kern(F.col("verts_a"), F.col("verts_b"))
-        )
     d = (
-        dists.filter(
+        _box_pair_distances(frames, max_boxes=max_boxes)
+        .filter(
             (band >= P_OBJ["min_distance"]) & (band <= P_OBJ["max_distance"])
         )
         .withColumn("dist_r", F.round("dist_m", P_OBJ["decimals"]))
@@ -760,9 +686,7 @@ def cam_obj_rel_dist(frames: DataFrame) -> DataFrame:
                 # (min-of-4 interleaved, round 13) the let-bound form is
                 # ~10% SLOWER here — the two extra nested HOF layers per
                 # box cost more than the repeated interpreted trig saves
-                # on this one-vertex-array-per-box shape (contrast
-                # _box_pairs, where each verts array is copied into ~n/2
-                # pair structs and slimming the payload is what pays)
+                # on this one-vertex-array-per-box shape
                 G.box_vertices(b),
                 lambda v: F.sqrt(
                     (v[0] - cam[0]) ** 2 + (v[1] - cam[1]) ** 2 + (v[2] - cam[2]) ** 2
