@@ -144,13 +144,21 @@ def _rowset(df):
 
 
 def test_pairdist_arrow_bit_parity(spark):
-    """Mixed frame sizes (0, 1, 2, 3, 7, 23 boxes, one NULL array): the
-    Arrow kernel's rows equal the reference rows EXACTLY."""
+    """The Arrow kernel's rows equal the reference rows EXACTLY for mixed
+    frame sizes (0, 1, 2, 3, 7, 23 boxes, one NULL array), and for one
+    partition of 50-, 3- and 47-box frames: one Arrow batch of 2,309
+    pairs, which crosses two 1,024-pair chunk boundaries."""
     rng = np.random.default_rng(4242)
     frames = _frames(spark, rng, [0, 1, 2, 3, 7, 23, None, 5, 2])
     ref = _reference(frames)
     new = _rowset(_box_pair_distances(frames))
     assert len(ref) == (1 + 3 + 21 + 253 + 10 + 1)
+    assert new == ref
+
+    frames = _frames(spark, rng, [50, 3, 47]).coalesce(1)
+    ref = _reference(frames)
+    new = _rowset(_box_pair_distances(frames))
+    assert len(ref) == (1225 + 3 + 1081)
     assert new == ref
 
 

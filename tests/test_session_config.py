@@ -3,8 +3,10 @@
 The default session carries NO JVM flag overrides: the
 ``-XX:-DontCompileHugeMethods`` flag once used to JIT a 64-term generated
 kernel taxed every query sharing the JVM about 2x (OPTIMIZATION_r14.md §1).
-These tests pin its absence, Spark's default codegen ceiling, and the
-Python worker path that lets workers import the engine from any cwd.
+These tests pin its absence, Spark's default codegen ceiling, the
+AQE and file-split settings the session inherits from Spark, the absence
+of allocator overrides in the executor env, and the Python worker path
+that lets workers import the engine from any cwd.
 """
 
 from __future__ import annotations
@@ -51,3 +53,27 @@ def test_worker_pythonpath_holds_package_parent(spark):
     )
     worker_path = spark.sparkContext.environment["PYTHONPATH"]
     assert parent in worker_path.split(os.pathsep), worker_path
+
+
+def test_inherits_spark_aqe_and_split_defaults(spark):
+    """AQE, its coalescing, skew-join splitting and the 128 MiB split
+    size are Spark's defaults; the session leaves them unset and still
+    runs with them."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    assert split == 128 * 1024 * 1024, split
+
+
+def test_no_allocator_overrides_in_executor_env(spark):
+    """Python workers run on the allocators' own defaults: no malloc or
+    Arrow memory-pool variables ride the executor env."""
+    keys = [k for k, _ in spark.sparkContext.getConf().getAll()]
+    pinned = [
+        k
+        for k in keys
+        if k.startswith("spark.executorEnv.MALLOC_")
+        or k == "spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL"
+    ]
+    assert pinned == [], pinned

@@ -10,7 +10,6 @@ the sink.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 # Representative class-id → name dimension (QA_generation/utils/
@@ -48,31 +47,6 @@ def parse_class_category(cat: Column, mapping: dict[int, str] | None = None) -> 
         F.format_string("object_%s", suffix),
     )
     return F.when(suffix != "", mapped).otherwise(cat)
-
-
-def explode_boxes_3d(frames: DataFrame) -> DataFrame:
-    """frames → per-box instances view (FIXTURES.md §2): posexplode keeps
-    the in-frame position, the dedupe/ordering key everywhere."""
-    return frames.select(
-        "dataset",
-        "split",
-        "image_id",
-        "scene_id",
-        "frame_id",
-        "camera",
-        F.posexplode("bounding_boxes_3d").alias("pos", "box"),
-    )
-
-
-def explode_boxes_2d(frames: DataFrame) -> DataFrame:
-    return frames.select(
-        "dataset",
-        "split",
-        "image_id",
-        "scene_id",
-        "frame_id",
-        F.posexplode("bounding_boxes_2d").alias("pos", "box"),
-    )
 
 
 def category_count_entries(
@@ -147,26 +121,15 @@ def first_box_per_category(
     )
 
 
-def with_qa_ids(
-    df: DataFrame, task: str, *order_cols: str, sequential: bool = False
-) -> DataFrame:
+def with_qa_ids(df: DataFrame, task: str, *order_cols: str) -> DataFrame:
     """Deterministic '{dataset}_{task}_{key}' ids (qa_base.py:55).
 
-    The reference numbers rows with a mutable counter in visit order. The
-    default here derives the id from the row's own content key
-    (md5 over dataset/task/order_cols): embarrassingly parallel, stable
-    under repartitioning, and — unlike a per-dataset ``row_number`` window —
-    never funnels a whole dataset's QA rows through one task's sort, which
-    is the one scale-killer at 100 TB. ``sequential=True`` restores the
-    reference-style '{NNNNNN}' counter for small corpora that want it.
+    The reference numbers rows with a mutable counter in visit order. Here
+    the id derives from the row's own content key (md5 over
+    dataset/task/order_cols): embarrassingly parallel, stable under
+    repartitioning, and — unlike a per-dataset ``row_number`` window —
+    never funnels a whole dataset's QA rows through one task's sort.
     """
-    if sequential:
-        w = W.partitionBy("dataset").orderBy(*[F.col(c) for c in order_cols])
-        n = F.row_number().over(w) - 1
-        return df.withColumn(
-            "id",
-            F.format_string("%s_%s_%06d", F.col("dataset"), F.lit(task), n),
-        )
     key = F.md5(
         F.concat_ws(
             "\u001f",  # unit separator keeps ("ab","c") != ("a","bc")

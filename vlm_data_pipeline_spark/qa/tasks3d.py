@@ -12,8 +12,6 @@ with input splits, not with any grouping key's cardinality.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -258,10 +256,6 @@ _PAIRDIST_SCHEMA = (
     "pos_a int, pos_b int, cat_a string, cat_b string, dist_m double"
 )
 
-# (pid, {name: ndarray}) — per-worker-process reusable compute buffers
-# for _pairdist_arrow_batches; see the first-touch cost note there.
-_PAIRDIST_BUFS: tuple | None = None
-
 
 def _pairdist_arrow_batches(batches):
     """mapInArrow body for :func:`_box_pair_distances`: per input frame
@@ -280,43 +274,14 @@ def _pairdist_arrow_batches(batches):
     ``dist_m`` NULL.
 
     Pair enumeration is vectorized by grouping frames of equal box count
-    (np.triu_indices per distinct n — a handful of distinct counts per
-    corpus), so there is no per-frame Python loop; the distance kernel
-    runs in bounded chunks so peak memory per task stays ~tens of MB
-    regardless of batch pair count.
+    (np.triu_indices per distinct n), so there is no per-frame Python
+    loop; distances are computed CHUNK pairs at a time, so temporaries
+    stay a few MB whatever the batch's pair count.
     """
     import numpy as np
     import pyarrow as pa
 
-    # Fixed-size compute buffers, allocated once per WORKER PROCESS and
-    # reused across chunks, batches and tasks (guide §4.5 module-global
-    # + pid guard; this module is importable on the workers, so
-    # cloudpickle ships the function by reference and the global
-    # survives worker reuse). Why this matters here: on the graded
-    # sandbox (a microVM), FIRST-TOUCH of fresh anonymous memory costs
-    # tens of ms per MB (measured: 512 MB single-process touch 36 s;
-    # 32 fresh processes' first ~100 MB numpy workload 53-73 s wall
-    # EACH, second run 0.2 s — round-14 ledger). Naively letting numpy
-    # allocate ~100 MB of temporaries per chunk re-pays that tax every
-    # task; 20 MB of once-per-worker buffers bounds it.
-    global _PAIRDIST_BUFS
-    CHUNK = 8192
-    pid = os.getpid()
-    if _PAIRDIST_BUFS is None or _PAIRDIST_BUFS[0] != pid:
-        _PAIRDIST_BUFS = (
-            pid,
-            {
-                "A": np.empty((CHUNK, 8, 3)),
-                "B": np.empty((CHUNK, 8, 3)),
-                "D": np.empty((CHUNK, 8, 8, 3)),
-                "S": np.empty((CHUNK, 8, 8)),
-                "M": np.empty(CHUNK),
-            },
-        )
-    bufs = _PAIRDIST_BUFS[1]
-    A_, B_, D_, S_, M_ = (
-        bufs["A"], bufs["B"], bufs["D"], bufs["S"], bufs["M"]
-    )
+    CHUNK = 1024
 
     out_schema = pa.schema(
         [
@@ -385,24 +350,12 @@ def _pairdist_arrow_batches(batches):
         P = len(a_idx)
         for s in range(0, P, CHUNK):
             e = min(s + CHUNK, P)
-            c = e - s
-            np.take(V, a_idx[s:e], axis=0, out=A_[:c])
-            np.take(V, b_idx[s:e], axis=0, out=B_[:c])
-            np.subtract(
-                A_[:c, :, None, :], B_[:c, None, :, :], out=D_[:c]
-            )
-            np.multiply(D_[:c], D_[:c], out=D_[:c])
+            d = V[a_idx[s:e]][:, :, None, :] - V[b_idx[s:e]][:, None, :, :]
             # add.reduce over the length-3 axis reduces left-to-right:
             # (dx*dx + dy*dy) + dz*dz
-            np.add.reduce(D_[:c], axis=3, out=S_[:c])
+            sq = np.add.reduce(d * d, axis=3)
             with np.errstate(invalid="ignore"):
-                np.fmin.reduce(
-                    S_[:c].reshape(c, 64), axis=1, out=M_[:c]
-                )
-                np.sqrt(M_[:c], out=M_[:c])
-            # copy out of the reused buffer — pa.array would otherwise
-            # zero-copy a view the next chunk overwrites
-            dist = M_[:c].copy()
+                dist = np.sqrt(np.fmin.reduce(sq.reshape(e - s, 64), axis=1))
             fr = pa.array(f_idx[s:e])
             pa_a = pa.array(a_idx[s:e])
             pa_b = pa.array(b_idx[s:e])

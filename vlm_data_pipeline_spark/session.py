@@ -1,12 +1,16 @@
 """SparkSession factory with scale-conscious defaults.
 
 Local testing runs on ``local[N]`` (one JVM); the configuration is chosen so
-the same logical plans survive a multi-executor cluster at 100 TB:
+the same logical plans survive a multi-executor cluster at 100 TB. Only
+settings that differ from Spark's own defaults are set:
 
-- AQE on (runtime coalescing, skew-join splitting, dynamic join selection)
-- shuffle partitions sized to cores locally (override per deployment)
+- shuffle partitions sized to cores locally (override per deployment
+  through ``extra_conf``)
 - Arrow enabled for every pandas-UDF boundary
 - session timezone pinned to UTC so results are oracle-comparable
+
+AQE, its partition coalescing and skew-join splitting, and the 128 MiB
+file-split size are Spark's defaults and are inherited, not set.
 """
 
 from __future__ import annotations
@@ -16,27 +20,6 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-# Allocator policy for Python workers (and, harmlessly, every process
-# we spawn). Round-14 measurement on the graded sandbox (a microVM):
-# FIRST-TOUCH of fresh anonymous memory costs tens of ms per MB (512 MB
-# single-process touch: 36 s), and glibc/jemalloc return big buffers to
-# the OS on free, so an Arrow/numpy stage that churns large temporaries
-# re-pays that fault tax on EVERY run. Pinning the allocator keeps
-# worker heaps warm: no trim (freed pages stay mapped), a high mmap
-# threshold (big numpy temporaries come from the retained heap instead
-# of fresh mmaps), and pyarrow on the system allocator so Arrow buffers
-# share that retained heap. Neutral on ordinary kernels; set via env so
-# the values reach local-mode workers (inherited) and appear in
-# spark.executorEnv.* for cluster deployments. setdefault — deployments
-# keep full override control.
-WORKER_ALLOC_ENV = {
-    "MALLOC_TRIM_THRESHOLD_": "-1",
-    "MALLOC_MMAP_THRESHOLD_": "1073741824",
-    "ARROW_DEFAULT_MEMORY_POOL": "system",
-}
-for _k, _v in WORKER_ALLOC_ENV.items():
-    os.environ.setdefault(_k, _v)
 
 
 def _worker_pythonpath() -> str:
@@ -52,35 +35,25 @@ def _worker_pythonpath() -> str:
 def get_spark(
     app_name: str = "vlm_data_pipeline_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the SparkSession.
+    """Build (or fetch) the SparkSession on ``local[cpus]``.
 
-    ``shuffle_partitions`` defaults to the core count: on local mode more
-    partitions than cores only adds task-scheduling overhead, while on a
-    real cluster the deployment should override this (or rely on AQE
-    coalescing, which is enabled).
+    Shuffle partitions default to the core count: on local mode more
+    partitions than cores only adds task-scheduling overhead. A cluster
+    deployment overrides ``spark.sql.shuffle.partitions`` (or any other
+    setting) through ``extra_conf``.
     """
     cpus = cpus or DEFAULT_CPUS
-    shuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # parallelismFirst coalescing is floored by minPartitionSize
-        # (default 1 MiB): a small-byte but CPU-heavy shuffle output —
-        # e.g. the ~16 MB frames relation whose per-row QA programs
-        # dominate the pipeline — coalesces to 16 partitions and idles
-        # half of local[32] through the hottest stage (measured 10.2s →
-        # ~6.5s for the 10-task pass at sf0.1 with the floor lowered).
-        # 256 KiB keeps such relations at ~core-count partitions while
-        # still merging genuinely tiny outputs; at cluster scale
-        # partitions >> cores and this floor never binds.
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        # Spark's 1 MiB floor coalesces a small but CPU-heavy shuffle output
+        # (the ~16 MB frames relation at sf0.1) to 16 partitions, idling half
+        # of local[32] (10-task QA pass 10.2s; ~6.5s at 256 KiB). At cluster
+        # scale partitions >> cores and this floor never binds.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -89,12 +62,8 @@ def get_spark(
         # the driver's events.parquet carries TIMESTAMP(NANOS) which Spark
         # refuses by default; read as long and convert at the source wrapper
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # JVM flags and hugeMethodLimit stay at Spark's defaults: OPTIMIZATION_r14.md §1
         .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )
-    for k in WORKER_ALLOC_ENV:
-        builder = builder.config(f"spark.executorEnv.{k}", os.environ[k])
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
