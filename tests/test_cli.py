@@ -23,6 +23,33 @@ def test_cli_qa_and_summary(spark, tmp_path):
     assert main(["summary", "--frames", src, "--cpus", "4"]) == 0
 
 
+def test_cli_enrich_codebook_sink(spark, tmp_path):
+    """The enrich subcommand writes its codebook through
+    enrich.write_codebook: the read-back equals build_codebook on the
+    same frames."""
+    from pyspark.sql import functions as F
+
+    from vlm_data_pipeline_spark.enrich import build_codebook, read_codebook
+
+    frames = fixture_frames(spark).withColumn(
+        "bounding_boxes_3d",
+        F.transform(
+            "bounding_boxes_3d",
+            lambda b, i: F.when(
+                i == 0, b.withField("category", F.lit("object_7"))
+            ).otherwise(b),
+        ),
+    )
+    src = str(tmp_path / "frames")
+    frames.write.mode("overwrite").parquet(src)
+    out = str(tmp_path / "enrich_out")
+    assert main(["enrich", "--frames", src, "--out", out, "--cpus", "4"]) == 0
+    got = sorted(read_codebook(spark, f"{out}/codebook").collect())
+    want = sorted(build_codebook(spark.read.parquet(src)).collect())
+    assert got == want
+    assert [r.instance_id for r in got] == [7]
+
+
 def test_cli_clean(spark, tmp_path):
     docs = spark.createDataFrame(
         [

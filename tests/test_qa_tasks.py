@@ -173,45 +173,38 @@ def test_generate_all_and_summary(frames):
     assert all(n > 0 for n in summary.values())
 
 
-def test_generate_all_summary_tier0_precheck(spark, frames):
-    """VERDICT r12 #3 / Next #5: passing the K2 dataset summary makes the
-    modality precheck a bounded read of the summary table — output
-    identical to the probe path, and PROVABLY consulted: a summary
-    claiming a modality is absent drops that branch without any frames
-    probe overriding it (the lying-summary witness)."""
-    from vlm_data_pipeline_spark.sources.json_frames import dataset_summary
+def test_generate_all_routes_by_probed_modality(spark, sf_dir, tmp_path):
+    """generate_all's one modality check is a limit-1 probe on the
+    persisted frames. After a parquet round-trip the synthetic corpus's
+    absent 2D boxes are data, not a literal NULL: the union is exactly the
+    six 3D tasks over the 3D-routed frames, and with both box columns NULL
+    it is empty with the QA_PAIR columns plus task."""
+    from vlm_data_pipeline_spark.qa.runner import TASKS_3D
+    from vlm_data_pipeline_spark.schemas import QA_PAIR
+    from vlm_data_pipeline_spark.sources.star_frames import synthetic_frames
 
-    base = sorted(
+    src = str(tmp_path / "frames")
+    synthetic_frames(spark, sf_dir).write.parquet(src)
+    frames = spark.read.parquet(src)
+
+    got = sorted(
         (r.id, r.task, r.answer) for r in generate_all(frames).collect()
     )
-    with_summary = sorted(
-        (r.id, r.task, r.answer)
-        for r in generate_all(
-            frames, summary=dataset_summary(frames)
-        ).collect()
+    assert {t for _, t, _ in got} == TASKS_3D
+    fr3 = frames.filter(F.size("bounding_boxes_3d") > 0)
+    want = sorted(
+        (r.id, t, r.answer) for t in TASKS_3D for r in TASKS[t](fr3).collect()
     )
-    assert base == with_summary
-    # lying summary: no 3D boxes claimed → every 3D task dropped, 2D kept
-    lie = spark.createDataFrame(
-        [("ALL", "ALL", 10, 0, 5, 1)],
-        "dataset string, split string, n_frames long, n_boxes_3d long,"
-        " n_boxes_2d long, n_scenes long",
-    )
-    tasks_left = {
-        r.task for r in generate_all(frames, summary=lie).collect()
-    }
-    from vlm_data_pipeline_spark.qa.runner import TASKS_3D
+    assert got == want
 
-    assert tasks_left and tasks_left.isdisjoint(TASKS_3D)
-    # leaf-row fallback (no grand rollup row present)
-    leaves = dataset_summary(frames).filter(
-        (F.col("dataset") != "ALL") & (F.col("split") != "ALL")
-    )
-    with_leaves = sorted(
-        (r.id, r.task, r.answer)
-        for r in generate_all(frames, summary=leaves).collect()
-    )
-    assert base == with_leaves
+    no_boxes = frames
+    for c in ("bounding_boxes_3d", "bounding_boxes_2d"):
+        no_boxes = no_boxes.withColumn(
+            c, F.lit(None).cast(frames.schema[c].dataType)
+        )
+    empty = generate_all(no_boxes)
+    assert empty.columns == [*QA_PAIR.fieldNames(), "task"]
+    assert empty.count() == 0
 
 
 def test_determinism(frames):

@@ -123,7 +123,7 @@ def test_qa_pipeline_streams_unchanged(spark, tmp_path):
         "qa_stream",
         output_mode="append",
     )
-    batch = generate_all(spark.read.parquet(src), tasks=tasks, persist=False)
+    batch = generate_all(spark.read.parquet(src), tasks=tasks)
     assert as_sorted_rows(out) == as_sorted_rows(batch)
     assert out.count() > 0
 

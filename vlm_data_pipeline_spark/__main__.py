@@ -57,14 +57,14 @@ def cmd_qa(args: argparse.Namespace) -> int:
 
 
 def cmd_enrich(args: argparse.Namespace) -> int:
-    from .enrich import apply_codebook, build_codebook, label_histogram
+    from .enrich import apply_codebook, build_codebook, label_histogram, write_codebook
 
     spark = _spark(args.cpus)
     frames = spark.read.parquet(args.frames)
     codebook = build_codebook(frames)
     labeled = apply_codebook(frames, codebook, labeled_only=not args.keep_unlabeled)
     labeled.write.mode("overwrite").parquet(f"{args.out}/labeled")
-    codebook.coalesce(1).write.mode("overwrite").json(f"{args.out}/codebook")
+    write_codebook(codebook, f"{args.out}/codebook")
     label_histogram(codebook).show(50, truncate=False)
     return 0
 

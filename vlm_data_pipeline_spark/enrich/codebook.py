@@ -63,7 +63,7 @@ def representative_per_instance(instances: DataFrame) -> DataFrame:
     ).select("instance_id", "rep.dataset", "rep.image_id", "rep.rgb_path", "rep.pos")
 
 
-def stub_classifier(batch_size: int = 16) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+def stub_classifier() -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Deterministic stand-in for the CLIP/SAM/DINO stage (M2/M3).
 
     Real deployment: replace the body with a lazily-initialized
@@ -246,9 +246,6 @@ def hierarchical_codebook_v2(
     frames: DataFrame,
     stage_a: Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]] | None = None,
     stage_b: Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]] | None = None,
-    margin_coarse: float = MARGIN_THRESH_COARSE,
-    margin_fine: float = MARGIN_THRESH_FINE,
-    margin_fine_b: float = MARGIN_THRESH_FINE_B,
 ) -> DataFrame:
     """M4: coarse→fine hierarchical classify with margin acceptance and
     Stage A/B agreement (build_enhanced_codebook_v2.py:330-420).
@@ -283,7 +280,7 @@ def hierarchical_codebook_v2(
         stage_a or stub_hierarchical_classifier("A"), schema=HIER_SCHEMA
     )
     a_ok = a_out.filter(
-        (F.col("grp_margin") >= margin_coarse) & F.col("pred").isNotNull()
+        (F.col("grp_margin") >= MARGIN_THRESH_COARSE) & F.col("pred").isNotNull()
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
     b_in = reps.join(a_ok.select("instance_id"), "instance_id", "semi")
@@ -291,9 +288,9 @@ def hierarchical_codebook_v2(
         stage_b or stub_hierarchical_classifier("B"), schema=HIER_SCHEMA
     )
     b_ok = b_out.filter(
-        (F.col("grp_margin") >= margin_coarse)
+        (F.col("grp_margin") >= MARGIN_THRESH_COARSE)
         & F.col("pred").isNotNull()
-        & (F.col("margin") >= margin_fine_b)
+        & (F.col("margin") >= MARGIN_THRESH_FINE_B)
     )
 
     a = a_ok.select(
@@ -313,7 +310,7 @@ def hierarchical_codebook_v2(
         .filter(
             (F.col("grp_a") == F.col("grp_b"))
             & (F.col("pred_a") == F.col("pred_b"))
-            & (F.col("margin_a") >= margin_fine)
+            & (F.col("margin_a") >= MARGIN_THRESH_FINE)
         )
         .select(
             "instance_id",
@@ -434,15 +431,13 @@ MASK_REFINE_SCHEMA = (
 )
 
 
-def stub_mask_refiner(
-    pad_frac: float = 0.15,
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+def stub_mask_refiner() -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Deterministic stand-in for the SAM mask-refinement stage (M5).
 
     Real deployment: per-executor SamPredictor singleton; set_image once
     per frame, predict with the box prompt, emit the mask's tight bbox +
     area (build_enhanced_codebook_v2.py:314-336). The stub tightens each
-    box by ``pad_frac`` per side and reports the implied area/IoU — stable
+    box by 15% per side and reports the implied area/IoU — stable
     values that let downstream logic (crop selection, agreement joins) be
     tested without torch.
     """
@@ -451,8 +446,8 @@ def stub_mask_refiner(
         for pdf in batches:
             w = pdf["x_max"] - pdf["x_min"]
             h = pdf["y_max"] - pdf["y_min"]
-            dx = (w * pad_frac).astype(int)
-            dy = (h * pad_frac).astype(int)
+            dx = (w * 0.15).astype(int)
+            dy = (h * 0.15).astype(int)
             nx0 = pdf["x_min"] + dx
             ny0 = pdf["y_min"] + dy
             nx1 = (pdf["x_max"] - dx).clip(lower=nx0 + 1)

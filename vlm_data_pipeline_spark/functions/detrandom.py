@@ -33,12 +33,6 @@ def randint(lo: int, hi: int, *seed_cols: Column) -> Column:
     return (unit_uniform(*seed_cols) * (hi - lo + 1)).cast("int") + lo
 
 
-def shuffle_key(*seed_cols: Column) -> Column:
-    """Sort by this to get a deterministic 'shuffle' of elements."""
-    seed = F.concat_ws("\x1f", *[c.cast("string") for c in seed_cols])
-    return F.md5(seed)
-
-
 def percent_distractors(
     correct: Column,
     n: int,

@@ -476,10 +476,3 @@ def bbox2d_area(box: Column) -> Column:
         "double"
     )
     return F.coalesce(box["area"].cast("double"), computed)
-
-
-def bbox2d_center(box: Column) -> Column:
-    return F.struct(
-        ((box["x_min"] + box["x_max"]) / 2.0).alias("cx"),
-        ((box["y_min"] + box["y_max"]) / 2.0).alias("cy"),
-    )

@@ -94,10 +94,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def distinct_token_count(text: Column) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
 # GPT-2-style pretokenizer shape: contractions, space-prefixed letter runs,
 # digit runs, punctuation runs. Both Java regex (Spark) and RE2 (DuckDB)
 # support \p{L}/\p{N}, so the same pattern serves the oracle.

@@ -7,9 +7,9 @@ use them as a crawl-priority / quality prior. The engine already has
 the component side of graph analytics (``dedup.neardup_components``);
 this module adds the centrality side.
 
-Determinism design: ranks are FIXED-POINT BIGINTs (``scale`` = 1e12),
-all per-iteration arithmetic is integer (``div`` for contributions,
-integer percent for damping). Floating-point power iteration would make
+Determinism design: ranks are FIXED-POINT BIGINTs (scale =
+``PAGERANK_SCALE`` = 1e12), all per-iteration arithmetic is integer
+(``div`` for contributions, integer percent for damping). Floating-point power iteration would make
 the low bits depend on partition-local addition order — run-to-run
 nondeterminism exactly where a curation pipeline wants reproducible
 keep/drop decisions. Integer mass is associative/commutative, so the
@@ -47,8 +47,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 5,
     damping_pct: int = 85,
-    scale: int = PAGERANK_SCALE,
-    checkpoint_every: int = 4,
     seeds: DataFrame | None = None,
     seed_col: str = "node",
 ) -> DataFrame:
@@ -87,21 +85,17 @@ def pagerank(
     the integer arithmetic makes "no trust" a real zero, not an
     epsilon, so the drop list is a plain ``rank_fp = 0`` filter.
 
-    ``checkpoint_every``: sweeps between eager localCheckpoints. Each
-    checkpoint costs a full job, so materializing every sweep doubles
-    wall-clock at demo scale; every 4th keeps the logical plan (which
-    grows by two joins + an agg per un-checkpointed sweep) comfortably
-    inside Catalyst's budget while amortizing the job overhead. The
-    final sweep is never checkpointed — the caller's action does it.
+    Every 4th sweep is eagerly localCheckpointed. Each checkpoint costs
+    a full job, so materializing every sweep doubles wall-clock at demo
+    scale; every 4th keeps the logical plan (which grows by two joins +
+    an agg per un-checkpointed sweep) comfortably inside Catalyst's
+    budget while amortizing the job overhead. The final sweep is never
+    checkpointed — the caller's action does it.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     if not (0 <= damping_pct <= 100):
         raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .localCheckpoint()
@@ -140,19 +134,12 @@ def pagerank(
         ).select(
             "node", F.coalesce(F.col("is_tgt"), F.lit(False)).alias("is_tgt")
         ).localCheckpoint()
-    # Loop-invariant precomputation (round 13, guide §2.4 "remove
-    # shuffles outright"): out-degree depends only on the edge list, so
-    # attach it to the edges ONCE instead of joining ranks⋈outdeg every
-    # sweep, and fold a per-vertex is_dang flag (no outgoing edges) into
-    # the verts dimension so the dangling-mass aggregate is a FILTER on
-    # ranks instead of the od-IS-NULL side of that per-sweep join. Each
-    # sweep drops from three joins to two (e_od⋈ranks, verts⋈contrib);
-    # contributions (r div od per edge) and the dangling sum are the
-    # same integers, oracle-identical (the SQL mirror is
-    # formulation-agnostic). At bench scale the win is small (curation's
-    # sf0.1 trust stage 1.93→1.82 s min-of-3 — the demo graph is
-    # overhead-bound); the point is the per-sweep shuffle count, which
-    # is what iteration cost scales with on a real edge list.
+    # Loop invariants: out-degree depends only on the edge list, so it is
+    # attached to the edges once, and a per-vertex is_dang flag (no
+    # outgoing edges) rides in the verts dimension so the dangling-mass
+    # aggregate is a filter on ranks. Each sweep has two joins
+    # (e_od⋈ranks, verts⋈contrib); the per-edge contributions and the
+    # dangling sum are the same integers the SQL mirror computes.
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     e_od = e.join(outdeg, "src").localCheckpoint()
     verts = verts.join(
@@ -162,11 +149,11 @@ def pagerank(
     ).select(
         "node", "is_tgt", F.col("_has_out").isNull().alias("is_dang")
     ).localCheckpoint()
-    tele = ((100 - damping_pct) * (scale // s)) // 100
+    tele = ((100 - damping_pct) * (PAGERANK_SCALE // s)) // 100
     ranks = verts.select(
         "node",
         "is_dang",
-        F.when(F.col("is_tgt"), F.lit(scale // s))
+        F.when(F.col("is_tgt"), F.lit(PAGERANK_SCALE // s))
         .otherwise(F.lit(0))
         .cast("long")
         .alias("r"),
@@ -198,12 +185,12 @@ def pagerank(
                 ).cast("long").alias("r"),
             )
         )
-        if it % checkpoint_every == checkpoint_every - 1 and it != iterations - 1:
+        if it % 4 == 3 and it != iterations - 1:
             ranks = ranks.localCheckpoint()
     return ranks.select(
         "node",
         F.col("r").alias("rank_fp"),
-        (F.col("r").cast("double") / float(scale)).alias("rank"),
+        (F.col("r").cast("double") / float(PAGERANK_SCALE)).alias("rank"),
     )
 
 
@@ -212,7 +199,6 @@ def pagerank_oracle_sql(
     n_vertices_sql: str,
     iterations: int = 5,
     damping_pct: int = 85,
-    scale: int = PAGERANK_SCALE,
     seeds_cte: str | None = None,
 ) -> str:
     """The DuckDB mirror of :func:`pagerank`, iterations unrolled as
@@ -259,7 +245,7 @@ verts AS (
         f""", outdeg AS (
     SELECT src, CAST(count(*) AS BIGINT) AS od FROM edges GROUP BY src
 ), r0 AS (
-    SELECT node, CAST(CASE WHEN is_tgt THEN {scale} // n ELSE 0 END
+    SELECT node, CAST(CASE WHEN is_tgt THEN {PAGERANK_SCALE} // n ELSE 0 END
                       AS BIGINT) AS r
     FROM tgt, nn
 )"""
@@ -280,7 +266,7 @@ verts AS (
 ), r{i} AS (
     SELECT v.node,
            CAST((CASE WHEN v.is_tgt
-                 THEN ((100 - {d}) * ({scale} // nn.n)) // 100
+                 THEN ((100 - {d}) * ({PAGERANK_SCALE} // nn.n)) // 100
                  ELSE 0 END)
                 + ({d} * (coalesce(c.in_sum, 0)
                    + (CASE WHEN v.is_tgt THEN dd.dsum // nn.n
@@ -293,7 +279,7 @@ verts AS (
     parts.append(
         f"""
 SELECT node, r AS rank_fp,
-       CAST(r AS DOUBLE) / {float(scale)!r} AS rank
+       CAST(r AS DOUBLE) / {float(PAGERANK_SCALE)!r} AS rank
 FROM r{iterations}"""
     )
     return "".join(parts)

@@ -47,122 +47,39 @@ TASKS_3D = {
 def generate_all(
     frames: DataFrame,
     tasks: list[str] | None = None,
-    persist: bool = True,
-    summary: DataFrame | None = None,
 ) -> DataFrame:
     """Union of all task outputs over one frames lineage, with a task
     column (the all_qa_pairs.json analogue, generate_qa.py:134-144).
 
-    ``persist`` (default on) materializes the shared frames input once:
-    each task branch prunes different columns, so their upstream subtrees
-    are NOT identical and Spark's exchange reuse never fires — without the
-    persist, a 10-task run re-executes the frames scan/assembly 10×
-    (measured ~2× end-to-end on the synthetic corpus). At cluster scale
-    this is the standard snapshot-then-fan-out pattern; pass False when
-    the input is already a cached/bronze table.
+    A batch run of more than one task persists ``frames`` once
+    (MEMORY_AND_DISK): each task branch prunes different columns, so
+    their subtrees differ and Spark's exchange reuse never fires; without
+    the persist every task re-executes the frames scan and assembly.
 
-    ``summary`` — optional K2 dataset-summary table for THIS frames input
-    (``sources.json_frames.dataset_summary`` output, or a read of the
-    parquet it was written to). When given it becomes tier 0 of the
-    modality precheck: the per-corpus n_boxes_3d / n_boxes_2d counters
-    answer presence/absence at the cost of reading a
-    ≤|datasets×splits|-row table — in particular the NEGATIVE proof,
-    which on an ingested (non-literal-NULL) corpus otherwise pays a full
-    cache build (the documented tier-2 price; VERDICT r12 #3). The
-    caller owns the contract that the summary describes the same frames
-    (the bronze ingest writes both in one pass).
+    On the persisted frames, one limit-1 probe per box column decides
+    whether the corpus carries that modality at all, and tasks of an
+    absent modality are dropped before any task work is planned — the
+    reference's per-dataset scheduling (generate_qa.py:110-122). A
+    present modality costs about one cache partition, which the union
+    job then reuses; proving a modality absent over real rows costs a
+    full cache build. With neither modality present the result is an
+    empty frame with the task output's columns plus ``task``. The
+    per-task routing filter (3D tasks need 3D boxes, 2D tasks 2D boxes)
+    always applies and is what makes the pruning output-identical.
+
+    Streaming input skips the persist and the probes (no action is
+    allowed on a stream): every task is a per-row array program with no
+    shuffle, so the same lineages run under readStream in append mode.
     """
     names = tasks or list(TASKS)
-    # Streaming input works UNCHANGED: every task is a zero-shuffle per-row
-    # array program (no groupBy/window/dropDuplicates), so the same
-    # lineages run under readStream in append mode — only the persist is
-    # batch-only. Stream/batch equivalence pinned in test_streaming.
-    if persist and len(names) > 1 and not frames.isStreaming:
+    if len(names) > 1 and not frames.isStreaming:
         from pyspark.storagelevel import StorageLevel
 
-        # The task generators are per-row array programs, so their
-        # parallelism equals the PERSISTED partition count. The session
-        # caps AQE's coalescing floor (minPartitionSize) so a small-byte
-        # but CPU-heavy relation like frames keeps ~core-count partitions
-        # — see session.get_spark; probing/repartitioning here instead
-        # would double-execute the synthesis under AQE (df.rdd runs the
-        # query stages eagerly).
-        # Corpus-level modality precheck — P1 at dataset granularity,
-        # exactly what the reference does before running generators
-        # (generate_qa.py:110-122 only schedules a dataset's task list
-        # when its records carry the needed box modality): a task whose
-        # modality is absent corpus-wide is dropped instead of burning a
-        # full cache scan to produce zero rows. Output-identical by
-        # construction — the per-task routing filter below would have
-        # rejected every row. Measured: the four vacuous 2D branches
-        # cost ~2s of the 10-task union at sf0.1 (round 12).
-        #
-        # HOW the probe runs matters more than that it runs (all three
-        # variants A/B'd at sf10, round 12):
-        # - an eager aggregate over the persisted snapshot force-
-        #   materializes the ENTIRE cache before any task work: 382-660s
-        #   vs 254s for the pipelined cache fill inside the union job;
-        # - a limit-1 probe on the UNPERSISTED lineage still pays the
-        #   synthesis's full shuffle MAP stage (limit only short-
-        #   circuits the result stage), ~400s of un-cached work at sf10.
-        # So the probe is two-tier: (1) Catalyst first — when the
-        # modality column is a literal NULL (this corpus family), the
-        # filtered-limit plan optimizes to an empty LocalRelation and
-        # absence is proven WITHOUT running any job; (2) otherwise a
-        # limit-1 probe on the PERSISTED frames — a present modality
-        # materializes ~one cache partition (which the union job
-        # reuses), and only a real-data absent modality pays the full
-        # cache build, the price of proving a negative over real rows.
-        # Skipped under persist=False (composability) and streaming (no
-        # action allowed); those paths keep the lazy per-task filters.
-        raw = frames
         frames = frames.persist(StorageLevel.MEMORY_AND_DISK)
-
-        # Tier 0: the K2 bronze summary already holds per-corpus box
-        # counters — both proofs become a bounded read of a tiny table.
-        # Prefer the rollup's grand (ALL, ALL) row; else sum the leaves.
-        box_counts: tuple[int, int] | None = None
-        if summary is not None:
-            srows = summary.select(
-                "dataset", "split", "n_boxes_3d", "n_boxes_2d"
-            ).collect()
-            grand = [
-                r for r in srows if r.dataset == "ALL" and r.split == "ALL"
-            ]
-            use = grand or [
-                r for r in srows if r.dataset != "ALL" and r.split != "ALL"
-            ] or srows
-            box_counts = (
-                sum(r.n_boxes_3d or 0 for r in use),
-                sum(r.n_boxes_2d or 0 for r in use),
-            )
-
-        def _has_modality(col: str) -> bool:
-            if box_counts is not None:
-                n3, n2 = box_counts
-                return (n3 if col == "bounding_boxes_3d" else n2) > 0
-            # Tier 1 reaches into py4j internals (_jdf / optimizedPlan),
-            # which do not exist under Spark Connect and may drift across
-            # Spark versions. The probe is a pure optimization, so any
-            # failure here degrades to tier 2 (the limit-1 probe), which
-            # is output-identical — never fail the pipeline over it
-            # (ADVICE r12).
-            try:
-                static = raw.filter(F.size(col) > 0).limit(1)
-                jplan = static._jdf.queryExecution().optimizedPlan()
-                if (
-                    jplan.getClass().getSimpleName() == "LocalRelation"
-                    and jplan.data().isEmpty()
-                ):
-                    return False  # absence proven by constant folding
-            except Exception:
-                pass  # Connect / version drift → fall through to tier 2
-            return bool(
-                frames.filter(F.size(col) > 0).limit(1).take(1)
-            )
-
-        has_3d = _has_modality("bounding_boxes_3d")
-        has_2d = _has_modality("bounding_boxes_2d")
+        has_3d, has_2d = (
+            bool(frames.filter(F.size(col) > 0).limit(1).take(1))
+            for col in ("bounding_boxes_3d", "bounding_boxes_2d")
+        )
         pruned = [
             n for n in names
             if (has_3d if n in TASKS_3D else has_2d)

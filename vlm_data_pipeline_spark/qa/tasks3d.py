@@ -520,18 +520,16 @@ def obj_obj_distance(
 
 
 def obj_obj_rel_pos(
-    frames: DataFrame,
-    require_extrinsics: bool = True,
-    max_boxes: int | None = None,
+    frames: DataFrame, max_boxes: int | None = None
 ) -> DataFrame:
     """Center-diff spatial relation per pair; one aspect chosen by a
     hash-seeded draw among the non-'Same' aspects
     (tasks_3d/obj_obj_rel_pos_qa.py:55-140, geometry.py:424-495).
     ``max_boxes`` bounds the per-frame pair expansion (see _box_pairs);
     default None = exact reference parity."""
-    pairs = _box_pairs(frames, max_boxes=max_boxes)
-    if require_extrinsics:
-        pairs = pairs.filter(G.uses_extrinsics(F.col("camera")))
+    pairs = _box_pairs(frames, max_boxes=max_boxes).filter(
+        G.uses_extrinsics(F.col("camera"))
+    )
     rel = pairs.withColumn(
         "rels", G.center_diff_relations(F.col("box_a"), F.col("box_b"))
     )

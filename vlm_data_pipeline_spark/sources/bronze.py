@@ -28,7 +28,6 @@ def write_bucketed(
     bucket_cols: list[str],
     n_buckets: int = 64,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` as a bucketed (and optionally sorted) catalog table.
 
@@ -36,7 +35,7 @@ def write_bucketed(
     operators over the same key (the layout pre-pays it).
     """
     writer = (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, *bucket_cols)
     )

@@ -40,7 +40,7 @@ def read_frames(
     return df
 
 
-def write_frames(frames: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_frames(frames: DataFrame, path: str) -> None:
     """K1: snapshot write partitioned by (dataset, split).
 
     The reference writes one JSON file per image inside dataset/split dirs;
@@ -48,7 +48,7 @@ def write_frames(frames: DataFrame, path: str, mode: str = "overwrite") -> None:
     same logical layout (dataset=/split= directories) with Spark-sized
     files inside. Parquet is the bronze default; .json(path) drop-in works
     where downstream tooling needs raw JSON."""
-    frames.write.mode(mode).partitionBy("dataset", "split").parquet(path)
+    frames.write.mode("overwrite").partitionBy("dataset", "split").parquet(path)
 
 
 def dataset_summary(frames: DataFrame) -> DataFrame:

@@ -35,7 +35,7 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -80,27 +80,6 @@ IMAGE_FEATURES = T.StructType(
 )
 
 Decoder = Callable[[str, bytes], dict[str, Any]]
-
-
-def read_media_assets(
-    spark: SparkSession, pattern: str, modality: str, glob: str = "*"
-) -> DataFrame:
-    """Binary files → canonical MEDIA_ASSET rows (payload + empty metadata;
-    a decode/probe pass fills ``meta``). binaryFile splits per file, so one
-    huge asset never straddles tasks."""
-    binary = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(pattern)
-    )
-    return binary.select(
-        F.col("path").alias("asset_id"),
-        F.lit(modality).alias("modality"),
-        F.col("content").alias("payload"),
-        F.col("length").alias("n_bytes"),
-        F.lit(None).cast(MEDIA_META).alias("meta"),
-    )
 
 
 def binary_stats(assets: DataFrame) -> DataFrame:
