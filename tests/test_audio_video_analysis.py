@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from vlm_data_pipeline_spark.functions import audio as A
 from vlm_data_pipeline_spark.sources.multimodal import (
     scene_cuts,
+    video_frame_hashes,
     video_frame_luma,
 )
 from vlm_data_pipeline_spark.sources.wav_codec import decode_wav, encode_wav
@@ -116,6 +117,19 @@ def test_real_y4m_scene_cut_end_to_end(spark):
     assert len(cuts) == 1
     assert (cuts[0]["asset_id"], cuts[0]["cut_at"]) == ("vidA", 4)
     assert cuts[0]["delta"] == (120 + 4 % 3) - (20 + 3 % 3)
+
+
+def test_empty_video_payload_is_corrupt_data(spark):
+    """Both per-frame video stages report an empty payload as corrupt
+    data (ValueError), not as a missing codec."""
+    from pyspark.errors import PythonException
+
+    assets = spark.createDataFrame(
+        [("empty", bytearray())], "asset_id string, payload binary"
+    )
+    for stage in (video_frame_luma, video_frame_hashes):
+        with pytest.raises(PythonException, match="ValueError: empty video"):
+            stage(assets).collect()
 
 
 def test_scene_cuts_stride_and_threshold(spark):

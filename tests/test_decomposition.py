@@ -102,31 +102,40 @@ def test_pca_fit_validation(spark):
         pca_fit(empty)
 
 
-def test_pca_fit_rejects_mixed_dimensions(spark):
+def test_pca_fit_rejects_mixed_dimensions(spark, monkeypatch):
     """Per-row size() drives the triangle indexing, so mixed vector
-    lengths would silently collide scatter slots — refuse loudly."""
+    lengths would silently collide scatter slots — refuse loudly, on
+    both paths (the threshold is lowered to force the gram path)."""
+    from vlm_data_pipeline_spark.operators import decomposition as dc
+
     df = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [1.0, 2.0, 3.0]), (3, [4.0, 5.0])],
         "vec_id long, embedding array<float>",
     )
     with pytest.raises(ValueError, match="inconsistent"):
         pca_fit(df)
+    monkeypatch.setattr(dc, "GRAM_PATH_MIN_D", 2)
     with pytest.raises(ValueError, match="inconsistent"):
-        pca_fit(df, method="gram")
+        pca_fit(df)
 
 
-def test_pca_gram_path_equals_inrow(spark):
+def test_pca_gram_path_equals_inrow(spark, monkeypatch):
     """Path-equality pin (the score_corpus dual-path contract): the
     Arrow partial-Gram fit must agree with the interpreted in-row fit.
     NOT bit-exact by design — BLAS accumulates in a different order
     than Spark's per-slot double sums — so the pin is a documented
     tolerance: covariance-level quantities to rtol 1e-9, eigenvectors
-    to atol 1e-7 (well below any downstream quantization)."""
+    to atol 1e-7 (well below any downstream quantization). Each path is
+    forced through the GRAM_PATH_MIN_D threshold."""
+    from vlm_data_pipeline_spark.operators import decomposition as dc
+
     rng = np.random.RandomState(7)
     base = rng.randn(300, 24) @ np.diag(np.linspace(4.0, 0.1, 24))
     df = _df(spark, base).repartition(8)  # multiple tasks -> real merge
-    m_in = pca_fit(df, k=5, method="inrow")
-    m_gr = pca_fit(df, k=5, method="gram")
+    monkeypatch.setattr(dc, "GRAM_PATH_MIN_D", 25)
+    m_in = pca_fit(df, k=5)
+    monkeypatch.setattr(dc, "GRAM_PATH_MIN_D", 24)
+    m_gr = pca_fit(df, k=5)
     assert m_in.n == m_gr.n == 300
     np.testing.assert_allclose(m_gr.mean, m_in.mean, rtol=0, atol=1e-10)
     np.testing.assert_allclose(
@@ -138,17 +147,17 @@ def test_pca_gram_path_equals_inrow(spark):
 
 
 def test_pca_auto_method_switches_on_dimension(spark, monkeypatch):
-    """auto picks gram at d >= GRAM_PATH_MIN_D (probe one row) and
+    """pca_fit picks gram at d >= GRAM_PATH_MIN_D (probe one row) and
     inrow below; both produce a working model."""
     from vlm_data_pipeline_spark.operators import decomposition as dc
 
     rng = np.random.RandomState(9)
     small = _df(spark, rng.randn(40, 4))
-    # threshold lowered so the auto probe flips to gram on d=4
+    # threshold lowered so the probe flips to gram on d=4
     monkeypatch.setattr(dc, "GRAM_PATH_MIN_D", 4)
-    m_gram = dc.pca_fit(small, k=2)  # auto -> gram
+    m_gram = dc.pca_fit(small, k=2)  # probe -> gram
     monkeypatch.setattr(dc, "GRAM_PATH_MIN_D", 128)
-    m_inrow = dc.pca_fit(small, k=2)  # auto -> inrow
+    m_inrow = dc.pca_fit(small, k=2)  # probe -> inrow
     np.testing.assert_allclose(
         m_gram.components, m_inrow.components, rtol=0, atol=1e-7
     )
@@ -163,7 +172,7 @@ def test_pca_gram_path_scales_to_production_dims(spark):
     rng = np.random.RandomState(11)
     base = rng.randn(5000, 256).astype(np.float32).astype(np.float64)
     df = _df(spark, base).repartition(16)
-    model = pca_fit(df, k=3)  # auto -> gram at d=256
+    model = pca_fit(df, k=3)  # probe -> gram at d=256
     mean, comps, vals = _numpy_pca(base, 3)
     np.testing.assert_allclose(model.mean, mean, rtol=0, atol=1e-8)
     np.testing.assert_allclose(model.explained_variance, vals, rtol=1e-8)

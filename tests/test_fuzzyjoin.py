@@ -1,7 +1,8 @@
-"""Edit-distance join: blocking completeness vs the brute-force witness
-and vs an independent pure-Python Levenshtein, including adversarial
-strings straddling every blocking boundary (short/long cut, prefix cut,
-empty strings, duplicate grams)."""
+"""Edit-distance join: segment-blocking completeness vs the brute-force
+witness and vs an independent pure-Python Levenshtein, including
+adversarial strings straddling every blocking boundary (the tau+1
+short/long cut, empty strings, repeated characters, edits in the first,
+middle and last segment) and kilobyte strings on hashed segment keys."""
 
 from __future__ import annotations
 
@@ -13,7 +14,6 @@ from pyspark.sql import functions as F
 from vlm_data_pipeline_spark.operators.fuzzyjoin import (
     edit_distance_join,
     edit_distance_join_brute,
-    gram_prefix,
 )
 
 
@@ -43,37 +43,38 @@ def ground_truth(strings: list[str], tau: int) -> set[tuple[int, int, int]]:
     return out
 
 
-def run_join(spark, strings, tau, q=3, method="segment"):
+JOINS = {"segment": edit_distance_join, "brute": edit_distance_join_brute}
+
+
+def run_join(spark, strings, tau, method="segment"):
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(strings)], "id INT, s STRING"
     )
-    got = {
+    return {
         (r.id_a, r.id_b, r.dist)
-        for r in edit_distance_join(
-            df, "id", "s", tau, q=q, method=method
-        ).collect()
+        for r in JOINS[method](df, "id", "s", tau).collect()
     }
-    return got
 
 
 CASES = [
-    # exact dup, 1-edit, 2-edit around a 9-char short cut (q=3, tau=2)
+    # exact dup, 1-edit, 2-edit in different segments
     ["abcdefgh", "abcdefgh", "abcdefgX", "abcdefXY", "abXdefgh"],
-    # empty + near-empty strings (fallback path, zero-gram strings)
+    # empty + near-empty strings (short-short fallback at every tau)
     ["", "", "a", "ab", "abc", "xyz", "ax"],
-    # short vs long straddling the cut: len 8 (short) vs len 10 (long)
+    # length band: len 8 vs len 10 pairs only at tau = 2
     ["abcdefgh", "abcdefghij", "abcdefghXY", "zzzzzzzzzz"],
-    # repeated grams — occurrence-rank bag encoding must not collapse
+    # repeated characters — segments of one string share keys
     ["aaaaaaaaaaaa", "aaaaaaaaaaa", "aaaaaaaaaaab", "abababababab"],
-    # long strings differing only past the prefix cut
+    # long strings edited only in the last segment
     ["0123456789abcdefgh", "0123456789abcdefgX", "0123456789abcdeXgh"],
 ]
 
 
-@pytest.mark.parametrize("method", ["segment", "prefix"])
+@pytest.mark.parametrize("method", JOINS)
 @pytest.mark.parametrize("strings", CASES, ids=range(len(CASES)))
 @pytest.mark.parametrize("tau", [0, 1, 2])
 def test_matches_ground_truth(spark, strings, tau, method):
+    """The blocked join and its brute witness both equal the DP."""
     got = run_join(spark, strings, tau, method=method)
     assert got == ground_truth(strings, tau)
 
@@ -88,14 +89,11 @@ def test_matches_brute_force_path(spark):
         for r in edit_distance_join_brute(df, "id", "s", 2).collect()
     }
     assert brute == ground_truth(strings, 2)
-    for method in ("segment", "prefix"):
-        fast = {
-            (r.id_a, r.id_b, r.dist)
-            for r in edit_distance_join(
-                df, "id", "s", 2, method=method
-            ).collect()
-        }
-        assert fast == brute, method
+    fast = {
+        (r.id_a, r.id_b, r.dist)
+        for r in edit_distance_join(df, "id", "s", 2).collect()
+    }
+    assert fast == brute
 
 
 @settings(max_examples=20, deadline=None)
@@ -109,46 +107,9 @@ def test_matches_brute_force_path(spark):
 )
 def test_hypothesis_small_alphabet(spark, strings, tau):
     """Tiny alphabet maximizes collisions and near-misses; lengths span
-    both sides of every short cut (tau+1 for segments; q*(tau+1)=9..12
-    for the prefix path at q=3). Both generators must equal the
+    both sides of the tau+1 short cut. The join must equal the
     independent DP ground truth."""
-    truth = ground_truth(strings, tau)
-    assert run_join(spark, strings, tau, method="segment") == truth
-    assert run_join(spark, strings, tau, method="prefix") == truth
-
-
-def test_gram_prefix_is_frequency_ordered_bag_prefix(spark):
-    """The prefix must be the first q*tau+1 bag elements in the global
-    (corpus gram frequency ASC, gram, occurrence) order — rare grams
-    first — with correct occurrence ranks."""
-    strings = ["abcabcabc", "xyzabcfff"]
-    q, prefix_n = 3, 4
-    df = spark.createDataFrame(
-        [(i, t, len(t)) for i, t in enumerate(strings)],
-        "id INT, s STRING, len INT",
-    )
-    got = {
-        (r.id, r.g, r.occ)
-        for r in gram_prefix(df, q, prefix_n).collect()
-    }
-    # independent reconstruction
-    from collections import Counter
-
-    all_grams = [
-        s[i : i + q] for s in strings for i in range(len(s) - q + 1)
-    ]
-    freq = Counter(all_grams)
-    expected = set()
-    for sid, s in enumerate(strings):
-        grams = [s[i : i + q] for i in range(len(s) - q + 1)]
-        seen: dict[str, int] = {}
-        bag = []
-        for g in grams:
-            bag.append((freq[g], g, seen.get(g, 0)))
-            seen[g] = seen.get(g, 0) + 1
-        for _f, g, occ in sorted(bag)[:prefix_n]:
-            expected.add((sid, g, occ))
-    assert got == expected
+    assert run_join(spark, strings, tau) == ground_truth(strings, tau)
 
 
 def test_null_strings_never_match(spark):
@@ -156,24 +117,17 @@ def test_null_strings_never_match(spark):
         [(0, "abcdefghij"), (1, None), (2, "abcdefghij")],
         "id INT, s STRING",
     )
-    for method in ("segment", "prefix"):
-        got = {
-            (r.id_a, r.id_b, r.dist)
-            for r in edit_distance_join(
-                df, "id", "s", 2, method=method
-            ).collect()
-        }
-        assert got == {(0, 2, 0)}, method
+    got = {
+        (r.id_a, r.id_b, r.dist)
+        for r in edit_distance_join(df, "id", "s", 2).collect()
+    }
+    assert got == {(0, 2, 0)}
 
 
 def test_bad_params_raise(spark):
     df = spark.createDataFrame([(0, "x")], "id INT, s STRING")
     with pytest.raises(ValueError):
         edit_distance_join(df, "id", "s", -1)
-    with pytest.raises(ValueError):
-        edit_distance_join(df, "id", "s", 2, q=0)
-    with pytest.raises(ValueError):
-        edit_distance_join(df, "id", "s", 2, method="bogus")
 
 
 @settings(max_examples=10, deadline=None)
@@ -190,17 +144,15 @@ def test_hypothesis_unicode_codepoints(spark, strings, tau):
     CODEPOINT-based (incl. astral-plane emoji), so segment boundaries
     must never split a character and distances must match a Python
     codepoint DP."""
-    truth = ground_truth(strings, tau)
-    assert run_join(spark, strings, tau, method="segment") == truth
-    assert run_join(spark, strings, tau, method="prefix") == truth
+    assert run_join(spark, strings, tau) == ground_truth(strings, tau)
 
 
 def test_long_strings_hashed_keys_match_brute(spark):
     """Kilobyte-scale strings (VERDICT r8 #2): hashed segment keys must
-    return the exact pair set of both the raw-key mode and the brute
-    witness — hash-equality is implied by string-equality, so blocking
-    stays complete, and the levenshtein verify removes any collision-
-    born false candidate. Also pins multibyte content at length ~1KB."""
+    return the exact pair set of the brute witness — hash-equality is
+    implied by string-equality, so blocking stays complete, and the
+    levenshtein verify removes any collision-born false candidate. Also
+    pins multibyte content at length ~1KB."""
     import random
     import string as _string
 
@@ -233,23 +185,20 @@ def test_long_strings_hashed_keys_match_brute(spark):
         for r in edit_distance_join_brute(df, "id", "s", 2).collect()
     }
     assert brute  # non-vacuous: the mutated siblings must pair up
-    for hk in (True, False):
-        got = {
-            (r.id_a, r.id_b, r.dist)
-            for r in edit_distance_join(
-                df, "id", "s", 2, hash_segment_keys=hk
-            ).collect()
-        }
-        assert got == brute, f"hash_segment_keys={hk}"
+    got = {
+        (r.id_a, r.id_b, r.dist)
+        for r in edit_distance_join(df, "id", "s", 2).collect()
+    }
+    assert got == brute
 
 
 def test_blocking_join_is_never_broadcast(spark):
-    """The blocking equi-join must plan shuffle-side (SortMergeJoin)
-    in BOTH candidate generators, however small the input estimate.
+    """The blocking equi-join must plan shuffle-side (SortMergeJoin),
+    however small the input estimate.
 
     Regression for the sf10 (factor-100) scale finding: size estimates
-    propagate a corpus parquet's COMPRESSED bytes through the segment/
-    gram explode, so the static planner broadcast a 22M-row probe side
+    propagate a corpus parquet's COMPRESSED bytes through the segment
+    explode, so the static planner broadcast a 22M-row probe side
     whose hashed relation materialized at 3.3 GiB — and with every join
     broadcast, candidate generation + verify collapsed into the scan
     stage's file splits (no shuffle boundary → no AQE rebalance, no
@@ -264,13 +213,12 @@ def test_blocking_join_is_never_broadcast(spark):
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        for method in ("segment", "prefix"):
-            plan = (
-                edit_distance_join(df, "id", "s", 2, method=method)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            assert "SortMergeJoin" in plan, method
+        plan = (
+            edit_distance_join(df, "id", "s", 2)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert "SortMergeJoin" in plan
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)

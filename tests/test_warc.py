@@ -130,6 +130,14 @@ def test_read_warc_scan_and_skip_policy(spark, tmp_path):
     assert df.count() == 4
 
 
+def test_read_warc_rejects_bad_on_error_at_call(spark, tmp_path):
+    """An unknown policy fails when read_warc is called, on the driver
+    — no action runs here, so the error cannot come from a worker."""
+    (tmp_path / "seg.warc").write_bytes(RESP2)
+    with pytest.raises(ValueError, match="on_error"):
+        read_warc(spark, str(tmp_path), on_error="explode")
+
+
 def test_streaming_splitter_bounds_batches():
     """Round-6 verdict #4: the splitter must yield MULTIPLE bounded
     frames under a small cap — never one segment-sized materialization

@@ -65,7 +65,7 @@ def _tri_index_pairs(d: int) -> list[tuple[int, int]]:
 
 
 # dimension at which pca_fit switches from the interpreted in-row
-# expansion to the Arrow/BLAS partial-Gram path (``method="auto"``).
+# expansion to the Arrow/BLAS partial-Gram path (probed on the first row).
 # Below this the in-row path's O(d²) interpreted products per row are
 # cheap and its deterministic addition grouping keeps oracle parity;
 # above it the per-row interpreter cost dominates the job.
@@ -241,26 +241,20 @@ def pca_fit(
     embeddings: DataFrame,
     vec_col: str = "embedding",
     k: int = 8,
-    method: str = "auto",
 ) -> PCAModel:
     """Fit PCA: one distributed moment aggregation (see the module
     docstring for the two physical paths) + driver numpy eigh of the
-    d×d covariance. ``method``: ``"auto"`` probes the first row's
-    dimension and picks ``"gram"`` (Arrow/BLAS) at
-    d ≥ GRAM_PATH_MIN_D, else ``"inrow"``; both are explicit for
-    tests/path-equality pins. ``k`` caps at d."""
+    d×d covariance. The first row's dimension picks the path: the
+    Arrow/BLAS partial-Gram path at d ≥ GRAM_PATH_MIN_D, else the
+    in-row path. ``k`` caps at d."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if method not in ("auto", "inrow", "gram"):
-        raise ValueError(f"unknown pca_fit method {method!r}")
     v = F.col(vec_col)
     base = embeddings.filter(v.isNotNull())
-    if method == "auto":
-        probe = base.select(F.size(v).alias("d")).first()
-        if probe is None:
-            raise ValueError("no embeddings to fit")
-        method = "gram" if int(probe["d"]) >= GRAM_PATH_MIN_D else "inrow"
-    if method == "gram":
+    probe = base.select(F.size(v).alias("d")).first()
+    if probe is None:
+        raise ValueError("no embeddings to fit")
+    if int(probe["d"]) >= GRAM_PATH_MIN_D:
         sums, n = _moments_gram(base, vec_col)
         m = len(sums)
     else:

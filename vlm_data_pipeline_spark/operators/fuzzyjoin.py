@@ -6,12 +6,9 @@ near-identical titles, URLs, product names, or document prefixes across
 shards of a 100 TB corpus, where an exact-key join silently drops every
 pair that differs by a typo.
 
-Design (Spark-first, COMPLETE — zero false negatives, proven bounds).
-Two interchangeable candidate generators, both exact; the segment path
-is the default because its selectivity does not depend on the gram
-distribution:
+Design (Spark-first, COMPLETE — zero false negatives, proven bounds):
 
-0. **Segment blocking (PassJoin-style pigeonhole, the default).**
+0. **Segment blocking (PassJoin-style pigeonhole).**
    Partition every string into ``tau + 1`` contiguous segments (fixed
    deterministic rule: ``len % (tau+1)`` trailing segments get the extra
    char). If ``ed(a, b) <= tau``, fix an optimal edit transcript: at
@@ -24,53 +21,25 @@ distribution:
    ``<= 2*tau+1`` substrings ``(L, slot, substring(b, p, seg_len))``
    with ``|p - p_slot(L)| <= tau``; candidates are the (L, slot, text)
    equi-join. Keys are ~``len/(tau+1)``-char strings — selective even
-   on adversarial tiny-vocabulary corpora where every 3-gram is hot
-   (measured, sf0.1 synthetic word salad, 5000 strings: 3-gram prefix
-   blocking yields 3.6M candidates; segments yield ~thousands).
+   on adversarial tiny-vocabulary corpora where every 3-gram is hot,
+   which is why segments and not q-grams are the blocking unit
+   (measured, sf0.1 synthetic word salad, 5000 strings: frequency-
+   ordered 3-gram prefix blocking yields 3.6M candidates; segments
+   yield ~thousands).
    Explode factors: ``tau+1`` rows/string on the index side,
    ``<= (2tau+1)^2 (tau+1)`` on the probe side — constants in ``tau``,
    independent of corpus size or skew.
-1. **q-gram prefix-filter blocking, rarest-gram-first**
-   (``method="prefix"``). Encode each
-   string's q-gram *bag* as (gram, occurrence-rank) pairs — bag
-   intersection equals set intersection under that encoding. The classic
-   count bound (each edit destroys at most q grams; a string of length L
-   has L-q+1 grams): if ``ed(a, b) <= tau`` then the bags share at least
-   ``T = max(L_a, L_b) - q + 1 - q*tau`` elements. Whenever ``T >= 1``
-   the *prefix filter* applies: under ANY fixed global total order on
-   elements, two bags overlapping in >= T elements must share one of
-   their first ``n - T + 1`` elements — which is at most ``q*tau + 1``
-   per string (n = own gram count <= max-side gram count). So exploding
-   only the first ``q*tau + 1`` (gram, occ) elements per string and
-   equi-joining on (gram, occ) generates a candidate superset under ANY
-   order — but the CHOICE of order is the whole performance game on
-   Zipfian gram distributions (the EDJoin insight). The order here is
-   (global gram frequency ASC, gram, occ): a string's prefix prefers its
-   RAREST grams, so a corpus-hot gram enters a prefix only when the
-   string's other grams are hotter still. Measured on the sf0.1
-   synthetic word-salad corpus (adversarially tiny vocabulary): hash
-   order put one gram in 2175/5000 prefixes → 6.96M candidate pairs;
-   frequency order cuts the hottest bucket 3x (2175 → 740) and 3.6M
-   candidates remain — tiny-vocab corpora defeat ANY gram-granular
-   blocking, which is exactly why the segment path is the default.
-   The frequency table is one map-side-combined agg over corpus grams
-   (vocab-bounded: |charset|^q) broadcast back — the standard EDJoin
-   preprocessing pass.
-2. **Length band.** ``|L_a - L_b| <= tau`` is necessary for
+1. **Length band.** ``|L_a - L_b| <= tau`` is necessary for
    ``ed <= tau``; applied inside the join condition.
-3. **Short-string fallback.** The segment path needs
-   ``max(L_a, L_b) >= tau+1`` (non-empty segments); the prefix path's
-   count bound needs ``max(L_a, L_b) >= q*(tau+1)``. Pairs where BOTH
-   strings are below the active method's cut
-   go through an explicit length-banded equi-join (each short string
-   emits its admissible partner lengths ``L-tau .. L`` as join keys — an
-   equi-join, not a cartesian). Mixed short/long pairs are covered by
-   the gram path: the length band forces the short side to
-   ``L >= q*(tau+1) - tau >= q``, so it has grams. The two paths are
-   made disjoint by restricting the gram path to
-   ``greatest(L_a, L_b) >= q*(tau+1)``.
-4. **Verify JVM-side, dedup AFTER verify.** Candidates (ids only —
-   text never rides the gram explosion) join back to the strings and
+2. **Short-string fallback.** Segment blocking needs
+   ``max(L_a, L_b) >= tau+1`` (non-empty segments). Pairs where BOTH
+   strings are shorter than ``tau + 1`` go through an explicit
+   length-banded equi-join: each short string emits its admissible
+   partner lengths ``len-tau .. len+tau`` (floored at 0) as join keys
+   and the partner matches on its own exact length — an equi-join, not
+   a cartesian.
+3. **Verify JVM-side, dedup AFTER verify.** Candidates (ids only —
+   text never rides the segment explosion) join back to the strings and
    are verified with the built-in ``levenshtein(a, b, tau)`` —
    whole-stage-codegen'd, banded early-exit at the threshold, no UDF
    anywhere in the operator. The (id_a, id_b) DISTINCT runs on the
@@ -82,76 +51,24 @@ distribution:
    stalled in multi-minute spill while verify-first streams), whereas
    duplicate verifications are just extra early-exit DP calls.
 
-Scale notes (100 TB): segment join keys are ~``len/(tau+1)`` characters,
-which is fine at short keys (11 chars for 32-char prefixes) but grows
-LINEARLY with string length — at document scale the probe side would
-ship up to ``(2tau+1)^2(tau+1)`` multi-hundred-byte substrings per row.
-The blocking equi-join therefore runs on ``xxhash64(segment)`` by
-default (``hash_segment_keys``): string-equality implies hash-equality,
-so candidates stay a complete superset and the levenshtein verify
-absorbs the (cosmically rare) 64-bit collision. Measured at 1.5 KB
-strings, tau=2: raw keys average 516 B across <= 75 probe rows/string
-(~39 KB/string riding the shuffle); hashed keys are 8 B flat
-(~0.6 KB/string) — a 65x key-byte cut, with the raw and hashed modes
-returning identical pair sets vs the brute witness on the same corpus
-(tests/test_fuzzyjoin long-string fuzz). The prefix path's exploded
-blocking table is <= q*tau+1 rows per
-string (7 for q=3, tau=2) carrying only (gram, occ, id, len) — a few
-dozen bytes/row; the verify join ships each string exactly twice. Gram
-hot keys are starved out of prefixes by the frequency order (above);
-residual skew is AQE skew-join territory. Prefix selection costs one
-exchange on the string id (two in-partition sorts share it: (g, idx)
-for occurrence ranks, (df, g, occ) for the prefix rank) plus the tiny
-broadcast frequency agg — all JVM-side, no UDF anywhere.
+Scale notes (100 TB): segments are ~``len/(tau+1)`` characters, which
+grows LINEARLY with string length — at document scale the probe side
+would ship up to ``(2tau+1)^2(tau+1)`` multi-hundred-byte substrings
+per row. The blocking equi-join therefore runs on ``xxhash64(segment)``:
+string-equality implies hash-equality, so candidates stay a complete
+superset and the levenshtein verify absorbs the (cosmically rare)
+64-bit collision. Measured at 1.5 KB strings, tau=2: raw keys average
+516 B across <= 75 probe rows/string (~39 KB/string riding the
+shuffle); hashed keys are 8 B flat (~0.6 KB/string) — a 65x key-byte
+cut. The verify join ships each string exactly twice.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["edit_distance_join", "edit_distance_join_brute", "gram_prefix"]
-
-
-def gram_prefix(
-    strs: DataFrame, q: int, prefix_n: int
-) -> DataFrame:
-    """(id, len, g, occ) rows: the first ``prefix_n`` elements of each
-    string's q-gram bag in the global (corpus gram frequency ASC, gram,
-    occurrence) order.
-
-    One exchange on the string id; the two window sorts share it
-    ((g, idx) yields occurrence ranks, (df, g, occ) the prefix rank —
-    both partitioned by id, so the second window reuses the first's
-    partitioning). The corpus frequency table is a map-side-combined
-    agg joined back with no explicit broadcast hint — it is
-    vocab-bounded (at most |charset|^q distinct grams), so the planner
-    broadcasts it when small and falls back to a shuffle join on
-    Unicode-scale vocabularies. Caller guarantees ``len >= q`` rows
-    only.
-    """
-    n = F.col("len") - q + 1
-    grams = F.transform(
-        F.sequence(F.lit(1), n), lambda i: F.substring(F.col("s"), i, q)
-    )
-    toks = strs.select(
-        "id", "len", F.posexplode(grams).alias("idx", "g")
-    )
-    freq = toks.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    # No forced broadcast hint: the gram-frequency table is
-    # |charset|^q-bounded, which an ASCII corpus keeps tiny but a
-    # Unicode-heavy corpus at 100 TB can push past driver/broadcast
-    # limits. Let the planner pick (autoBroadcastJoinThreshold / AQE
-    # runtime conversion broadcasts it whenever it actually is small).
-    toks = toks.join(freq, "g")
-    w_occ = Window.partitionBy("id", "g").orderBy("idx")
-    w_rank = Window.partitionBy("id").orderBy("df", "g", "occ")
-    return (
-        toks.withColumn("occ", F.row_number().over(w_occ) - 1)
-        .withColumn("rk", F.row_number().over(w_rank))
-        .filter(F.col("rk") <= prefix_n)
-        .select("id", "len", "g", "occ")
-    )
+__all__ = ["edit_distance_join", "edit_distance_join_brute"]
 
 
 def _seg_bounds(length, tau: int):
@@ -175,30 +92,19 @@ def _seg_bounds(length, tau: int):
     )
 
 
-def _segment_candidates(
-    base: DataFrame, tau: int, hash_keys: bool = True
-) -> DataFrame:
+def _segment_candidates(base: DataFrame, tau: int) -> DataFrame:
     """PassJoin-style candidate pairs (id_a, id_b), complete for pairs
     with ``greatest(len_a, len_b) >= tau + 1`` (module docstring item 0).
 
     Both sides cut their join-key substrings IN-ROW (nested transform +
     flatten) before the single explode, so the full string never rides
-    the fan-out — only (id, len, plen, slot, seg) rows shuffle, with
-    ``seg`` ~ ``len/(tau+1)`` chars.
-
-    ``hash_keys`` (default): the equi-join runs on ``xxhash64(seg)``
-    instead of the raw substring, capping the shuffled key at 8 bytes
-    regardless of string length. String-equality implies hash-equality,
-    so the candidate set is a SUPERSET of the raw-key set (complete
-    either way); the rare 64-bit collision adds a false candidate that
-    the levenshtein verify removes — correctness is unaffected, which
-    the long-string fuzz in tests/test_fuzzyjoin pins against the brute
-    witness. Raw-key mode remains for debugging (human-readable keys)."""
+    the fan-out — only (id, len, plen, slot, key) rows shuffle. The key
+    is ``xxhash64(seg)``, 8 bytes regardless of string length: a rare
+    64-bit collision adds a false candidate that the levenshtein verify
+    removes, which the long-string fuzz in tests/test_fuzzyjoin pins
+    against the brute witness."""
     k = tau + 1
     s_col, len_col = F.col("s"), F.col("len")
-
-    def _key(seg: Column) -> Column:
-        return F.xxhash64(seg) if hash_keys else seg
 
     # INDEX: each string's own tau+1 segments, keyed (own_len, slot, seg)
     idx_rows = F.transform(
@@ -213,7 +119,7 @@ def _segment_candidates(
         F.col("len").alias("len_i"),
         F.explode(idx_rows).alias("e"),
     ).select("id_i", "len_i", F.col("e.slot").alias("slot"),
-             _key(F.col("e.seg")).alias("seg"))
+             F.xxhash64(F.col("e.seg")).alias("seg"))
 
     # PROBE: for each admissible partner length L >= k within +-tau, each
     # slot's window of substrings shifted by at most tau — all in-row
@@ -251,7 +157,7 @@ def _segment_candidates(
         F.explode(probe_rows).alias("e"),
     ).select("id_p", F.col("e.plen").alias("plen"),
              F.col("e.slot").alias("pslot"),
-             _key(F.col("e.seg")).alias("pseg"))
+             F.xxhash64(F.col("e.seg")).alias("pseg"))
 
     # NO .distinct() here — candidates flow to the verify stage raw
     # (possibly duplicated across slots/shifts). Deduplicating BEFORE
@@ -320,67 +226,24 @@ def _verify(cand: DataFrame, base: DataFrame, tau: int) -> DataFrame:
 
 
 def edit_distance_join(
-    df: DataFrame,
-    id_col: str,
-    str_col: str,
-    tau: int,
-    q: int = 3,
-    method: str = "segment",
-    hash_segment_keys: bool = True,
+    df: DataFrame, id_col: str, str_col: str, tau: int
 ) -> DataFrame:
     """All pairs ``(id_a, id_b, dist)`` with ``id_a < id_b`` and
     ``levenshtein(s_a, s_b) = dist <= tau``. Exact (no false negatives,
-    verify removes false positives) under BOTH candidate generators —
-    ``method="segment"`` (PassJoin pigeonhole, the default) and
-    ``method="prefix"`` (frequency-ordered q-gram prefix filter; ``q``
-    applies only here). See the module docstring for the proofs.
-    NULL strings never match (SQL NULL semantics).
-
-    ``hash_segment_keys`` (segment method only, default on): join the
-    blocking stage on ``xxhash64(segment)`` instead of the raw
-    substring — see :func:`_segment_candidates` and module docstring
-    scale notes. Turn off only for debugging (human-readable keys)."""
-    if tau < 0 or q < 1:
-        raise ValueError(f"need tau >= 0 and q >= 1, got tau={tau}, q={q}")
-    if method not in ("segment", "prefix"):
-        raise ValueError(f"unknown method {method!r}")
+    verify removes false positives) — see the module docstring for the
+    proofs. NULL strings never match (SQL NULL semantics)."""
+    if tau < 0:
+        raise ValueError(f"need tau >= 0, got tau={tau}")
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(str_col).alias("s"),
         F.length(str_col).alias("len"),
     ).filter(F.col("s").isNotNull())
 
-    if method == "segment":
-        short_cut = tau + 1
-        cand_long = _segment_candidates(base, tau, hash_segment_keys)
-    else:
-        short_cut = q * (tau + 1)
-        prefix_n = q * tau + 1
-        grams = gram_prefix(base.filter(F.col("len") >= q), q, prefix_n)
-        ga = grams.select(
-            F.col("id").alias("id_a"), F.col("len").alias("la"), "g", "occ"
-        )
-        gb = grams.select(
-            F.col("id").alias("id_b"), F.col("len").alias("lb"), "g", "occ"
-        )
-        cand_long = (
-            # same corpus-scale-both-sides argument as the segment
-            # path's blocking join (see _segment_candidates): never
-            # broadcast an exploded blocking table off a compressed-
-            # parquet size estimate
-            ga.hint("merge").join(gb, ["g", "occ"])
-            .filter(
-                (F.col("id_a") < F.col("id_b"))
-                & (F.abs(F.col("la") - F.col("lb")) <= tau)
-                & (F.greatest("la", "lb") >= short_cut)
-            )
-            # raw (possibly duplicated) pairs: dedup happens after the
-            # verify, on survivors — see _segment_candidates
-            .select("id_a", "id_b")
-        )
+    cand_long = _segment_candidates(base, tau)
 
-    # -- short-short fallback: both sides below the count-bound floor --
-    shorts = base.filter(F.col("len") < short_cut)
+    # -- short-short fallback: both sides too short for tau+1 segments --
+    shorts = base.filter(F.col("len") < tau + 1)
     # each short string emits every admissible partner length len±tau as
     # an equi-join key; the partner matches on its own exact length, so
     # each pair surfaces exactly once (no distinct needed)

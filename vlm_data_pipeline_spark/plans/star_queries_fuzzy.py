@@ -35,13 +35,13 @@ from .registry import load_tables, register
     "tau+1 contiguous segments (~len/(tau+1)-char equality keys, cut "
     "in-row before the explode, shift window <= tau), selective even "
     "on this adversarial tiny-vocabulary corpus where gram-granular "
-    "blocking floods (measured: 27K candidates vs 3.6M for the "
-    "frequency-ordered q-gram prefix sibling, method='prefix') — then "
+    "blocking floods (measured: 27K candidates vs 3.6M for "
+    "frequency-ordered q-gram prefix blocking) — then "
     "JVM-side levenshtein(a, b, tau) verification (banded early-exit, "
     "codegen, no UDF anywhere). The oracle is the unblocked quadratic "
     "ground-truth join, so a single false negative from the blocking "
     "is a hash mismatch. Library: operators.fuzzyjoin."
-    "edit_distance_join; both generators fuzzed against an independent "
+    "edit_distance_join; fuzzed against an independent "
     "DP in tests/test_fuzzyjoin.",
 )
 def fuzzy_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,7 +51,7 @@ def fuzzy_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = docs.select(
         "doc_id", F.substring("text", 1, 32).alias("k")
     )
-    return edit_distance_join(keys, "doc_id", "k", tau=2, q=3)
+    return edit_distance_join(keys, "doc_id", "k", tau=2)
 
 
 @register(

@@ -10,8 +10,9 @@ in-parser frame stride at objectron_processor.py:40-104):
   ``binary`` column riding next to typed metadata (width/height/channels/
   sample_rate/n_frames). Filters, joins, routing, and sampling are plain
   column expressions — pushdown-able, codegen'd, shuffle-aware.
-- The DECODE layer is mapInPandas over Arrow record batches: a pluggable
-  per-batch decoder behind an injectable callable. The DEFAULT decoder is
+- The DECODE layer is one mapInPandas body over Arrow record batches
+  (``_asset_stage``), shared by every per-asset stage, with a pluggable
+  per-asset decoder behind an injectable callable. The DEFAULT decoder is
   real for PNG payloads (``sources.png_codec``, stdlib zlib); other
   formats need Pillow/cv2/ffmpeg (not installed here) via injection, with
   ``fake_image_decoder`` as the deterministic test stand-in.
@@ -30,7 +31,7 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
 import numpy as np
@@ -97,21 +98,35 @@ def binary_stats(assets: DataFrame) -> DataFrame:
     )
 
 
-def _scalar_feature_stage(assets: DataFrame, schema: T.StructType, decode):
-    """The one Arrow-batched mapInPandas body every decode/feature stage
-    shares (images, audio, video): one decoder call per asset, scalar
-    features out, payloads never leave the stage. Kept in ONE place so
-    payload/batch handling fixes apply to every modality at once."""
+def _asset_stage(
+    assets: DataFrame,
+    schema: T.StructType,
+    rows_of: Callable[[str, bytes], Iterable[dict[str, Any]]],
+) -> DataFrame:
+    """The one Arrow-batched mapInPandas body every per-asset stage
+    shares (decode, features, hashes, resize, frame series):
+    ``rows_of(asset_id, payload)`` returns the asset's output rows as
+    dicts without ``asset_id`` — one for a scalar stage, one per kept
+    frame for a video stage, none for a skipped asset. Payloads never
+    leave the stage. Kept in ONE place so payload/batch handling fixes
+    apply to every stage at once."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in schema.fields]
         for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                rows.append({"asset_id": aid, **decode(aid, bytes(payload or b""))})
+            rows = [
+                {"asset_id": aid, **row}
+                for aid, payload in zip(pdf["asset_id"], pdf["payload"])
+                for row in rows_of(aid, bytes(payload or b""))
+            ]
             yield pd.DataFrame(rows, columns=cols)
 
     return assets.select("asset_id", "payload").mapInPandas(run, schema=schema)
+
+
+def _one_row(decode: Decoder) -> Callable[[str, bytes], list[dict[str, Any]]]:
+    """A scalar decoder as an :func:`_asset_stage` row function."""
+    return lambda aid, payload: [decode(aid, payload)]
 
 
 def _decode_pixels(payload: bytes):
@@ -188,8 +203,8 @@ def decode_images(
     worker), decode, downscale before emitting. Emits scalar features only
     — pixels stay inside the stage unless a downstream op needs them.
     """
-    return _scalar_feature_stage(
-        assets, DECODED_IMAGE, decoder or _default_image_decoder
+    return _asset_stage(
+        assets, DECODED_IMAGE, _one_row(decoder or _default_image_decoder)
     )
 
 
@@ -299,8 +314,8 @@ def audio_features(
     scalar features out (samples never leave the stage). Filter to
     ``modality == 'audio'`` upstream so Catalyst prunes image/video
     payload bytes from the scan."""
-    return _scalar_feature_stage(
-        assets, AUDIO_FEATURES, decoder or _default_audio_decoder
+    return _asset_stage(
+        assets, AUDIO_FEATURES, _one_row(decoder or _default_audio_decoder)
     )
 
 
@@ -320,21 +335,8 @@ def extract_image_features(
     DINO embedding shape). Output is join-able with operators.similarity
     (ANN) and operators.dedup (embedding cosine) unchanged."""
     extract = extractor or fake_feature_extractor
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "feature": [
-                        extract(aid, bytes(p or b""))
-                        for aid, p in zip(pdf["asset_id"], pdf["payload"])
-                    ],
-                }
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=IMAGE_FEATURES
+    return _asset_stage(
+        assets, IMAGE_FEATURES, lambda aid, p: [{"feature": extract(aid, p)}]
     )
 
 
@@ -419,47 +421,27 @@ def resize_images(
     sources.robust: "skip" (production — ANY decode/resample failure
     drops the asset, one corrupt payload in a million must not kill a
     1000-executor job) or "fail" (debugging/CI — raise)."""
-    from .robust import ON_ERROR_MODES
+    from .robust import guard
 
-    if on_error not in ON_ERROR_MODES:
-        raise ValueError(f"on_error must be one of {ON_ERROR_MODES}")
     decode = decoder or _decode_pixels
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in RESIZED_IMAGE.fields]
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    img = decode(bytes(payload or b""))
-                    w, h, c = img.width, img.height, img.channels
-                    if w <= 0 or h <= 0 or c <= 0:
-                        raise ValueError(f"degenerate image dims {w}x{h}x{c}")
-                    scale = min(1.0, float(max_side) / max(w, h))
-                    tw = max(1, int(math.floor(w * scale + 0.5)))
-                    th = max(1, int(math.floor(h * scale + 0.5)))
-                    px = _resample_rows(
-                        img.rows, w, h, c, tw, th,
-                        sixteen_bit=getattr(img, "bit_depth", 8) == 16,
-                    )
-                    rows.append(
-                        {
-                            "asset_id": aid,
-                            "width": tw,
-                            "height": th,
-                            "channels": c,
-                            "pixels": px.tobytes(),
-                        }
-                    )
-                except Exception:
-                    if on_error == "fail":
-                        raise
-                    continue  # robust skip: corrupt/unsupported payload
-            yield pd.DataFrame(rows, columns=cols)
+    def resize(aid: str, payload: bytes) -> list[dict[str, Any]]:
+        img = decode(payload)
+        w, h, c = img.width, img.height, img.channels
+        if w <= 0 or h <= 0 or c <= 0:
+            raise ValueError(f"degenerate image dims {w}x{h}x{c}")
+        scale = min(1.0, float(max_side) / max(w, h))
+        tw = max(1, int(math.floor(w * scale + 0.5)))
+        th = max(1, int(math.floor(h * scale + 0.5)))
+        px = _resample_rows(
+            img.rows, w, h, c, tw, th,
+            sixteen_bit=getattr(img, "bit_depth", 8) == 16,
+        )
+        return [
+            {"width": tw, "height": th, "channels": c, "pixels": px.tobytes()}
+        ]
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=RESIZED_IMAGE
-    )
+    return _asset_stage(assets, RESIZED_IMAGE, guard(resize, on_error))
 
 
 def frame_sample_plan(assets: DataFrame, stride: int = 10) -> DataFrame:
@@ -574,14 +556,37 @@ def _default_video_decoder(asset_id: str, payload: bytes) -> dict[str, Any]:
     }
 
 
+def _y4m_luma_planes(
+    payload: bytes, stride: int, stage: str
+) -> Iterator[tuple[int, np.ndarray]]:
+    """(frame_idx, Y plane as an (h, w) uint8 array) per kept frame of a
+    Y4M payload, the stride pushed into the decode (1/stride of the
+    plane bytes held) — the frame reader of every per-frame video
+    stage. Empty payloads are corrupt DATA (ValueError → robust skip
+    policy); other containers need ffmpeg, named by ``stage``."""
+    if not payload:
+        raise ValueError("empty video payload")
+    if not payload.startswith(b"YUV4MPEG2"):
+        raise NotImplementedError(
+            f"{stage} beyond Y4M needs ffmpeg (not installed in this "
+            "container)."
+        )
+    from .y4m_codec import decode_y4m
+
+    v = decode_y4m(payload, frame_stride=stride)
+    for k, idx in enumerate(v.frame_indices):
+        y = np.frombuffer(v.frames[k]["y"], dtype=np.uint8)
+        yield idx, y.reshape(v.height, v.width)
+
+
 def video_features(
     assets: DataFrame, decoder: Decoder | None = None
 ) -> DataFrame:
     """Video metadata stage — the video sibling of :func:`decode_images` /
     :func:`audio_features`: Arrow-batched mapInPandas, scalar features
     out, planes never leave the stage."""
-    return _scalar_feature_stage(
-        assets, VIDEO_FEATURES, decoder or _default_video_decoder
+    return _asset_stage(
+        assets, VIDEO_FEATURES, _one_row(decoder or _default_video_decoder)
     )
 
 
@@ -596,42 +601,25 @@ def video_frame_hashes(
     video↔image near-dup detection in the same banded-hamming pipeline,
     because :func:`ahash_from_rows` is the one hash kernel for both.
     The default handles Y4M via ``sources.y4m_codec`` with the stride
-    pushed into the decode (1/stride of the plane bytes held) and
-    zero-copy luma hashing; compressed containers need an injected
-    ``hasher`` (ffmpeg in production), same seam as every other stage."""
+    pushed into the decode and zero-copy luma hashing; compressed
+    containers need an injected ``hasher`` (ffmpeg in production), same
+    seam as every other stage."""
     if stride < 1:
         raise ValueError("stride must be >= 1")
 
-    from .y4m_codec import decode_y4m
-
     def y4m_hasher(aid: str, payload: bytes) -> list[tuple[int, int]]:
-        if not payload:
-            raise ValueError("empty video payload")
-        if not payload.startswith(b"YUV4MPEG2"):
-            raise NotImplementedError(
-                "frame hashing beyond Y4M needs ffmpeg (not installed in "
-                "this container). Inject video_frame_hashes(..., hasher=...)."
-            )
-        v = decode_y4m(payload, frame_stride=stride)
-        out = []
-        for k, idx in enumerate(v.frame_indices):
-            luma = np.frombuffer(v.frames[k]["y"], dtype=np.uint8)
-            out.append((idx, ahash_from_rows(luma, v.width, v.height, 1)))
-        return out
+        return [
+            (idx, ahash_from_rows(y, y.shape[1], y.shape[0], 1))
+            for idx, y in _y4m_luma_planes(payload, stride, "frame hashing")
+        ]
 
     hash_frames = hasher or y4m_hasher
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FRAME_HASHES.fields]
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                for idx, h in hash_frames(aid, bytes(payload or b"")):
-                    rows.append({"asset_id": aid, "frame_idx": idx, "phash": h})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=FRAME_HASHES
+    return _asset_stage(
+        assets,
+        FRAME_HASHES,
+        lambda aid, p: [
+            {"frame_idx": idx, "phash": h} for idx, h in hash_frames(aid, p)
+        ],
     )
 
 
@@ -650,20 +638,8 @@ def perceptual_hashes(
     mapInPandas, same shape as decode_images). Output joins into
     :func:`phash_near_pairs` — the image sibling of text MinHash."""
     hash_fn = hasher or image_ahash_64
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "phash": [
-                        hash_fn(bytes(p or b"")) for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=PHASH_SCHEMA
+    return _asset_stage(
+        assets, PHASH_SCHEMA, lambda aid, p: [{"phash": hash_fn(p)}]
     )
 
 
@@ -845,35 +821,13 @@ def video_frame_luma(assets: DataFrame, stride: int = 1) -> DataFrame:
     :func:`video_frame_hashes`."""
     if stride < 1:
         raise ValueError("stride must be >= 1")
-
-    from .y4m_codec import decode_y4m
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FRAME_LUMA.fields]
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                data = bytes(payload or b"")
-                if not data.startswith(b"YUV4MPEG2"):
-                    raise NotImplementedError(
-                        "frame luma beyond Y4M needs ffmpeg (not installed "
-                        "in this container) — inject a decoder as in "
-                        "video_frame_hashes."
-                    )
-                v = decode_y4m(data, frame_stride=stride)
-                for k, idx in enumerate(v.frame_indices):
-                    y = np.frombuffer(v.frames[k]["y"], dtype=np.uint8)
-                    rows.append(
-                        {
-                            "asset_id": aid,
-                            "frame_idx": idx,
-                            "luma": int(y.sum()) // y.size,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=FRAME_LUMA
+    return _asset_stage(
+        assets,
+        FRAME_LUMA,
+        lambda aid, p: [
+            {"frame_idx": idx, "luma": int(y.sum()) // y.size}
+            for idx, y in _y4m_luma_planes(p, stride, "frame luma")
+        ],
     )
 
 

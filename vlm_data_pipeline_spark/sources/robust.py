@@ -27,12 +27,17 @@ from pyspark.sql import types as T
 ON_ERROR_MODES = ("fail", "skip")
 
 
+def check_on_error(on_error: str) -> None:
+    """Reject an unknown policy on the driver, before any job runs."""
+    if on_error not in ON_ERROR_MODES:
+        raise ValueError(f"on_error must be one of {ON_ERROR_MODES}, got {on_error!r}")
+
+
 def guard(
     parse: Callable[..., list[dict[str, Any]]], on_error: str
 ) -> Callable[..., list[dict[str, Any]]]:
     """Wrap a per-file parser with the decode-failure policy."""
-    if on_error not in ON_ERROR_MODES:
-        raise ValueError(f"on_error must be one of {ON_ERROR_MODES}, got {on_error!r}")
+    check_on_error(on_error)
     if on_error == "fail":
         return parse
 

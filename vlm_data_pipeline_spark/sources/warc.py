@@ -259,10 +259,7 @@ def batched_record_frames(
     retracted (the memory bound is the point). The eager path
     (``robust.guard(parse_warc_bytes, 'skip')``) drops whole files;
     :func:`robust.file_decode_errors` audits identically for both."""
-    if on_error not in robust.ON_ERROR_MODES:
-        raise ValueError(
-            f"on_error must be one of {robust.ON_ERROR_MODES}, got {on_error!r}"
-        )
+    robust.check_on_error(on_error)
     cols = [f.name for f in WARC_RECORDS.fields]
     buf: list[dict[str, Any]] = []
     held = 0
@@ -300,6 +297,7 @@ def read_warc(
     boundary in BOUNDED frames (the streaming splitter above — a 3-5 GB
     decompressed segment peaks at ~batch_bytes per task, not the whole
     segment); everything downstream is a column program. No shuffle."""
+    robust.check_on_error(on_error)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pairs = (
