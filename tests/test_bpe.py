@@ -101,46 +101,25 @@ def test_unigram_seed_vocab_hand_computed(spark):
         unigram_seed_vocab(docs, vocab_size=1, max_piece_len=2).collect()
 
 
-def test_unigram_viterbi_hand_computed(spark):
+def test_unigram_viterbi_hand_computed():
     """Model {'ab': -1, 'a': -2, 'b': -2, 'c': -2.5}: word 'abc' costs
     3.5 via ab+c vs 6.5 via a+b+c -> Viterbi picks ['ab', 'c']."""
-    from pyspark.sql import functions as F
-
-    from vlm_data_pipeline_spark.operators.lm import (
-        _price_lookup,
-        _viterbi_pieces,
-    )
+    from vlm_data_pipeline_spark.operators.lm import _py_viterbi_word
 
     model = {"ab": -1.0, "a": -2.0, "b": -2.0, "c": -2.5}
-    df = spark.createDataFrame([("abc",), ("",)], "w string")
-    got = [
-        r.p
-        for r in df.select(
-            _viterbi_pieces(
-                F.col("w"), _price_lookup(model), 4, 20.0
-            ).alias("p")
-        ).collect()
-    ]
-    assert got[0] == ["ab", "c"]
-    assert got[1] == []
+    prices = {p: -lp for p, lp in model.items()}
+    assert _py_viterbi_word("abc", prices, 4, 20.0) == ["ab", "c"]
+    assert _py_viterbi_word("", prices, 4, 20.0) == []
 
 
-def test_unigram_viterbi_tie_breaks_shorter_last_piece(spark):
+def test_unigram_viterbi_tie_breaks_shorter_last_piece():
     """'aa' with p(aa) = p(a)·p(a): equal cost -> the documented
     tie-break keeps the larger back pointer (shorter last piece)."""
-    from pyspark.sql import functions as F
-
-    from vlm_data_pipeline_spark.operators.lm import (
-        _price_lookup,
-        _viterbi_pieces,
-    )
+    from vlm_data_pipeline_spark.operators.lm import _py_viterbi_word
 
     model = {"aa": -4.0, "a": -2.0}
-    df = spark.createDataFrame([("aa",)], "w string")
-    got = df.select(
-        _viterbi_pieces(F.col("w"), _price_lookup(model), 4, 20.0).alias("p")
-    ).collect()[0].p
-    assert got == ["a", "a"]
+    prices = {p: -lp for p, lp in model.items()}
+    assert _py_viterbi_word("aa", prices, 4, 20.0) == ["a", "a"]
 
 
 def test_unigram_em_learns_whole_words(spark):
@@ -223,52 +202,62 @@ def test_unigram_train_empty_corpus_clear_error(spark):
         train_unigram_lm(docs, vocab_size=8, iters=1)
     with pytest.raises(ValueError, match="empty model"):
         unigram_encode(docs, {})
+    # log p >= 10 everywhere would make the UNK floor a reward
+    with pytest.raises(ValueError, match="must be positive"):
+        unigram_encode(docs, {"a": 11.0})
 
 
-def test_unigram_price_lookup_map_literal_guard():
-    from vlm_data_pipeline_spark.operators.lm import (
-        MAP_LITERAL_LIMIT,
-        _price_lookup,
-    )
-
-    big = {f"p{i}": -1.0 for i in range(MAP_LITERAL_LIMIT // 2 + 1)}
-    with pytest.raises(ValueError, match="auto-selects"):
-        _price_lookup(big)
-
-
-def test_apply_bpe_paths_agree(spark):
-    """The fold-chain path (small tables) and the Arrow pandas path
-    (production tables) must encode identically — same sequential-rank
-    semantics, pinned byte-for-byte on a TRAINED table whose merges
-    include composite-on-composite ranks."""
+def test_apply_bpe_matches_sequential_reference(spark):
+    """apply_bpe's substring-indexed encode must equal the plain BPE rule
+    — every merge of a TRAINED table (composite-on-composite ranks
+    included) applied in rank order, leftmost-greedy, over the word's
+    characters — and map NULL text to NULL."""
     from vlm_data_pipeline_spark.operators import lm
 
-    corpus = spark.createDataFrame(
-        [(1, "abab abab ababab abc"), (2, "abab baba cab abcab"), (3, "ab ba")],
-        "doc_id long, text string",
-    )
-    merges = lm.train_bpe(corpus, num_merges=6)
-    assert len(merges) >= 3
-    fold = {
-        r.doc_id: r.bpe_tokens for r in lm.apply_bpe(corpus, merges).collect()
+    texts = {
+        1: "abab abab ababab abc cab",
+        2: "banana bandana ban and anna nab",
+        3: "aaa aa aaaa xyxy xy yx",
+        4: "low low low lower lower newest widest",
+        5: None,
     }
-    orig = lm.BPE_FOLD_MERGE_LIMIT
-    lm.BPE_FOLD_MERGE_LIMIT = 0
-    try:
-        arrow_df = lm.apply_bpe(corpus, merges)
-        plan = arrow_df._jdf.queryExecution().executedPlan().toString()
-        assert "EvalPython" in plan, plan[:1200]  # really took the UDF path
-        arrow = {r.doc_id: r.bpe_tokens for r in arrow_df.collect()}
-    finally:
-        lm.BPE_FOLD_MERGE_LIMIT = orig
-    assert fold == arrow
+    corpus = spark.createDataFrame(
+        sorted(texts.items()), "doc_id long, text string"
+    )
+    merges = lm.train_bpe(corpus, num_merges=20)
+    assert len(merges) == 20
+
+    def reference(text):
+        if text is None:
+            return None
+        out = []
+        for w in text.split():
+            syms = list(w)
+            for a, b in merges:
+                syms = lm._py_merge_pass(syms, a, b)
+            out.extend(syms)
+        return out
+
+    got = {r.doc_id: r.bpe_tokens for r in lm.apply_bpe(corpus, merges).collect()}
+    assert got == {i: reference(t) for i, t in texts.items()}
+
+
+def test_apply_bpe_non_bmp_chars_are_one_symbol(spark):
+    """A character outside the Basic Multilingual Plane is ONE initial
+    symbol (a code point), never two UTF-16 surrogate halves, so a merge
+    over it fires and no half-character token is emitted."""
+    docs = spark.createDataFrame(
+        [(1, "a\U0001F600b x\U0001F600\U0001F600")], "doc_id long, text string"
+    )
+    got = apply_bpe(docs, [("\U0001F600", "\U0001F600")]).collect()[0].bpe_tokens
+    assert got == ["a", "\U0001F600", "b", "x", "\U0001F600\U0001F600"]
 
 
 def test_apply_bpe_32k_merge_table(spark):
-    """A production-size (32k-merge) table must encode — the fold path
-    would build a 32k-deep expression tree; the pandas path's per-word
-    cost is substring-indexed and vocab-size-independent. Planted
-    applicable merges still fire in rank order."""
+    """A production-size (32k-merge) table must encode: the table is
+    broadcast, never in the plan, and per-word cost is substring-indexed
+    and vocab-size-independent. Planted applicable merges still fire in
+    rank order."""
     from vlm_data_pipeline_spark.operators import lm
 
     # 32k junk merges that can never apply, with real ones interleaved
@@ -339,14 +328,19 @@ def test_train_bpe_production_merge_count(spark):
         assert len(a) == 1 or a in known
         assert len(b) == 1 or b in known
         known.add(a + b)
-    # and the table actually encodes (pandas path, vocab-independent)
+    # and the table actually encodes (vocab-size-independent)
     out = lm.apply_bpe(docs.limit(20), merges).select("bpe_tokens").collect()
     assert all(r.bpe_tokens is not None for r in out)
 
 
-def test_unigram_encode_paths_agree(spark):
-    """Map-literal Viterbi vs broadcast pandas Viterbi: identical DP,
-    identical tie-break, identical pieces on a trained model."""
+def test_unigram_encode_is_min_cost_segmentation(spark):
+    """Every word's pieces concatenate back to the word, and their summed
+    price (−log p, added left to right; an unknown single char costs the
+    UNK price 10 nats above the worst piece) equals, bit for bit, the
+    minimum over ALL segmentations into pieces of at most max_piece_len
+    chars — brute force, independent of the Viterbi DP."""
+    import itertools
+
     from vlm_data_pipeline_spark.operators import lm
 
     corpus = spark.createDataFrame(
@@ -354,25 +348,73 @@ def test_unigram_encode_paths_agree(spark):
         "doc_id long, text string",
     )
     model = lm.train_unigram_lm(corpus, vocab_size=24, iters=2)
-    lit = {
-        r.doc_id: r.pieces for r in lm.unigram_encode(corpus, model).collect()
+    max_len = 6
+    unk = -min(model.values()) + 10.0
+
+    def price(piece):
+        if piece in model:
+            return -model[piece]
+        return unk if len(piece) == 1 else float("inf")
+
+    def total(pieces):
+        c = 0.0
+        for p in pieces:
+            c += price(p)
+        return c
+
+    def brute_min(word):
+        best = float("inf")
+        for cuts in itertools.product((0, 1), repeat=len(word) - 1):
+            pieces, start = [], 0
+            for i, cut in enumerate(cuts, 1):
+                if cut:
+                    pieces.append(word[start:i])
+                    start = i
+            pieces.append(word[start:])
+            if max(map(len, pieces)) <= max_len:
+                best = min(best, total(pieces))
+        return best
+
+    words = sorted(
+        {"banana", "bandana", "ban", "and", "anna", "nab", "nabz", "abba", "q"}
+    )
+    docs = spark.createDataFrame(list(enumerate(words)), "doc_id long, text string")
+    got = {r.doc_id: r.pieces for r in lm.unigram_encode(docs, model, max_len).collect()}
+    for i, w in enumerate(words):
+        assert "".join(got[i]) == w
+        assert total(got[i]) == brute_min(w), (w, got[i])
+
+
+def test_train_unigram_lm_beyond_10k_pieces(spark):
+    """Training is not capped by plan size: a 12,000-piece seed vocabulary
+    trains, and the trained model segments every word back to itself."""
+    import random
+
+    from vlm_data_pipeline_spark.operators import lm
+
+    rng = random.Random(0)
+    alpha = "abcdefghijklmnopqrstuvwxyz"
+    words = [
+        "".join(rng.choice(alpha) for _ in range(rng.randint(6, 10)))
+        for _ in range(3_000)
+    ]
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[i * 30 : (i + 1) * 30])) for i in range(100)],
+        "doc_id long, text string",
+    )
+    model = lm.train_unigram_lm(docs, vocab_size=12_000, iters=1, max_piece_len=4)
+    assert model
+    enc = lm.unigram_encode(docs, model, 4).collect()
+    rebuilt = {r.doc_id: "".join(r.pieces) for r in enc}
+    assert rebuilt == {
+        i: "".join(words[i * 30 : (i + 1) * 30]) for i in range(100)
     }
-    orig = lm.MAP_LITERAL_LIMIT
-    lm.MAP_LITERAL_LIMIT = 0
-    try:
-        pd_df = lm.unigram_encode(corpus, model)
-        plan = pd_df._jdf.queryExecution().executedPlan().toString()
-        assert "EvalPython" in plan, plan[:1200]
-        pds = {r.doc_id: r.pieces for r in pd_df.collect()}
-    finally:
-        lm.MAP_LITERAL_LIMIT = orig
-    assert lit == pds
 
 
 def test_unigram_encode_32k_piece_model(spark):
     """SentencePiece production vocabs are 32k–100k pieces: encoding must
-    work (the map-literal path hard-caps at 10k), stay total (concat of
-    pieces rebuilds each word), and prefer planted high-prob pieces."""
+    work (the table is broadcast, never in the plan), stay total (concat
+    of pieces rebuilds each word), and prefer planted high-prob pieces."""
     from vlm_data_pipeline_spark.operators import lm
 
     model = {f"xx{i:05d}": -20.0 for i in range(32_000)}

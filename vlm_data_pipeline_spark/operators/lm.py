@@ -10,10 +10,17 @@ model stays shippable), and scoring is an in-row fold over each
 document's own token pairs: ZERO shuffle at any corpus size, exactly like
 the repetition/quality signals. Training is one counts aggregation over a
 (reference) corpus, collected to the driver.
+
+The subword tokenizers (BPE, unigram-LM, WordPiece) train driver-side
+over a capped word-frequency table and encode through ONE execution,
+:func:`_word_encoder`: a broadcast-table pandas UDF that runs a
+pure-Python kernel once per distinct word. The unigram E-step uses the
+same encoder over the word table.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import pandas as pd
@@ -462,15 +469,8 @@ def train_bpe_iterative(
     return merges
 
 
-# Above this many merges the column path's chained per-merge folds make
-# the expression tree DEPTH itself the problem (one _merge_syms fold per
-# merge: a 32k-merge production table would build a 32k-deep plan that
-# Catalyst cannot analyze) — the Arrow-batched pandas path takes over.
-BPE_FOLD_MERGE_LIMIT = 128
-
-
 def _py_tokens(text: str) -> list[str]:
-    """functions.text.tokens() replicated for the Python encode paths:
+    """functions.text.tokens() replicated for the Python encoder:
     split on the EXPLICIT whitespace class (the WS_CLASS parity rule —
     Java \\s includes \\x0B) and drop empties."""
     import re
@@ -478,11 +478,45 @@ def _py_tokens(text: str) -> list[str]:
     return [t for t in re.split(r"[ \t\n\x0B\f\r]+", text) if t != ""]
 
 
+def _word_encoder(
+    spark, table, encode_word: Callable[[str, object], list[str]]
+) -> Callable[[Column], Column]:
+    """The one tokenizer execution: an Arrow-batched ``array<string>``
+    pandas UDF that splits each text with :func:`_py_tokens` and
+    concatenates ``encode_word(word, table)`` over its words. ``table``
+    (merge index, piece prices, vocabulary) ships ONCE per executor as a
+    SparkContext broadcast — a 32k-entry production table never rides
+    the plan — and a per-batch distinct-word cache exploits Zipfian
+    repetition. NULL in → NULL out; a narrow per-row transform, zero
+    shuffle at any corpus size."""
+    bc = spark.sparkContext.broadcast(table)
+
+    @F.pandas_udf("array<string>")
+    def encode(texts: pd.Series) -> pd.Series:
+        tab = bc.value
+        cache: dict[str, list[str]] = {}
+
+        def enc_doc(text: str | None) -> list[str] | None:
+            if text is None:
+                return None
+            out: list[str] = []
+            for w in _py_tokens(text):
+                hit = cache.get(w)
+                if hit is None:
+                    hit = cache[w] = encode_word(w, tab)
+                out.extend(hit)
+            return out
+
+        return texts.map(enc_doc)
+
+    return encode
+
+
 def _py_merge_pass(
     syms: list[str], a: str, b: str, fused: str | None = None
 ) -> list[str]:
-    """One merge applied leftmost-greedy — the exact Python transcription
-    of :func:`_merge_syms`' fold. ``fused`` overrides the replacement
+    """One merge applied leftmost-greedy — the Python form of
+    :func:`_merge_syms`' fold. ``fused`` overrides the replacement
     string (WordPiece drops the right part's ## marker)."""
     out: list[str] = []
     ab = a + b if fused is None else fused
@@ -503,8 +537,10 @@ def _py_encode_word_bpe(
     symbol is one), so the applicable merges are found by enumerating
     the word's O(len²) substrings against the concat index instead of
     scanning the 32k-row table — then applied in learned order with the
-    same leftmost-greedy pass as the column fold. Bit-identical to the
-    fold path by construction (no topological assumption on the table)."""
+    leftmost-greedy :func:`_py_merge_pass`. Equal to applying every merge
+    of the table in rank order (no topological assumption on the table;
+    pinned against that reference in tests/test_bpe.py). Symbols are
+    code points, so a non-BMP character is one symbol."""
     cands: list[tuple[int, str, str]] = []
     n = len(word)
     seen: set[str] = set()
@@ -535,56 +571,15 @@ def apply_bpe(
     encoding rule). Appends ``out_col`` (array of subword tokens,
     per-word boundaries preserved by flattening word-wise encodes).
 
-    Two executions, identical to the last byte (path-equality pinned in
-    tests/test_bpe.py):
-
-    - small table (≤ BPE_FOLD_MERGE_LIMIT merges): an in-row fold chain,
-      zero shuffle, the merge table riding in the plan;
-    - production table (SentencePiece/GPT-2 scale, 32k+ merges): an
-      Arrow-batched pandas UDF — the table ships ONCE per executor as a
-      SparkContext broadcast (never in the plan: one fold per merge
-      would build a 32k-deep expression tree Catalyst cannot analyze),
-      each word encodes via its substring-indexed applicable-merge set
-      (cost O(len²) per DISTINCT word, independent of vocab size), and a
-      per-batch distinct-word cache exploits Zipfian repetition. Still
-      zero shuffle — a narrow per-row transform either way.
+    Execution is :func:`_word_encoder` over :func:`_py_encode_word_bpe`:
+    the merge table ships once per executor indexed by fused string, so
+    a word costs O(len²) probes per DISTINCT word, independent of the
+    table size (SentencePiece/GPT-2 tables run 32k+ merges).
     """
-    if len(merges) <= BPE_FOLD_MERGE_LIMIT:
-
-        def encode_word(w: Column) -> Column:
-            syms = F.split(w, "(?!^)(?=.)")
-            for a, b in merges:
-                syms = _merge_syms(syms, a, b)
-            return syms
-
-        return docs.withColumn(
-            out_col,
-            F.flatten(F.transform(tokens(F.col(text_col)), encode_word)),
-        )
-
     by_concat: dict[str, list[tuple[int, str, str]]] = {}
     for rank, (a, b) in enumerate(merges):
         by_concat.setdefault(a + b, []).append((rank, a, b))
-    bc = docs.sparkSession.sparkContext.broadcast(by_concat)
-
-    @F.pandas_udf("array<string>")
-    def encode(texts: pd.Series) -> pd.Series:
-        table = bc.value
-        cache: dict[str, list[str]] = {}
-
-        def enc_doc(text: str | None) -> list[str] | None:
-            if text is None:  # null in → null out, as the column path
-                return None
-            out: list[str] = []
-            for w in _py_tokens(text):
-                hit = cache.get(w)
-                if hit is None:
-                    hit = cache[w] = _py_encode_word_bpe(w, table)
-                out.extend(hit)
-            return out
-
-        return texts.map(enc_doc)
-
+    encode = _word_encoder(docs.sparkSession, by_concat, _py_encode_word_bpe)
     return docs.withColumn(out_col, encode(F.col(text_col)))
 
 
@@ -662,115 +657,58 @@ def unigram_seed_vocab(
     return chars.unionByName(multi)
 
 
-def _piece_price(lookup: Column, sub: Column, unk_price: float) -> Column:
-    """−log p of a candidate piece: model lookup, else the UNK PRICE for
-    single chars (coverage), else effectively infinite. ``unk_price`` is
-    a −log p, so it must be POSITIVE and LARGER than every in-vocab
-    price — a negative value would make unknown chars a reward and
-    Viterbi would prefer them over in-vocab pieces."""
+def _py_viterbi_word(
+    word: str, prices: dict[str, float], max_piece_len: int, unk_price: float
+) -> list[str]:
+    """Best (lowest total −log p) segmentation of one word: forward DP
+    over split points + backtrace, O(len · max_piece_len) price lookups.
+    A piece missing from ``prices`` costs ``unk_price`` if it is a single
+    char (coverage — encoding is total), else effectively infinity. Costs
+    add left to right (cost[j] + price, j ascending); on equal cost the
+    LARGER back pointer, i.e. the shorter last piece, wins."""
+    m = len(word)
+    if m == 0:
+        return []
+    cost = [0.0] * (m + 1)
+    back = [0] * (m + 1)
+    for i in range(1, m + 1):
+        best_cost = None
+        best_back = 0
+        for j in range(max(0, i - max_piece_len), i):
+            sub = word[j:i]
+            p = prices.get(sub)
+            if p is None:
+                p = unk_price if i - j == 1 else _UNI_INF
+            c = cost[j] + p
+            # j ascends, so <= keeps the LARGEST back on cost ties
+            if best_cost is None or c <= best_cost:
+                best_cost, best_back = c, j
+        cost[i], back[i] = best_cost, best_back
+    pieces: list[str] = []
+    pos = m
+    while pos > 0:
+        b = back[pos]
+        pieces.append(word[b:pos])
+        pos = b
+    pieces.reverse()
+    return pieces
+
+
+def _viterbi_encoder(
+    spark, model: dict[str, float], max_piece_len: int
+) -> Callable[[Column], Column]:
+    """:func:`_word_encoder` over :func:`_py_viterbi_word` for a
+    {piece: log p} model: prices are −log p, and the UNK price sits 10
+    nats ABOVE the worst in-vocab price, so an unknown char is always a
+    penalty, never a reward that beats real pieces."""
+    unk_price = -min(model.values()) + 10.0
     if unk_price <= 0:
         raise ValueError("unk_price is a -log p: must be positive")
-    return F.coalesce(
-        F.element_at(lookup, sub),
-        F.when(F.length(sub) == 1, F.lit(unk_price)).otherwise(F.lit(_UNI_INF)),
+    return _word_encoder(
+        spark,
+        {p: float(-lp) for p, lp in model.items()},
+        lambda w, prices: _py_viterbi_word(w, prices, max_piece_len, unk_price),
     )
-
-
-def _viterbi_pieces(
-    w: Column, lookup: Column, max_piece_len: int, unk_price: float
-) -> Column:
-    """Best (lowest total −log p) segmentation of one word, as an in-row
-    forward DP + backtrace — pure expressions, no UDF. Ties break toward
-    the SHORTER last piece (larger back pointer), deterministically.
-    O(len · max_piece_len) price lookups per word."""
-
-    def dp(word: Column) -> Column:
-        m = F.length(word)
-        init = F.array(
-            F.struct(F.lit(0.0).alias("cost"), F.lit(0).alias("back"))
-        )
-
-        def step(acc: Column, i: Column) -> Column:
-            cands = F.transform(
-                # j = split point: piece = word[j+1 .. i]
-                F.sequence(F.greatest(F.lit(0), i - max_piece_len), i - 1),
-                lambda j: F.struct(
-                    (
-                        F.element_at(acc, (j + 1).cast("int"))["cost"]
-                        + _piece_price(
-                            lookup,
-                            word.substr((j + 1).cast("int"), (i - j).cast("int")),
-                            unk_price,
-                        )
-                    ).alias("cost"),
-                    # negated back => array_min prefers the LARGEST back
-                    # (shortest last piece) on cost ties
-                    (-j).cast("int").alias("back"),
-                ),
-            )
-            best = F.array_min(cands)
-            return F.concat(
-                acc,
-                F.array(
-                    F.struct(
-                        best["cost"].alias("cost"),
-                        (-best["back"]).alias("back"),
-                    )
-                ),
-            )
-
-        fwd = F.aggregate(F.sequence(F.lit(1), m), init, step)
-
-        def backtrace(table: Column) -> Column:
-            init_st = F.struct(
-                m.cast("int").alias("pos"),
-                F.array().cast("array<string>").alias("pieces"),
-            )
-
-            def hop(st: Column, _: Column) -> Column:
-                back = F.element_at(table, st["pos"] + 1)["back"]
-                return F.when(
-                    st["pos"] > 0,
-                    F.struct(
-                        back.alias("pos"),
-                        F.concat(
-                            F.array(
-                                word.substr(
-                                    (back + 1).cast("int"),
-                                    (st["pos"] - back).cast("int"),
-                                )
-                            ),
-                            st["pieces"],
-                        ).alias("pieces"),
-                    ),
-                ).otherwise(st)
-
-            return F.aggregate(F.sequence(F.lit(1), m), init_st, hop)["pieces"]
-
-        return F.when(m > 0, let(fwd, backtrace)).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return let(w, dp)
-
-
-def _price_lookup(model: dict[str, float]) -> Column:
-    if 2 * len(model) > MAP_LITERAL_LIMIT:
-        raise ValueError(
-            f"model has {len(model)} pieces (> {MAP_LITERAL_LIMIT // 2}): a "
-            "create_map literal this large blows up Catalyst — "
-            "unigram_encode auto-selects the broadcast pandas-UDF Viterbi "
-            "path above this size; use that entry point"
-        )
-    entries: list[Column] = []
-    for piece in sorted(model):
-        entries.append(F.lit(piece))
-        entries.append(F.lit(float(-model[piece])))
-    if not entries:
-        return F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<double>")
-        )
-    return F.create_map(*entries)
 
 
 def train_unigram_lm(
@@ -784,15 +722,16 @@ def train_unigram_lm(
     """Unigram-LM tokenizer training (SentencePiece; Kudo 2018), the
     hard-EM variant: seed vocabulary from substring counts, then
     iterate — E-step: Viterbi-segment every word of the capped
-    word-frequency table in-row under the current piece log-probs
-    (the price table rides as a map literal); M-step: piece counts
-    (weighted by word freq) re-normalize to new log-probs on the driver.
+    word-frequency table under the current piece log-probs (the
+    broadcast :func:`_viterbi_encoder`, so the model size is not
+    bounded by the plan); M-step: piece counts (weighted by word freq)
+    re-normalize to new log-probs on the driver.
     Pieces that win zero words are PRUNED each round (the paper's
     shrinking step) except single chars, which keep a floor probability
     so every word stays segmentable.
 
     Scale shape: one corpus pass builds the word table; each EM round is
-    one vocab-sized in-row segmentation + one skinny (piece, count)
+    one vocab-sized segmentation + one skinny (piece, count)
     aggregation + a vocab-sized collect — the BPE/KMeans/PQ driver-loop
     pattern. Returns {piece: log p}.
     """
@@ -814,18 +753,9 @@ def train_unigram_lm(
         model = {r.piece: math.log(r.freq / total0) for r in seed}
         chars = {r.piece for r in seed if len(r.piece) == 1}
         for _ in range(iters):
-            # price space (−log p): 10 nats ABOVE the worst in-vocab price
-            unk_price = -min(model.values()) + 10.0
-            lookup = _price_lookup(model)
+            encode = _viterbi_encoder(words.sparkSession, model, max_piece_len)
             counts = (
-                words.select(
-                    "freq",
-                    F.explode(
-                        _viterbi_pieces(
-                            F.col("w"), lookup, max_piece_len, unk_price
-                        )
-                    ).alias("piece"),
-                )
+                words.select("freq", F.explode(encode(F.col("w"))).alias("piece"))
                 .groupBy("piece")
                 .agg(F.sum("freq").cast("long").alias("c"))
                 .collect()
@@ -843,42 +773,6 @@ def train_unigram_lm(
     return model
 
 
-def _py_viterbi_word(
-    word: str, prices: dict[str, float], max_piece_len: int, unk_price: float
-) -> list[str]:
-    """:func:`_viterbi_pieces` transcribed: identical DP recurrence,
-    identical addition order (cost[j] + price, j ascending), identical
-    tie-break (equal cost → larger back pointer → shorter last piece),
-    so segmentations agree with the column path to the last bit."""
-    m = len(word)
-    if m == 0:
-        return []
-    cost = [0.0] * (m + 1)
-    back = [0] * (m + 1)
-    for i in range(1, m + 1):
-        best_cost = None
-        best_back = 0
-        for j in range(max(0, i - max_piece_len), i):
-            sub = word[j:i]
-            p = prices.get(sub)
-            if p is None:
-                p = unk_price if i - j == 1 else _UNI_INF
-            c = cost[j] + p
-            # j ascends, so <= keeps the LARGEST back on cost ties —
-            # the column path's array_min over (cost, -back)
-            if best_cost is None or c <= best_cost:
-                best_cost, best_back = c, j
-        cost[i], back[i] = best_cost, best_back
-    pieces: list[str] = []
-    pos = m
-    while pos > 0:
-        b = back[pos]
-        pieces.append(word[b:pos])
-        pos = b
-    pieces.reverse()
-    return pieces
-
-
 def unigram_encode(
     corpus: DataFrame,
     model: dict[str, float],
@@ -890,61 +784,13 @@ def unigram_encode(
     every whitespace word, concatenated in order. Unknown characters
     segment as single chars at the UNK floor, so encoding is total.
 
-    Path selection by model size (the score_corpus dual-path contract,
-    equality pinned in tests/test_bpe.py):
-
-    - vocab ≤ MAP_LITERAL_LIMIT/2 map entries: the price table rides in
-      the plan as a map literal and the DP is an in-row fold — zero
-      shuffle, zero Python;
-    - production vocab (SentencePiece ships 32k–100k pieces): an
-      Arrow-batched pandas UDF running the SAME DP — the piece table
-      ships once per executor as a SparkContext broadcast, per-batch
-      distinct-word caching exploits Zipfian repetition. Still a narrow
-      per-row transform: zero shuffle at any corpus size.
+    Execution is :func:`_viterbi_encoder`: the piece table ships once per
+    executor (SentencePiece ships 32k–100k pieces), zero shuffle at any
+    corpus size.
     """
     if not model:
         raise ValueError("empty model: train_unigram_lm first")
-    unk_price = -min(model.values()) + 10.0
-    if 2 * len(model) <= MAP_LITERAL_LIMIT:
-        lookup = _price_lookup(model)
-        pieces = let(
-            tokens(F.col(text_col)),
-            lambda toks: F.flatten(
-                F.transform(
-                    toks,
-                    lambda t: _viterbi_pieces(t, lookup, max_piece_len, unk_price),
-                )
-            ),
-        )
-        return corpus.select(
-            F.col(id_col), pieces.alias("pieces")
-        ).withColumn("n_pieces", F.size("pieces"))
-
-    # prices as the column path stores them: −log p per piece
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        {p: float(-lp) for p, lp in model.items()}
-    )
-
-    @F.pandas_udf("array<string>")
-    def encode(texts: pd.Series) -> pd.Series:
-        prices = bc.value
-        cache: dict[str, list[str]] = {}
-
-        def enc_doc(text: str | None) -> list[str] | None:
-            if text is None:  # null in → null out, as the column path
-                return None
-            out: list[str] = []
-            for w in _py_tokens(text):
-                hit = cache.get(w)
-                if hit is None:
-                    hit = cache[w] = _py_viterbi_word(
-                        w, prices, max_piece_len, unk_price
-                    )
-                out.extend(hit)
-            return out
-
-        return texts.map(enc_doc)
-
+    encode = _viterbi_encoder(corpus.sparkSession, model, max_piece_len)
     return corpus.select(
         F.col(id_col), encode(F.col(text_col)).alias("pieces")
     ).withColumn("n_pieces", F.size("pieces"))
@@ -1089,37 +935,19 @@ def apply_wordpiece(
     greedy longest-match-first with ## continuations, [UNK] for any
     word with an uncoverable position (BERT semantics).
 
-    Execution: one Arrow-batched pandas UDF — the vocabulary ships ONCE
-    per executor as a SparkContext broadcast (a 30k-piece production
-    vocab must never ride the plan), each word costs O(len ·
-    max_piece_len) set probes independent of vocab size, and a
-    per-batch distinct-word cache exploits Zipfian repetition. A narrow
-    per-row transform: zero shuffle at any corpus size (same production
-    arm as apply_bpe's large-table path)."""
+    Execution is :func:`_word_encoder` over :func:`_py_encode_word_wp`:
+    the vocabulary ships once per executor (a 30k-piece production vocab
+    never rides the plan), and a word costs O(len · max_piece_len) set
+    probes independent of vocab size."""
     vset = set(vocab)
     if not vset:
         raise ValueError("empty vocabulary")
     max_len = max(len(p) for p in vset)
-    bc = docs.sparkSession.sparkContext.broadcast((vset, max_len))
-
-    @F.pandas_udf("array<string>")
-    def encode(texts: pd.Series) -> pd.Series:
-        vs, ml = bc.value
-        cache: dict[str, list[str]] = {}
-
-        def enc_doc(text: str | None) -> list[str] | None:
-            if text is None:
-                return None
-            out: list[str] = []
-            for w in _py_tokens(text):
-                hit = cache.get(w)
-                if hit is None:
-                    hit = cache[w] = _py_encode_word_wp(w, vs, ml)
-                out.extend(hit)
-            return out
-
-        return texts.map(enc_doc)
-
+    encode = _word_encoder(
+        docs.sparkSession,
+        vset,
+        lambda w, vs: _py_encode_word_wp(w, vs, max_len),
+    )
     return docs.withColumn(out_col, encode(F.col(text_col)))
 
 

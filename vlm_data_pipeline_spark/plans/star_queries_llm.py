@@ -2194,12 +2194,12 @@ FROM planted
     _BPE_ENCODE_ORACLE,
     "BPE ENCODING end-to-end (extension): apply a fixed learned merge "
     "table to every document - per word, character split then each "
-    "merge in learned order as an in-row leftmost-greedy fold, zero "
-    "shuffle, merge table riding in the plan. Demo plants a two-"
-    "sentence vocabulary so the oracle enumerates the hand-derived "
-    "encodings per word (md5 of the joined subword stream + token "
-    "count) without re-implementing the fold in SQL. Library: "
-    "operators.lm.apply_bpe.",
+    "merge in learned order, leftmost-greedy, in one Arrow-batched "
+    "stage with the merge table broadcast once per executor (never in "
+    "the plan), zero shuffle. Demo plants a two-sentence vocabulary so "
+    "the oracle enumerates the hand-derived encodings per word (md5 of "
+    "the joined subword stream + token count) without re-implementing "
+    "BPE in SQL. Library: operators.lm.apply_bpe.",
 )
 def lm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.lm import apply_bpe
@@ -3115,12 +3115,12 @@ def _unigram_encode_witness_table(sf_dir: str, src_mtime_ns: int) -> str:
     the word table, M-step renormalize + prune + char floor — the same
     driver-side float arithmetic train_unigram_lm itself performs), and
     the per-document encode + md5 fingerprint. The one shared kernel is
-    ``lm._py_viterbi_word`` — the hand-fixture-pinned transcription of
-    the column DP (identical recurrence, addition order, and tie-break,
-    bit-equal by tests/test_bpe) — so the oracle independently checks
-    everything DISTRIBUTED: the corpus word aggregation and cap, the
-    seed-vocab TakeOrderedAndProject selection, the E-step piece-count
-    aggregation, model pruning/flooring, the map-literal price table,
+    ``lm._py_viterbi_word`` — pinned by hand fixtures and, in
+    tests/test_bpe, against a brute-force minimum-cost segmentation —
+    so the oracle independently checks everything DISTRIBUTED: the
+    corpus word aggregation and cap, the seed-vocab
+    TakeOrderedAndProject selection, the E-step piece-count
+    aggregation, model pruning/flooring, the broadcast price table,
     and the per-doc flatten/ordering. The zlib-oracle precedent: the
     metric's kernel is necessarily shared, everything around it is
     re-derived independently."""
@@ -3205,7 +3205,7 @@ def _unigram_encode_witness_table(sf_dir: str, src_mtime_ns: int) -> str:
     ids, n_pieces, fps = [], [], []
     for doc_id, text in docs:
         ids.append(doc_id)
-        if text is None:  # null in → null out (the column path)
+        if text is None:  # null in → null out, as unigram_encode
             n_pieces.append(None)
             fps.append(None)
             continue
@@ -3250,17 +3250,17 @@ def _unigram_encode_oracle(sf_dir: str) -> str:
     # table above value-checks the full train+encode pipeline per doc
     "Unigram-LM tokenizer train + encode end-to-end (extension; "
     "SentencePiece, Kudo 2018): hard-EM over the seed vocabulary — "
-    "E-step Viterbi-segments the capped word table IN-ROW (forward DP + "
-    "backtrace as pure array expressions, price table as a map "
-    "literal), M-step renormalizes piece counts on the driver, pruning "
-    "zero-count multi-char pieces. Encoding Viterbi-segments every doc "
-    "zero-shuffle. Oracle (round 10, replacing the rows-only check): a "
-    "single-threaded pure-Python witness re-derives word counts, seed "
-    "vocab, both EM rounds, and every document's piece sequence + md5 "
-    "fingerprint off-Spark (memoized reference parquet; only the "
-    "hand-fixture-pinned Viterbi transcription is shared — the zlib "
-    "precedent). Library: operators.lm.train_unigram_lm / "
-    "unigram_encode.",
+    "E-step Viterbi-segments the capped word table in one Arrow-batched "
+    "stage (forward DP + backtrace per distinct word, price table "
+    "broadcast once per executor), M-step renormalizes piece counts on "
+    "the driver, pruning zero-count multi-char pieces. Encoding "
+    "Viterbi-segments every doc through the same stage, zero shuffle. "
+    "Oracle (round 10, replacing the rows-only check): a single-threaded "
+    "pure-Python witness re-derives word counts, seed vocab, both EM "
+    "rounds, and every document's piece sequence + md5 fingerprint "
+    "off-Spark (memoized reference parquet; only the test-pinned Viterbi "
+    "word kernel is shared — the zlib precedent). Library: "
+    "operators.lm.train_unigram_lm / unigram_encode.",
 )
 def lm_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, "documents")["documents"]
