@@ -4,6 +4,9 @@ axis-aligned boxes with analytic expected values."""
 
 from __future__ import annotations
 
+import hashlib
+from typing import Any
+
 from pyspark.sql import DataFrame
 
 from vlm_data_pipeline_spark.schemas import FRAME
@@ -104,3 +107,29 @@ FIXTURE_FRAMES = [
 
 def fixture_frames(spark) -> DataFrame:
     return spark.createDataFrame(FIXTURE_FRAMES, schema=FRAME)
+
+
+def fake_image_decoder(asset_id: str, payload: bytes) -> dict[str, Any]:
+    """Deterministic image-decoder stand-in for the injectable decode seam:
+    dims/luma derived from the payload digest, no image library."""
+    h = hashlib.md5(payload or b"").digest()
+    return {
+        "width": 64 + h[0] % 192,
+        "height": 64 + h[1] % 192,
+        "channels": 1 + h[2] % 4,
+        "mean_luma": round(h[3] / 255.0, 6),
+    }
+
+
+def fake_audio_decoder(asset_id: str, payload: bytes) -> dict[str, Any]:
+    """Deterministic audio-decoder stand-in: features from the payload
+    digest, no decode."""
+    h = hashlib.md5(payload or b"").digest()
+    return {
+        "sample_rate": 8000 * (1 + h[0] % 6),
+        "n_channels": 1 + h[1] % 2,
+        "n_frames": 1000 + h[2] * 64,
+        "duration_s": round((1000 + h[2] * 64) / (8000 * (1 + h[0] % 6)), 6),
+        "rms": round(h[3] / 512.0, 6),
+        "peak": round(h[4] / 256.0, 6),
+    }

@@ -297,6 +297,24 @@ def test_train_bpe_local_matches_spark_loop(spark):
     assert lm.train_bpe(docs1, 50) == lm.train_bpe_iterative(docs1, 50)
 
 
+def test_train_bpe_non_bmp_word_matches_spark_loop(spark):
+    """A non-BMP character (an emoji, a surrogate pair in Java) is ONE
+    symbol on both trainers: the same merges, and the emoji fuses whole."""
+    from vlm_data_pipeline_spark.operators import lm
+
+    corpus = spark.createDataFrame(
+        [(1, "a\U0001F600b a\U0001F600b x\U0001F600\U0001F600 ab")],
+        "doc_id long, text string",
+    )
+    split = corpus.select(
+        F.explode(F.split("text", " ")).alias("w")
+    ).select(lm._chars(F.col("w")).alias("c"))
+    assert [r.c for r in split.collect()][2] == ["x", "\U0001F600", "\U0001F600"]
+    local = lm.train_bpe(corpus, num_merges=6)
+    assert local == lm.train_bpe_iterative(corpus, num_merges=6)
+    assert local[0] == ("a", "\U0001F600")
+
+
 def test_train_bpe_production_merge_count(spark):
     """num_merges at production scale (2k here; the shape is identical
     at 32k) must cost ONE Spark job — the word-frequency aggregation —
@@ -597,3 +615,35 @@ def test_unigram_seed_vocab_no_global_window(spark):
     plan = seed._jdf.queryExecution().executedPlan().toString()
     assert digest(plan)["global_windows"] == 0, plan
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_unigram_word_table_spread_and_model_unchanged(spark, monkeypatch):
+    """The persisted word table spans spark.sql.shuffle.partitions
+    partitions (not the single partition the top-K limit leaves), and the
+    model is identical to training on one partition: piece counts are
+    integer sums, so layout cannot move a log-prob."""
+    from vlm_data_pipeline_spark.operators import lm
+
+    docs = spark.createDataFrame(
+        [(i, f"abab abc baba w{i % 7} cab{i % 3}") for i in range(40)],
+        "doc_id long, text string",
+    ).repartition(4)
+    seen = []
+    seed_vocab = lm.unigram_seed_vocab
+
+    def spy(*args, words=None, **kw):
+        seen.append(words.rdd.getNumPartitions())
+        return seed_vocab(*args, words=words, **kw)
+
+    monkeypatch.setattr(lm, "unigram_seed_vocab", spy)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "6")
+        spread = lm.train_unigram_lm(docs, vocab_size=24, iters=2, max_piece_len=4)
+        spark.conf.set(key, "1")
+        single = lm.train_unigram_lm(docs, vocab_size=24, iters=2, max_piece_len=4)
+    finally:
+        spark.conf.set(key, old)
+    assert seen == [6, 1]
+    assert spread == single

@@ -8,9 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from vlm_data_pipeline_spark.operators.decomposition import (
+    _moments_inrow,
     pca_fit,
     pca_project,
-    scatter_upper_triangle,
 )
 
 
@@ -77,19 +77,33 @@ def test_pca_project_zero_shuffle(spark):
     assert "Exchange" not in plan and "Join" not in plan
 
 
-def test_scatter_aggregate_shape_and_values(spark):
-    """The exchange carries only triangle keys (d(d+1)/2 rows total)
-    with map-side partial combine; values are exact sums of products."""
-    mat = [[1.0, 2.0], [3.0, 4.0]]
-    out = scatter_upper_triangle(_df(spark, mat))
-    rows = {r.idx: r.s for r in out.collect()}
-    # triangle order: (0,0), (0,1), (1,1)
-    assert rows == {0: 1.0 + 9.0, 1: 2.0 + 12.0, 2: 4.0 + 16.0}
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "partial_sum" in plan
-    # one shuffle stage (AQE may print the exchange node twice — count
-    # materialized stages, not string occurrences)
-    assert plan.count("ShuffleQueryStage") == 1, plan[:1500]
+def test_scatter_aggregate_shape_and_values(spark, monkeypatch):
+    """The in-row fit's exchange carries only moment keys (d(d+1)/2
+    triangle slots + d sums) with map-side partial combine; values are
+    exact sums of products."""
+    base = _df(spark, [[1.0, 2.0], [3.0, 4.0]])
+    frame_cls = type(base)
+    plans = []
+    collect = frame_cls.collect
+
+    def spy(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    got = _moments_inrow(base, "embedding")
+    # triangle order (0,0), (0,1), (1,1), then the coordinate sums
+    assert got == [
+        (1.0 + 9.0, 2), (2.0 + 12.0, 2), (4.0 + 16.0, 2), (4.0, 2), (6.0, 2)
+    ]
+    (plan,) = plans
+    final = plan.split("== Initial Plan ==")[0]
+    assert "partial_sum" in final
+    # one hash exchange for the aggregation, one range exchange for the
+    # ordered collect — nothing corpus-shaped
+    assert final.count("Exchange hashpartitioning") == 1, final[:1500]
+    assert final.count("ShuffleQueryStage") == 2, final[:1500]
 
 
 def test_pca_fit_validation(spark):

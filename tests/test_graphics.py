@@ -17,7 +17,6 @@ from vlm_data_pipeline_spark.functions.graphics import (
     TOP_FACE,
     blank_canvas,
     draw_line,
-    draw_marker,
     draw_rect,
     draw_wireframe,
     encode_png_rgb,
@@ -88,14 +87,6 @@ def test_draw_rect_outline_only():
     assert tuple(img[2, 2]) == (255, 255, 255)  # interior untouched
 
 
-def test_draw_marker_disc():
-    img = blank_canvas(7, 7)
-    draw_marker(img, (3, 3), (10, 20, 30), radius=1)
-    assert tuple(img[3, 3]) == (10, 20, 30)
-    assert tuple(img[3, 4]) == (10, 20, 30)
-    assert tuple(img[4, 4]) == (255, 255, 255)  # corner outside the disc
-
-
 def test_wireframe_skips_null_vertices():
     img = blank_canvas(10, 10)
     kps = [[1.0, 1.0]] + [None] * 7  # only vertex 0 projectable
@@ -105,12 +96,12 @@ def test_wireframe_skips_null_vertices():
 
 
 def test_projection_column_matches_numpy(spark):
-    """project_vertices_px (pure columns over box_vertices) equals the
-    numpy pinhole over the same rotated lattice."""
+    """The render path's projection (pure columns over box_vertices)
+    equals the numpy pinhole over the same rotated lattice."""
     from pyspark.sql import functions as F
 
     from vlm_data_pipeline_spark.functions.geometry import _CORNER_SIGNS
-    from vlm_data_pipeline_spark.functions.graphics import project_vertices_px
+    from vlm_data_pipeline_spark.functions.graphics import _project_vertices_flat
 
     box = {
         "x": 0.4, "y": -0.2, "z": 3.0, "xl": 0.8, "yl": 0.6, "zl": 0.4,
@@ -131,7 +122,7 @@ def test_projection_column_matches_numpy(spark):
         ).alias("camera"),
     )
     got = df.select(
-        project_vertices_px(F.col("box"), F.col("camera")).alias("k")
+        _project_vertices_flat(F.col("box"), F.col("camera")).alias("k")
     ).collect()[0]["k"]
 
     cp, sp = math.cos(box["pitch"]), math.sin(box["pitch"])
@@ -150,15 +141,14 @@ def test_projection_column_matches_numpy(spark):
         v = ctr + R @ (np.array(signs) * half)
         u_exp = 500.0 * v[0] / v[2] + 320.0
         v_exp = 500.0 * v[1] / v[2] + 240.0
-        assert got[i] is not None
-        assert got[i][0] == pytest.approx(u_exp, abs=1e-9)
-        assert got[i][1] == pytest.approx(v_exp, abs=1e-9)
+        assert got[2 * i] == pytest.approx(u_exp, abs=1e-9)
+        assert got[2 * i + 1] == pytest.approx(v_exp, abs=1e-9)
 
 
 def test_projection_nulls_behind_camera(spark):
     from pyspark.sql import functions as F
 
-    from vlm_data_pipeline_spark.functions.graphics import project_vertices_px
+    from vlm_data_pipeline_spark.functions.graphics import _project_vertices_flat
 
     df = spark.range(1).select(
         F.struct(
@@ -175,11 +165,12 @@ def test_projection_nulls_behind_camera(spark):
         ).alias("camera"),
     )
     kps = df.select(
-        project_vertices_px(F.col("box"), F.col("camera")).alias("k")
+        _project_vertices_flat(F.col("box"), F.col("camera")).alias("k")
     ).collect()[0]["k"]
-    # z = ±0.5 corners: the four at z=-0.5 (and z=+0.5 > z_min=0.1 stay)
-    assert sum(k is None for k in kps) == 4
-    assert sum(k is not None for k in kps) == 4
+    # z = ±0.5 corners: the four at z=-0.5 are NaN (z=+0.5 > z_min=0.1 stay)
+    behind = [math.isnan(kps[2 * i]) and math.isnan(kps[2 * i + 1]) for i in range(8)]
+    assert len(kps) == 16 and sum(behind) == 4
+    assert all(math.isfinite(k) for i in range(8) if not behind[i] for k in kps[2 * i : 2 * i + 2])
 
 
 def test_render_annotations_end_to_end(spark, sf_dir):

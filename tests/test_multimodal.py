@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.fixtures import fake_image_decoder
 from vlm_data_pipeline_spark.sources import multimodal as M
 
 
@@ -30,15 +31,6 @@ def _assets(spark):
     return df.withColumn("meta", meta)
 
 
-def test_binary_stats_pure_relational(spark):
-    out = M.binary_stats(_assets(spark)).collect()
-    assert len(out) == 12
-    for r in out:
-        assert r.n_bytes > 0 and len(r.checksum) == 32
-        want = "large" if r.n_bytes > 400 else "medium" if r.n_bytes > 200 else "small"
-        assert r.size_class == want
-
-
 def test_decode_images_default_raises_without_pil(spark):
     with pytest.raises(Exception) as exc:
         M.decode_images(_assets(spark)).collect()
@@ -46,12 +38,12 @@ def test_decode_images_default_raises_without_pil(spark):
 
 
 def test_decode_images_with_injected_decoder(spark):
-    out = M.decode_images(_assets(spark), decoder=M.fake_image_decoder).collect()
+    out = M.decode_images(_assets(spark), decoder=fake_image_decoder).collect()
     assert len(out) == 12
     by_id = {r.asset_id: r for r in out}
     # deterministic: same payload → same decode, independent of partitioning
     out2 = M.decode_images(
-        _assets(spark).repartition(7), decoder=M.fake_image_decoder
+        _assets(spark).repartition(7), decoder=fake_image_decoder
     ).collect()
     for r in out2:
         prev = by_id[r.asset_id]
@@ -59,15 +51,6 @@ def test_decode_images_with_injected_decoder(spark):
             prev.width, prev.height, prev.channels, prev.mean_luma
         )
     assert all(64 <= r.width <= 255 and 1 <= r.channels <= 4 for r in out)
-
-
-def test_extract_image_features_shape_and_norm(spark):
-    out = M.extract_image_features(_assets(spark)).collect()
-    assert len(out) == 12
-    for r in out:
-        assert len(r.feature) == M.FEATURE_DIM
-        norm = sum(x * x for x in r.feature) ** 0.5
-        assert abs(norm - 1.0) < 1e-3  # unit vectors → ANN/cosine ready
 
 
 def test_resize_plan(spark):

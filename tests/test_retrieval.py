@@ -10,6 +10,11 @@ import pytest
 from vlm_data_pipeline_spark.operators import retrieval
 
 
+def _idf(n_docs: int, df: int) -> float:
+    """The Lucene idf the BM25 column expression computes, as a scalar."""
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
 def _docs(spark):
     rows = [
         (1, "spark join window"),
@@ -36,7 +41,7 @@ def test_bm25_hand_computed(spark):
         for r in retrieval.bm25_scores(docs, ["spark"]).collect()
     }
     n, avgdl = 4, (3 + 3 + 3 + 4) / 4.0
-    idf = retrieval.idf_of(n, 3)
+    idf = _idf(n, 3)
 
     def expect(tf, dl):
         return idf * tf * 2.2 / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
@@ -86,7 +91,7 @@ def test_bm25_idf_penalizes_common_terms(spark):
     }
     # doc 0 has both; its margin over the common-only docs is the rare idf
     assert got[0] > max(v for k, v in got.items() if k != 0)
-    assert retrieval.idf_of(6, 6) < retrieval.idf_of(6, 1)
+    assert _idf(6, 6) < _idf(6, 1)
 
 
 def test_corpus_stats_tokenizes_once(spark):

@@ -29,11 +29,10 @@ def test_bloom_no_false_negatives(spark):
 
 def test_bloom_rejects_most_nonmembers_when_sized(spark):
     """A properly sized filter (fp ≈ 0.2%) rejects all 200 probes of a
-    disjoint key set here; the estimate helper agrees it's small."""
+    disjoint key set here."""
     members = _docs(spark, [f"in-{i}" for i in range(50)])
     others = _docs(spark, [f"out-{i}" for i in range(200)])
     m, k = 4096, 4
-    assert sketch.bloom_fp_rate(m, k, 50) < 0.002
     pos = sketch.bloom_build(members, "text", m, k)
     out = sketch.bloom_probe_join(others, pos, "text", m, k)
     assert out.filter(F.col("bloom_hit")).count() == 0

@@ -142,7 +142,7 @@ def _expected_mlp(reps_rows, weights, vocab):
     the same numpy ops the workers run; outputs must agree to the bit."""
     import pandas as pd
 
-    from vlm_data_pipeline_spark.enrich import tinymlp
+    from tests import tinymlp
 
     pdf = pd.DataFrame(
         {
@@ -166,7 +166,7 @@ def _expected_mlp(reps_rows, weights, vocab):
 
 
 def test_mlp_classifier_through_build_codebook(spark):
-    from vlm_data_pipeline_spark.enrich import tinymlp
+    from tests import tinymlp
     from vlm_data_pipeline_spark.enrich.codebook import LABEL_VOCAB
 
     frames = _mlp_frames(spark)
@@ -187,7 +187,7 @@ def test_mlp_two_stage_cascade_real_weights(spark):
     """Stage A (seed-0 MLP) accepts above tau_high; only its failures hit
     Stage B (seed-1 MLP, a genuinely different model). Accept sets must
     match the driver-side reference decision for every instance."""
-    from vlm_data_pipeline_spark.enrich import tinymlp
+    from tests import tinymlp
     from vlm_data_pipeline_spark.enrich.codebook import LABEL_VOCAB
 
     frames = _mlp_frames(spark)
@@ -226,7 +226,7 @@ def test_mlp_weights_artifact_round_trip(spark, tmp_path):
     shape (lazy per-worker load) classifies identically to in-memory."""
     import numpy as np
 
-    from vlm_data_pipeline_spark.enrich import tinymlp
+    from tests import tinymlp
 
     w = tinymlp.make_fixture_weights(seed=3)
     p = str(tmp_path / "probe.npz")
@@ -249,7 +249,7 @@ def test_mlp_weights_artifact_round_trip(spark, tmp_path):
 
 
 def test_mlp_worker_singleton_loads_once():
-    from vlm_data_pipeline_spark.enrich import tinymlp
+    from tests import tinymlp
 
     calls = []
 
@@ -265,7 +265,7 @@ def test_mlp_worker_singleton_loads_once():
 def test_mlp_classifier_arg_validation():
     import pytest as _pytest
 
-    from vlm_data_pipeline_spark.enrich import tinymlp
+    from tests import tinymlp
 
     with _pytest.raises(ValueError, match="exactly one"):
         tinymlp.mlp_classifier()

@@ -6,10 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vlm_data_pipeline_spark.operators.timeseries import (
-    time_bucket,
-    time_bucket_gapfill,
-)
+from vlm_data_pipeline_spark.operators.timeseries import time_bucket_gapfill
 
 
 def _events(spark):
@@ -70,14 +67,19 @@ def test_gapfill_validation_and_guard(spark):
 
 
 def test_time_bucket_primitive(spark):
+    """Bucket starts floor the epoch second to the bucket width: one
+    second either side of an hour boundary lands in adjacent buckets."""
     df = spark.createDataFrame(
-        [("2024-01-01 00:59:59",), ("2024-01-01 01:00:00",)], "s string"
-    ).select(F.col("s").cast("timestamp").alias("ts"))
+        [("k", "2024-01-01 00:59:59"), ("k", "2024-01-01 01:00:00")],
+        "k string, s string",
+    ).select("k", F.col("s").cast("timestamp").alias("ts"))
     got = [
-        r.b.isoformat()
-        for r in df.select(time_bucket(F.col("ts"), 3600).alias("b")).collect()
+        (r.bucket_start.isoformat(), r.n)
+        for r in time_bucket_gapfill(df, "ts", ["k"], 3600, {"n": F.count("*")})
+        .orderBy("bucket_start")
+        .collect()
     ]
-    assert got == ["2024-01-01T00:00:00", "2024-01-01T01:00:00"]
+    assert got == [("2024-01-01T00:00:00", 1), ("2024-01-01T01:00:00", 1)]
 
 
 def test_gapfill_plan_shape(spark):

@@ -121,10 +121,8 @@ def test_audio_features_stage(spark):
 
 
 def test_audio_features_injectable_and_non_wav_raises(spark):
-    from vlm_data_pipeline_spark.sources.multimodal import (
-        audio_features,
-        fake_audio_decoder,
-    )
+    from tests.fixtures import fake_audio_decoder
+    from vlm_data_pipeline_spark.sources.multimodal import audio_features
 
     assets = spark.createDataFrame(
         [("m1", bytearray(b"\xffmp3-ish"))], "asset_id string, payload binary"

@@ -1,19 +1,15 @@
-"""A real (tiny) numpy MLP behind the classifier seam — proof that the
-mapInPandas inference contract carries an actual numeric model, not just
-the deterministic stub.
+"""A real (tiny) numpy MLP behind the codebook classifier seam — the test
+fixture proving that the mapInPandas inference contract carries an actual
+numeric model, not just the deterministic stub.
 
 The reference's enrichment stages load CLIP/DINO/SAM checkpoints
-(build_enhanced_codebook.py:89-419); those weights cannot ship in this
-container (SURVEY §7.3), but the ENGINE-side obligations can be proven
-with any real model: weights loaded ONCE per python worker (executor
-singleton), features built per Arrow batch, a vectorized forward pass
-(batch matmuls, no per-row Python), bounded sub-batching, and artifact
-round-trip. This module provides exactly that with a seeded two-layer
-MLP over deterministic metadata features — swap :func:`make_fixture_weights`
-for a checkpoint loader and :func:`_featurize` for an image decoder and
-the seam is the production path. numpy is also the documented GPU-absent
-fallback: a deployment with torch+CUDA replaces the matmuls, nothing
-else changes.
+(build_enhanced_codebook.py:89-419); those weights cannot ship here, but
+the ENGINE-side obligations can be proven with any real model: weights
+loaded ONCE per python worker (executor singleton), features built per
+Arrow batch, a vectorized forward pass (batch matmuls, no per-row Python),
+bounded sub-batching, and artifact round-trip. A seeded two-layer MLP over
+deterministic metadata features does exactly that. Workers import this
+module by reference, so it must stay importable as ``tests.tinymlp``.
 """
 
 from __future__ import annotations
@@ -24,7 +20,7 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 
-from .codebook import LABEL_VOCAB
+from vlm_data_pipeline_spark.enrich.codebook import LABEL_VOCAB
 
 N_FEATURES = 32
 
@@ -56,8 +52,7 @@ def make_fixture_weights(
 
 def save_weights(weights: dict[str, np.ndarray], path: str) -> None:
     """Checkpoint artifact as .npz — the K4 codebook round-trip contract
-    for model weights (save → load → bit-identical outputs, pinned in
-    tests/test_sources_enrich.py)."""
+    for model weights (save → load → bit-identical outputs)."""
     np.savez(path, **weights)
 
 

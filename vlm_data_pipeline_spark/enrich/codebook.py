@@ -595,7 +595,9 @@ def refine_masks_from_pixels(
     """M5 with the real pixel kernel: crop rows carrying their mask PNG
     bytes → refined tight boxes. Same Arrow-batched mapInPandas seam as
     :func:`refine_masks`; pixels stay inside the stage, only the skinny
-    stats cross the shuffle boundary (the taskonomy F7 rule)."""
+    stats cross the shuffle boundary (the taskonomy F7 rule). SURVEY
+    §2.10 M5 (mask refinement), "a REAL pixel kernel behind the M5
+    mask-refinement seam"."""
     return crops.select(
         "instance_id", "x_min", "y_min", "x_max", "y_max", mask_col
     ).mapInPandas(

@@ -181,7 +181,9 @@ def box_vertices_flat_hof(box: Column) -> Column:
 
 
 def min_camera_vertex_distance(verts: Column) -> Column:
-    """Min distance from the camera (origin) to any vertex."""
+    """Min distance from the camera (origin) to any vertex — the
+    reference's vertex-min camera distance (SURVEY §2.9 F6,
+    geometry.py:165-189)."""
     return F.array_min(
         F.transform(
             verts, lambda v: F.sqrt(v[0] ** 2 + v[1] ** 2 + v[2] ** 2)
@@ -235,6 +237,8 @@ def strict_interval_relations(verts_a: Column, verts_b: Column) -> Column:
 
     Returns struct(depth_rel, horizontal_rel, vertical_rel), each nullable.
     Both vertex arrays are let-bound (each is referenced once per axis).
+    The reference's strict vertex-interval variant (SURVEY §2.9 F6,
+    geometry.py:222-269).
     """
 
     def mk(va: Column, vb: Column) -> Column:
@@ -362,6 +366,7 @@ def quaternion_to_euler_deg(w: Column, x: Column, y: Column, z: Column) -> Colum
     struct(pitch, yaw, roll) — the closed form of the reference's
     scipy ``Rotation.as_euler('xyz')`` call (utils.py:13-27), with the
     standard gimbal guard (|sin(yaw)| clamped to 1). Pure column math.
+    SURVEY §2.9 F3 (quaternion→Euler).
     """
     deg = 180.0 / 3.141592653589793
     # xyz-intrinsic: pitch = atan2(2(wx+yz), 1-2(x²+y²)),
@@ -385,7 +390,7 @@ def rotmat_to_euler_zyx_deg(m: Column) -> Column:
     """3×3 rotation matrix (array<array<double>>) → ZYX Euler degrees with
     the reference's gimbal-lock guard (hypersim_processor.py:166-184):
     when |m[2][0]| ≥ 1−1e−6, pitch collapses into roll.
-    Returns struct(pitch, yaw, roll)."""
+    Returns struct(pitch, yaw, roll). SURVEY §2.9 F3 (rotation-matrix→Euler)."""
     deg = 180.0 / 3.141592653589793
     sy = -m[2][0]
     locked = F.abs(m[2][0]) >= 1.0 - 1e-6
@@ -408,7 +413,7 @@ def invert_rigid(m: Column) -> Column:
     inverse = [Rᵀ | −Rᵀt; 0 1]. No Gaussian elimination, no UDF — nine
     transposed entries and three dot products, all codegen-able. (The
     reference calls np.linalg.inv on these matrices; rigid structure makes
-    the closed form exact and ~10× cheaper.)"""
+    the closed form exact and ~10× cheaper.) SURVEY §2.9 F4 (4×4 inverse)."""
 
     def mk(mm: Column) -> Column:
         r = [[mm[i][j] for j in range(3)] for i in range(3)]
@@ -427,7 +432,8 @@ def invert_rigid(m: Column) -> Column:
 
 def transform_point(m: Column, p: Column) -> Column:
     """Apply a 4×4 transform to a 3-vector (homogeneous w=1) → 3-vector.
-    The world↔camera point transform (utils.py:199-208) as column math."""
+    The world↔camera point transform (utils.py:199-208) as column math —
+    SURVEY §2.9 F4 (matrix-vector transforms)."""
 
     def mk(mm: Column, pp: Column) -> Column:
         return F.array(
@@ -443,7 +449,7 @@ def transform_point(m: Column, p: Column) -> Column:
 def scale_box(box: Column, factor: Column) -> Column:
     """Unit scaling (mm→m, asset-units→m, m→cm): centers AND dimensions
     multiply; angles are scale-invariant (sunrgbd_processor.py:199-200,
-    hypersim_processor.py:292-321)."""
+    hypersim_processor.py:292-321). SURVEY §2.9 F4 (unit scaling)."""
     return box.withField("x", box["x"] * factor).withField(
         "y", box["y"] * factor
     ).withField("z", box["z"] * factor).withField(

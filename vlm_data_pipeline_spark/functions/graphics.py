@@ -1,6 +1,5 @@
-"""Annotation rendering for visual debugging — wireframe 3D boxes, 2D
-rects, and keypoint markers rasterized onto frame images and written
-back as PNG bytes.
+"""Annotation rendering for visual debugging — wireframe 3D boxes and 2D
+rects rasterized onto frame images and written back as PNG bytes.
 
 Reference parity: ``objectron/dataset/graphics.py`` (draw box edges +
 front/top faces in distinct colors onto the frame via cv2) and
@@ -14,9 +13,9 @@ Spark-first split:
 
 - GEOMETRY stays JVM-side. Oriented box corners
   (:func:`..functions.geometry.box_vertices`) and the pinhole
-  projection to pixels (:func:`project_vertices_px` below) are pure
-  column expressions — fully codegen'd, null-propagating for
-  behind-camera vertices. The Python stage receives finished pixel
+  projection to pixels (:func:`_project_vertices_flat` below) are pure
+  column expressions — fully codegen'd, NaN for behind-camera
+  vertices. The Python stage receives finished pixel
   coordinates, never camera math.
 - RASTERIZATION is an Arrow-batched ``mapInPandas`` stage: per frame,
   decode the source PNG (or start from a blank canvas when the frame
@@ -205,26 +204,6 @@ def draw_rect(
         draw_line(img, a, b, color, thickness)
 
 
-def draw_marker(
-    img: np.ndarray,
-    p: tuple[float, float],
-    color: tuple[int, int, int],
-    radius: int = 2,
-) -> None:
-    """Filled disc (the reference's cv2.circle keypoint dots)."""
-    x, y = float(p[0]), float(p[1])
-    if not (np.isfinite(x) and np.isfinite(y)):
-        return
-    h, w = img.shape[:2]
-    cx, cy = int(round(x)), int(round(y))
-    for dy in range(-radius, radius + 1):
-        for dx in range(-radius, radius + 1):
-            if dx * dx + dy * dy <= radius * radius:
-                px, py = cx + dx, cy + dy
-                if 0 <= px < w and 0 <= py < h:
-                    img[py, px] = color
-
-
 def draw_wireframe(
     img: np.ndarray,
     kps: Any,
@@ -270,29 +249,15 @@ def draw_wireframe(
 # ---------------------------------------------------------------------------
 
 
-def project_vertices_px(box: Column, camera: Column, z_min: float = 0.1) -> Column:
-    """Pinhole-project the 8 ORIENTED box corners to pixel coordinates:
-    u = fx·x/z + cx, v = fy·y/z + cy — an 8×2 array<array<double>>
-    column with NULL in place of any vertex at z ≤ ``z_min`` (the same
+def _project_vertices_flat(box: Column, camera: Column, z_min: float = 0.1) -> Column:
+    """Pinhole-project the 8 ORIENTED box corners to pixel coordinates,
+    u = fx·x/z + cx, v = fy·y/z + cy, as a flat 16-double array
+    (u0,v0,u1,v1,…) with NaN for any vertex at z ≤ ``z_min`` (the same
     near-plane rule project_box_to_2d applies). Orientation comes from
     geometry.box_vertices (the full Rz·Ry·Rx lattice), unlike the
     axis-aligned P9 rect — a wireframe drawn from axis-aligned corners
-    would visibly lie about yaw."""
-    fx, fy = camera["fx"], camera["fy"]
-    cx, cy = camera["cx"], camera["cy"]
-    return F.transform(
-        box_vertices(box),
-        lambda v: F.when(
-            v[2] > F.lit(z_min),
-            F.array(fx * v[0] / v[2] + cx, fy * v[1] / v[2] + cy),
-        ),
-    )
-
-
-def _project_vertices_flat(box: Column, camera: Column, z_min: float = 0.1) -> Column:
-    """:func:`project_vertices_px` flattened to a 16-double array
-    (u0,v0,u1,v1,…) with NaN marking behind-camera vertices. This is
-    the shape that CROSSES THE ARROW BOUNDARY: a box list column would
+    would visibly lie about yaw. The flat shape is the one that
+    CROSSES THE ARROW BOUNDARY: a box list column would
     otherwise be array<array<array<double>>>, and this environment's
     Arrow deserializer SEGFAULTS the Python worker on empty or null
     3-level-nested arrays (reproduced minimally: a bare
@@ -341,7 +306,7 @@ def render_annotations(
     draw_annotation_on_image, as a bounded debug sink.
 
     Input: the canonical frames schema. 3D boxes are projected JVM-side
-    (:func:`project_vertices_px` over the camera struct) so the Arrow
+    (:func:`_project_vertices_flat` over the camera struct) so the Arrow
     stage only ever sees pixel coordinates; 2D boxes pass through as
     rects. When ``pixels_col`` names a binary PNG column the boxes are
     drawn over the decoded frame; otherwise over a white canvas sized

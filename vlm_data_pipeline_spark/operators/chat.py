@@ -213,7 +213,8 @@ def parse_conversation_json(json_col: Column) -> Column:
     ``[{"role": …, "content": …}, …]`` or an object wrapping it under
     ``messages``; anything unparseable yields NULL (feed to
     :func:`valid_conversation`, which rejects NULL turns via its
-    flags). Pure ``from_json`` — JVM-side, no UDF."""
+    flags). Pure ``from_json`` — JVM-side, no UDF. SURVEY, "JSONL
+    conversation ingestion via pure from_json"."""
     # discriminate on the first character rather than coalescing: the
     # permissive from_json parses an OBJECT against an array schema as
     # [null-struct] (not NULL), which would shadow the wrapped parse

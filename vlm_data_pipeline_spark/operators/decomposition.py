@@ -112,36 +112,6 @@ def _gram_moment_rows(base: DataFrame, vec_col: str) -> DataFrame:
     return base.mapInPandas(part, "m array<double>")
 
 
-def scatter_upper_triangle(
-    embeddings: DataFrame, vec_col: str = "embedding"
-) -> DataFrame:
-    """(idx, s) rows of the un-centered scatter matrix Σ v·vᵀ (upper
-    triangle, row-major triangle indexing) plus the component sums —
-    the distributed core of the fit, exposed separately so it can be
-    value-checked. Exchange carries ≤ d·(d+1)/2 rows per partition
-    after map-side combine."""
-    v = F.col(vec_col)
-    d = F.size(v)
-    tri = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), d - 1),
-            lambda i: F.transform(
-                F.sequence(i, d - 1),
-                lambda j: (
-                    F.element_at(v, i + 1).cast("double")
-                    * F.element_at(v, j + 1).cast("double")
-                ),
-            ),
-        )
-    )
-    return (
-        embeddings.filter(v.isNotNull())
-        .select(F.posexplode(tri).alias("idx", "p"))
-        .groupBy("idx")
-        .agg(F.sum("p").alias("s"))
-    )
-
-
 def _moments_inrow(base: DataFrame, vec_col: str) -> list[tuple[float, int]]:
     """(sum, count) per moment slot via the in-row expansion — each row
     expands to its d·(d+1)/2 upper-triangle products FOLLOWED by its d

@@ -73,13 +73,6 @@ def _perm_coeffs(k: int) -> list[tuple[int, int]]:
     return [(1_000_003 * j + 777_767, 999_983 * j + 37) for j in range(k)]
 
 
-def minhash_signature(shingles: Column, k: int = 12) -> Column:
-    """k-permutation MinHash over a shingle array as one column expression:
-    h = hash32(shingle) once, then sig[j] = min over shingles of
-    (a_j·h + b_j) mod P. Runs entirely in codegen — no shuffle, no UDF."""
-    return minhash_signature_from_hashes(F.transform(shingles, hash32), k)
-
-
 def minhash_signature_from_hashes(shingle_hashes: Column, k: int = 12) -> Column:
     """Signature from pre-hashed shingles.
 

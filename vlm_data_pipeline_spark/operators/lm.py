@@ -191,6 +191,9 @@ def score_corpus(
       groupBy(id) carrying only (id, partial sum, n). Identical scores
       (the same add-one formula), shuffle bounded by documents, never by
       the model.
+
+    SURVEY: "score_corpus auto-falls back to a broadcast-join scoring
+    path with bit-identical scores".
     """
     if len(model.unigrams) + len(model.bigrams) <= MAP_LITERAL_LIMIT:
         return docs.select(
@@ -252,6 +255,13 @@ def _word_freqs(corpus: DataFrame, text_col: str, max_words: int) -> DataFrame:
     )
 
 
+def _chars(word: Column) -> Column:
+    """A word as its array of characters, one element per code point:
+    Java's ``.`` matches a surrogate pair whole, so a non-BMP character
+    (an emoji) stays one symbol, as it is in Python's ``list(word)``."""
+    return F.regexp_extract_all(word, F.lit("(?s)."), 0)
+
+
 def symbol_pair_counts(words: DataFrame) -> DataFrame:
     """(a, b, count) for adjacent SYMBOL pairs across the word table,
     weighted by word frequency — one BPE statistics pass as a pure
@@ -284,7 +294,7 @@ def _merge_syms(syms: Column, a: str, b: str) -> Column:
     (the BPE rule: after 'a a' merges in 'a a a', the remaining 'a'
     cannot re-merge with the new 'aa' in the same step) — an in-row fold
     that either appends the symbol or fuses it with the accumulator's
-    tail."""
+    tail. Part of the test reference :func:`train_bpe_iterative`."""
     merged = F.lit(a + b)
 
     def step(acc: Column, s: Column) -> Column:
@@ -437,7 +447,7 @@ def train_bpe_iterative(
     (same merges to the last tie-break, tests/test_bpe.py); DEMO-SCALE
     ONLY for num_merges (dozens of iterations, not 32k — one cluster
     job per merge), which is why :func:`train_bpe` no longer routes
-    through it.
+    through it. A test reference: nothing in the engine calls it.
     """
     if num_merges < 1:
         raise ValueError("num_merges must be >= 1")
@@ -447,7 +457,7 @@ def train_bpe_iterative(
     # driver heap. Checkpointing truncates lineage each step, the
     # standard remedy for driver-coordinated iterative refinement.
     words = _word_freqs(corpus, text_col, max_words).select(
-        "freq", F.split(F.col("w"), "(?!^)(?=.)").alias("syms")
+        "freq", _chars(F.col("w")).alias("syms")
     ).localCheckpoint(eager=True)
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):
@@ -741,8 +751,14 @@ def train_unigram_lm(
         raise ValueError("iters must be >= 1")
     # ONE corpus pass builds the word table; the seed-vocab substring
     # statistics AND every EM round reuse it from cache (vocab-capped,
-    # so the cache is dimension-sized)
-    words = _word_freqs(corpus, text_col, max_words).persist()
+    # so the cache is dimension-sized). The top-K limit leaves it in one
+    # partition; spread it so each E-step segments in parallel.
+    spark = corpus.sparkSession
+    words = (
+        _word_freqs(corpus, text_col, max_words)
+        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "w")
+        .persist()
+    )
     try:
         seed = unigram_seed_vocab(
             corpus, vocab_size, max_piece_len, text_col, max_words, words=words
@@ -753,7 +769,7 @@ def train_unigram_lm(
         model = {r.piece: math.log(r.freq / total0) for r in seed}
         chars = {r.piece for r in seed if len(r.piece) == 1}
         for _ in range(iters):
-            encode = _viterbi_encoder(words.sparkSession, model, max_piece_len)
+            encode = _viterbi_encoder(spark, model, max_piece_len)
             counts = (
                 words.select("freq", F.explode(encode(F.col("w"))).alias("piece"))
                 .groupBy("piece")

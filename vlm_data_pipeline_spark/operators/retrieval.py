@@ -26,8 +26,6 @@ count) pairs only.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,7 +37,8 @@ def doc_frequencies(
 ) -> DataFrame:
     """(term, df) over the corpus: the number of DISTINCT documents
     containing each whitespace token. Explode ships each doc's distinct
-    terms once; the count aggregates with map-side partial combine."""
+    terms once; the count aggregates with map-side partial combine.
+    The offline-IDF table of SURVEY, "BM25 retrieval scoring"."""
     return (
         docs.select(
             F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term")
@@ -136,7 +135,7 @@ def bm25_topk(
     depend on accumulation order, and the id tie-break makes the result
     engine-stable (same rule as the index path, so the two paths return
     identical rows). The LIMIT-under-sort plan is TakeOrderedAndProject
-    (no global sort)."""
+    (no global sort). SURVEY, "BM25 retrieval scoring"."""
     if k <= 0:
         raise ValueError("k must be positive")
     return (
@@ -146,12 +145,6 @@ def bm25_topk(
         .limit(k)
         .drop("_sk")
     )
-
-
-def idf_of(n_docs: int, df: int) -> float:
-    """Reference scalar for tests: the same Lucene idf the column
-    expression computes."""
-    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
 # ---------------------------------------------------------------------------

@@ -585,7 +585,8 @@ def train_pq_codebooks(
     the lowest centroid index. Returns codebooks[j][c] = subvector, the
     ``codebooks`` input of :func:`pq_ann_topk`. (Trained centroids are
     not SQL-re-derivable — the driver oracle covers the seeded variant;
-    recall with trained codebooks is pinned in pytest.)"""
+    recall with trained codebooks is pinned in pytest.) SURVEY, the
+    "sample-trained Lloyd path" of product-quantization ANN."""
     import numpy as np
 
     rows = (

@@ -141,7 +141,9 @@ def bloom_merge_stores(a: DataFrame, b: DataFrame) -> DataFrame:
     along, so a merge of stores built under DIFFERENT parameters leaves
     mixed metadata rows that the next probe's assertion rejects instead
     of silently leaking false negatives. (Unlike HLL, the merge is
-    exact: the set of set bits after any merge order is identical.)"""
+    exact: the set of set bits after any merge order is identical.) The
+    Bloom store and its (m, k) consistency guard, SURVEY round-6 third
+    wave."""
     return a.unionByName(b).distinct()
 
 
@@ -268,13 +270,6 @@ def bloom_probe_broadcast(
     return probes.withColumn("bloom_hit", _probe(F.col(key_col)))
 
 
-def bloom_fp_rate(m_bits: int, k_hashes: int, n_keys: int) -> float:
-    """The textbook (1 − e^{−kn/m})^k estimate — sizing helper."""
-    import math
-
-    return (1.0 - math.exp(-k_hashes * n_keys / m_bits)) ** k_hashes
-
-
 # ---------------------------------------------------------------------------
 # Count-Min sketch (Cormode & Muthukrishnan 2005)
 # ---------------------------------------------------------------------------
@@ -325,7 +320,8 @@ def countmin_build(
 
 def countmin_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     """Cell-wise sum — exact under any merge order/batching (unlike the
-    HLL store's estimator, CM cells are plain integer mass)."""
+    HLL store's estimator, CM cells are plain integer mass). The
+    incremental store behind SURVEY's "streaming Count-Min ingestion"."""
     return (
         a.unionByName(b).groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
     )
@@ -388,7 +384,8 @@ def hll_merge_stores(store: DataFrame, batch: DataFrame, group_col: str) -> Data
     depend on batching — so merged-store, re-sketched, and even
     differently-ordered merges can disagree by a few counts (all inside
     the error envelope; pytest-pinned within tolerance). Never compare
-    estimates from different ingestion histories for equality."""
+    estimates from different ingestion histories for equality. The
+    mergeable HyperLogLog sketch store of SURVEY's round-6 third wave."""
     return (
         store.unionByName(batch)
         .groupBy(group_col)

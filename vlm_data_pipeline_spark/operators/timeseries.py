@@ -34,15 +34,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def time_bucket(ts: Column, bucket_seconds: int) -> Column:
-    """Bucket start (timestamp) for an event time — floor of the epoch
-    second to the bucket width, the time_bucket() primitive."""
-    epoch = F.unix_timestamp(ts)
-    return F.timestamp_seconds(
-        (F.floor(epoch / F.lit(bucket_seconds)) * bucket_seconds).cast("long")
-    )
-
-
 def time_bucket_gapfill(
     events: DataFrame,
     ts_col: str,

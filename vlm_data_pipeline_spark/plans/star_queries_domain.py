@@ -1938,7 +1938,7 @@ def eval_detection_ap_exact_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Visualization/debug sink (reference objectron/dataset/graphics.py, "
     "visualize_enhanced_results.py): render a bounded, deterministic "
     "sample of frames' 3D boxes as wireframe PNGs — geometry projected "
-    "JVM-side (functions.graphics.project_vertices_px over "
+    "JVM-side (functions.graphics._project_vertices_flat over "
     "geometry.box_vertices), rasterization + PNG encode in one "
     "Arrow-batched mapInPandas stage. limit() runs before any pixel "
     "work, so cost is O(max_frames) at any corpus size. Values pinned "

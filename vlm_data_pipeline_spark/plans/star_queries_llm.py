@@ -94,7 +94,7 @@ _MINHASH_K, _MINHASH_BANDS, _MINHASH_R = 12, 4, 3
 # dedup pass owns those). Mirrors operators.dedup's max_bucket default.
 _MINHASH_MAX_BUCKET = 256
 # One hash32 per shingle + affine permutations (a_j·h + b_j) mod 2^61−1,
-# mirroring operators.dedup.minhash_signature / _perm_coeffs exactly.
+# mirroring operators.dedup.minhash_signature_from_hashes / _perm_coeffs exactly.
 _D_SIG = (
     f"list_transform(range(0, {_MINHASH_K}), j -> list_min(list_transform(sh,"
     f" s -> ({_d_hash32('s')} * (1000003 * j + 777767)"
@@ -2155,11 +2155,11 @@ ORDER BY count DESC, a ASC, b ASC LIMIT 20
     "Library: operators.lm.train_bpe / symbol_pair_counts.",
 )
 def lm_bpe_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.lm import _word_freqs, symbol_pair_counts
+    from ..operators.lm import _chars, _word_freqs, symbol_pair_counts
 
     docs = load_tables(spark, sf_dir, "documents")["documents"]
     words = _word_freqs(docs, "text", 65536).select(
-        "freq", F.split(F.col("w"), "(?!^)(?=.)").alias("syms")
+        "freq", _chars(F.col("w")).alias("syms")
     )
     return (
         symbol_pair_counts(words)

@@ -16,10 +16,33 @@ file-split size are Spark's defaults and are inherited, not set.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_JVM_MEMORY = re.compile(r"^[1-9][0-9]*[kmgtKMGT]$")
+
+
+def _env_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` (default 32), checked before any JVM starts:
+    Spark reports a bad core count only as an opaque master-URL error."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not raw.strip().isdecimal() or int(raw) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return int(raw)
+
+
+def _env_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` (default 8g) as a JVM memory size such as
+    ``512m`` or ``8g``; a bad value otherwise surfaces only as
+    ``JAVA_GATEWAY_EXITED``."""
+    raw = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    if not _JVM_MEMORY.fullmatch(raw):
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM must be a JVM memory size like 512m or 8g, "
+            f"got {raw!r}"
+        )
+    return raw
 
 
 def _worker_pythonpath() -> str:
@@ -44,7 +67,10 @@ def get_spark(
     deployment overrides ``spark.sql.shuffle.partitions`` (or any other
     setting) through ``extra_conf``.
     """
-    cpus = cpus or DEFAULT_CPUS
+    cpus = _env_cpus() if cpus is None else cpus
+    if cpus < 1:
+        raise ValueError(f"cpus must be a positive integer, got {cpus}")
+    driver_memory = _env_driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -57,7 +83,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         # the driver's events.parquet carries TIMESTAMP(NANOS) which Spark
         # refuses by default; read as long and convert at the source wrapper

@@ -26,6 +26,8 @@ def read_frames(
     - ``_source_file`` via input_file_name() (data_loader.py:49 tag)
     - summary.json exclusion as a pushed filter (P2, data_loader.py:33-34)
     - head-N via limit (O2, data_loader.py:36-38) — lazy, not a full load
+
+    The reference's unified-JSON frame loader, SURVEY §2.1 S1.
     """
     df = (
         spark.read.schema(FRAME)

@@ -1,5 +1,5 @@
 """Multimodal binary columns: image/audio/video as opaque ``binary`` with
-typed metadata, plus the decode / feature-extract / resize / frame-sample
+typed metadata, plus the decode / feature / resize / frame-sample
 stages a 100 TB training-data pipeline runs over them.
 
 Design (SURVEY extension; the reference's nearest analogues are the
@@ -14,8 +14,7 @@ in-parser frame stride at objectron_processor.py:40-104):
   (``_asset_stage``), shared by every per-asset stage, with a pluggable
   per-asset decoder behind an injectable callable. The DEFAULT decoder is
   real for PNG payloads (``sources.png_codec``, stdlib zlib); other
-  formats need Pillow/cv2/ffmpeg (not installed here) via injection, with
-  ``fake_image_decoder`` as the deterministic test stand-in.
+  formats need Pillow/cv2/ffmpeg (not installed here) via injection.
 - Frame sampling splits into the relational part (which frame indices —
   sequence + explode, zero Python) and the decode part (fetching those
   frames — stubbed), mirroring the reference's in-parser stride.
@@ -23,13 +22,12 @@ in-parser frame stride at objectron_processor.py:40-104):
 Scale notes: payload columns ride in parquet/ORC binary; metadata-only
 queries never read them (column pruning), and
 ``spark.sql.files.maxPartitionBytes`` bounds decode-task input so a task's
-Arrow batches fit executor memory. Feature extraction emits fixed-width
-vectors — kilobytes into any downstream shuffle, never raw pixels.
+Arrow batches fit executor memory. Feature stages emit scalar features —
+bytes into any downstream shuffle, never raw pixels.
 """
 
 from __future__ import annotations
 
-import hashlib
 import math
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any
@@ -71,31 +69,7 @@ DECODED_IMAGE = T.StructType(
     ]
 )
 
-FEATURE_DIM = 64
-
-IMAGE_FEATURES = T.StructType(
-    [
-        T.StructField("asset_id", T.StringType(), False),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
-
 Decoder = Callable[[str, bytes], dict[str, Any]]
-
-
-def binary_stats(assets: DataFrame) -> DataFrame:
-    """Pure-relational payload audit: size, checksum, size class — never
-    decodes, so Catalyst prunes ``meta`` and codegen handles every row."""
-    n = F.coalesce(F.col("n_bytes"), F.length("payload").cast("long"))
-    return assets.select(
-        "asset_id",
-        "modality",
-        n.alias("n_bytes"),
-        F.md5(F.col("payload")).alias("checksum"),
-        F.when(n > 400, "large").when(n > 200, "medium").otherwise("small").alias(
-            "size_class"
-        ),
-    )
 
 
 def _asset_stage(
@@ -163,8 +137,7 @@ def _decode_pixels(payload: bytes):
 
 def _default_image_decoder(asset_id: str, payload: bytes) -> dict[str, Any]:
     """REAL default for PNG/BMP payloads via the stdlib codecs; other
-    formats need an injected decoder (``fake_image_decoder`` is the
-    deterministic test stand-in)."""
+    formats need an injected decoder."""
     img = _decode_pixels(payload)
     total = 0
     count = 0
@@ -182,18 +155,6 @@ def _default_image_decoder(asset_id: str, payload: bytes) -> dict[str, Any]:
     }
 
 
-def fake_image_decoder(asset_id: str, payload: bytes) -> dict[str, Any]:
-    """Deterministic stand-in: dims/luma derived from the payload digest —
-    stable across runs and processes, no image library required."""
-    h = hashlib.md5(payload or b"").digest()
-    return {
-        "width": 64 + h[0] % 192,
-        "height": 64 + h[1] % 192,
-        "channels": 1 + h[2] % 4,
-        "mean_luma": round(h[3] / 255.0, 6),
-    }
-
-
 def decode_images(
     assets: DataFrame, decoder: Decoder | None = None
 ) -> DataFrame:
@@ -202,6 +163,7 @@ def decode_images(
     Production body: per-executor singleton (import Pillow once per python
     worker), decode, downscale before emitting. Emits scalar features only
     — pixels stay inside the stage unless a downstream op needs them.
+    The codec-agnostic image decode stage (SURVEY, "S8 seam widened").
     """
     return _asset_stage(
         assets, DECODED_IMAGE, _one_row(decoder or _default_image_decoder)
@@ -292,20 +254,6 @@ def flac_roundtrip_features(samples_col):
     return rt(samples_col)
 
 
-def fake_audio_decoder(asset_id: str, payload: bytes) -> dict[str, Any]:
-    """Deterministic stand-in: features derived from the payload digest —
-    stable across runs, no decode."""
-    h = hashlib.md5(payload or b"").digest()
-    return {
-        "sample_rate": 8000 * (1 + h[0] % 6),
-        "n_channels": 1 + h[1] % 2,
-        "n_frames": 1000 + h[2] * 64,
-        "duration_s": round((1000 + h[2] * 64) / (8000 * (1 + h[0] % 6)), 6),
-        "rms": round(h[3] / 512.0, 6),
-        "peak": round(h[4] / 256.0, 6),
-    }
-
-
 def audio_features(
     assets: DataFrame, decoder: Decoder | None = None
 ) -> DataFrame:
@@ -313,30 +261,10 @@ def audio_features(
     :func:`decode_images`: Arrow-batched mapInPandas over the payloads,
     scalar features out (samples never leave the stage). Filter to
     ``modality == 'audio'`` upstream so Catalyst prunes image/video
-    payload bytes from the scan."""
+    payload bytes from the scan. The real audio modality (SURVEY,
+    "Audio made a REAL modality")."""
     return _asset_stage(
         assets, AUDIO_FEATURES, _one_row(decoder or _default_audio_decoder)
-    )
-
-
-def fake_feature_extractor(asset_id: str, payload: bytes) -> list[float]:
-    """FEATURE_DIM-float embedding derived from the payload digest."""
-    h = hashlib.sha256(payload or b"").digest()
-    raw = [h[i % len(h)] / 255.0 for i in range(FEATURE_DIM)]
-    norm = sum(x * x for x in raw) ** 0.5 or 1.0
-    return [round(x / norm, 6) for x in raw]
-
-
-def extract_image_features(
-    assets: DataFrame,
-    extractor: Callable[[str, bytes], list[float]] | None = None,
-) -> DataFrame:
-    """Feature-extract stage: payload → fixed FEATURE_DIM vector (the CLIP/
-    DINO embedding shape). Output is join-able with operators.similarity
-    (ANN) and operators.dedup (embedding cosine) unchanged."""
-    extract = extractor or fake_feature_extractor
-    return _asset_stage(
-        assets, IMAGE_FEATURES, lambda aid, p: [{"feature": extract(aid, p)}]
     )
 
 
@@ -345,7 +273,8 @@ def resize_plan(
 ) -> DataFrame:
     """Relational half of resize: compute target dims (aspect-preserving,
     longest side → max_side) from metadata only — no decode, pure codegen.
-    The pixel resample itself belongs in the decode stage's body."""
+    The pixel resample itself belongs in the decode stage's body.
+    SURVEY, "Real image resize stage" (the relational half)."""
     w = F.col("meta.width").cast("double")
     h = F.col("meta.height").cast("double")
     scale = F.least(F.lit(1.0), F.lit(float(max_side)) / F.greatest(w, h))
@@ -420,7 +349,8 @@ def resize_images(
     stage boundary only at the reduced size. ``on_error`` follows
     sources.robust: "skip" (production — ANY decode/resample failure
     drops the asset, one corrupt payload in a million must not kill a
-    1000-executor job) or "fail" (debugging/CI — raise)."""
+    1000-executor job) or "fail" (debugging/CI — raise). SURVEY, "Real
+    image resize stage"."""
     from .robust import guard
 
     decode = decoder or _decode_pixels
@@ -584,7 +514,8 @@ def video_features(
 ) -> DataFrame:
     """Video metadata stage — the video sibling of :func:`decode_images` /
     :func:`audio_features`: Arrow-batched mapInPandas, scalar features
-    out, planes never leave the stage."""
+    out, planes never leave the stage. SURVEY, "Video made a REAL
+    modality"."""
     return _asset_stage(
         assets, VIDEO_FEATURES, _one_row(decoder or _default_video_decoder)
     )
@@ -603,7 +534,7 @@ def video_frame_hashes(
     The default handles Y4M via ``sources.y4m_codec`` with the stride
     pushed into the decode and zero-copy luma hashing; compressed
     containers need an injected ``hasher`` (ffmpeg in production), same
-    seam as every other stage."""
+    seam as every other stage. SURVEY, "Video made a REAL modality"."""
     if stride < 1:
         raise ValueError("stride must be >= 1")
 
@@ -636,7 +567,8 @@ def perceptual_hashes(
 ) -> DataFrame:
     """Hash stage: payload → 64-bit perceptual hash (Arrow-batched
     mapInPandas, same shape as decode_images). Output joins into
-    :func:`phash_near_pairs` — the image sibling of text MinHash."""
+    :func:`phash_near_pairs` — the image sibling of text MinHash
+    (SURVEY, "Image perceptual-hash dedup")."""
     hash_fn = hasher or image_ahash_64
     return _asset_stage(
         assets, PHASH_SCHEMA, lambda aid, p: [{"phash": hash_fn(p)}]
@@ -818,7 +750,8 @@ def video_frame_luma(assets: DataFrame, stride: int = 1) -> DataFrame:
     luma) with luma = sum(Y plane) // n_pixels (INTEGER division: exact,
     engine-portable). The scalar series that drives
     :func:`scene_cuts`; same seam/stride contract as
-    :func:`video_frame_hashes`."""
+    :func:`video_frame_hashes`. The decode half of SURVEY's video family
+    (``video_scene_cuts``)."""
     if stride < 1:
         raise ValueError("stride must be >= 1")
     return _asset_stage(

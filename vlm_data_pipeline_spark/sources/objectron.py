@@ -363,7 +363,8 @@ def read_tf_example_frames(
     in-stage through the pure-Python wire reader (pbwire.iter_tfrecords +
     parse_tf_example). No tensorflow dependency anywhere.
     ``on_error='skip'`` drops corrupt FILES (whole record files, the
-    TFRecord framing's failure unit) instead of failing the job."""
+    TFRecord framing's failure unit) instead of failing the job.
+    SURVEY, "tf.Example/TFRecord ingestion on pbwire" (§2.11 tail)."""
     from .pbwire import iter_tfrecords
     from .robust import guard
 

@@ -67,7 +67,8 @@ def file_decode_errors(
     """Audit a binary tree: one row per file whose ``probe(path, content)``
     raises, with the exception text. The operational complement of
     ``on_error='skip'`` — run it as a query to know exactly what a
-    permissive ingest dropped and why."""
+    permissive ingest dropped and why. SURVEY, "decode-failure policy for
+    every binary source"."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
