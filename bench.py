@@ -91,7 +91,9 @@ def _foreign_jvms() -> int:
 
 def main() -> int | None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from vlm_data_pipeline_spark.session import _env_cpus
+
+    cpus = _env_cpus()
 
     # snapshot BEFORE our own JVM starts: anything alive now is foreign.
     # VERDICT r10 #3: a foreign JVM swings wall-clocks ±2.5× and the

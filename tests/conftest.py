@@ -15,9 +15,9 @@ SF_DIR_MEDIUM = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    from vlm_data_pipeline_spark.session import get_spark
+    from vlm_data_pipeline_spark.session import _env_cpus, get_spark
 
-    spark = get_spark("vlm-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("vlm-tests", cpus=_env_cpus(default=8))
     yield spark
     spark.stop()
 

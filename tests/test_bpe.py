@@ -618,13 +618,22 @@ def test_unigram_seed_vocab_no_global_window(spark):
 
 
 def test_unigram_word_table_spread_and_model_unchanged(spark, monkeypatch):
-    """The persisted word table spans spark.sql.shuffle.partitions
-    partitions (not the single partition the top-K limit leaves), and the
+    """A word table of at least _SPREAD_MIN_WORDS rows spans
+    spark.sql.shuffle.partitions partitions (not the single partition the
+    top-K limit leaves), a small one stays in one partition, and the
     model is identical to training on one partition: piece counts are
     integer sums, so layout cannot move a log-prob."""
     from vlm_data_pipeline_spark.operators import lm
 
+    n_docs = lm._SPREAD_MIN_WORDS // 20 + 1  # 20 distinct words per doc
     docs = spark.createDataFrame(
+        [
+            (d, " ".join(f"ab{d * 20 + j} ba{j % 3}" for j in range(20)))
+            for d in range(n_docs)
+        ],
+        "doc_id long, text string",
+    ).repartition(4)
+    small = spark.createDataFrame(
         [(i, f"abab abc baba w{i % 7} cab{i % 3}") for i in range(40)],
         "doc_id long, text string",
     ).repartition(4)
@@ -641,9 +650,10 @@ def test_unigram_word_table_spread_and_model_unchanged(spark, monkeypatch):
     try:
         spark.conf.set(key, "6")
         spread = lm.train_unigram_lm(docs, vocab_size=24, iters=2, max_piece_len=4)
+        lm.train_unigram_lm(small, vocab_size=24, iters=2, max_piece_len=4)
         spark.conf.set(key, "1")
         single = lm.train_unigram_lm(docs, vocab_size=24, iters=2, max_piece_len=4)
     finally:
         spark.conf.set(key, old)
-    assert seen == [6, 1]
+    assert seen == [6, 1, 1]
     assert spread == single

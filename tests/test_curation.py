@@ -137,29 +137,31 @@ def test_bigram_lm_analytic(spark):
         [(10, "a b"), (11, "c c"), (12, "a")], "doc_id long, text string"
     )
     out = {
-        r.doc_id: r.s
-        for r in score_df.select(
-            "doc_id", lm.mean_neg_log_prob(F.col("text"), model).alias("s")
-        ).collect()
+        r.doc_id: r.mean_nlp
+        for r in lm.score_corpus(score_df, model).collect()
     }
     # P(b|a) = (3+1)/(3+3) = 2/3 -> -ln(2/3)
     assert out[10] == pytest.approx(-math.log((3 + 1) / (3 + 3)))
     # unseen bigram over unseen... c_c: (0+1)/(1+3) = 1/4
     assert out[11] == pytest.approx(-math.log(1 / 4))
-    # single token -> NULL
-    assert out[12] is None
+    # single token -> not scored
+    assert 12 not in out
 
 
 def test_lm_scoring_zero_shuffle(spark):
-    """Scoring is a broadcast-model in-row fold — no Exchange."""
+    """Scoring joins the token pairs against BOTH count tables broadcast;
+    the only shuffle is the one hash exchange on the document id."""
     from vlm_data_pipeline_spark.operators import lm
 
     ref = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
     model = lm.train_bigram_lm(ref)
     docs = spark.createDataFrame([(2, "a b c")], "doc_id long, text string")
-    out = docs.select(lm.mean_neg_log_prob(F.col("text"), model).alias("s"))
+    out = lm.score_corpus(docs, model)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan[:1200]
+    assert plan.count("BroadcastExchange") == 2, plan[:2000]
+    assert plan.count("Exchange hashpartitioning(") == 1, plan[:2000]
+    assert "Exchange hashpartitioning(doc_id" in plan, plan[:2000]
+    assert plan.count("Exchange") == 3, plan[:2000]
 
 
 def test_stratified_sample_two_phase_no_stratum_reducer(spark):
@@ -224,12 +226,8 @@ def test_bigram_lm_unseen_tokens(spark):
     model = lm.train_bigram_lm(
         spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     )
-    out = (
-        spark.createDataFrame([(2, "zz qq zz")], "doc_id long, text string")
-        .select(lm.mean_neg_log_prob(F.col("text"), model).alias("s"))
-        .collect()[0]
-        .s
-    )
+    docs = spark.createDataFrame([(2, "zz qq zz")], "doc_id long, text string")
+    out = lm.score_corpus(docs, model).collect()[0].mean_nlp
     assert out == pytest.approx(-math.log(1 / 3))  # V = 3, c1 = 0, c12 = 0
 
 
@@ -272,47 +270,38 @@ def test_bigram_lm_collect_is_bounded(spark):
     assert pruned.unigrams == {} and pruned.bigrams == {}
 
 
-def test_lm_score_corpus_paths_agree(spark):
-    """The broadcast-join scoring path (large models) must produce the
-    exact same scores as the map-literal in-row path (small models)."""
+def test_lm_score_corpus_matches_python_reference(spark):
+    """score_corpus equals a pure-Python add-one scorer to the LAST BIT on
+    a model of 30,000 count entries (well past what a plan literal could
+    carry): pairs summed in text order, then divided by n - 1."""
+    import math
+
     from vlm_data_pipeline_spark.operators import lm
 
-    ref = spark.createDataFrame(
-        [(1, "a b a b c d"), (2, "a b c")], "doc_id long, text string"
-    )
-    model = lm.train_bigram_lm(ref)
-    docs = spark.createDataFrame(
-        [(10, "a b c"), (11, "d d a"), (12, "only"), (13, "zz qq")],
-        "doc_id long, text string",
-    )
-    small = {
-        r.doc_id: r.mean_nlp for r in lm.score_corpus(docs, model).collect()
+    uni = {f"w{i}": 1 + i % 13 for i in range(18_000)}
+    bi = {f"w{i}\x1fw{(i * 7) % 18_000}": 1 + i % 5 for i in range(12_000)}
+    model = lm.BigramLM(unigrams=uni, bigrams=bi, vocab_size=len(uni))
+    texts = {
+        i: " ".join(f"w{(i * 31 + j * (i % 9 + 1) * 7) % 18_500}"
+                    for j in range(2 + i % 9))
+        for i in range(300)
     }
-    # force the join path with a tiny literal limit
-    orig = lm.MAP_LITERAL_LIMIT
-    lm.MAP_LITERAL_LIMIT = 0
-    try:
-        joined = {
-            r.doc_id: r.mean_nlp for r in lm.score_corpus(docs, model).collect()
-        }
-    finally:
-        lm.MAP_LITERAL_LIMIT = orig
-    assert set(small) == set(joined) == {10, 11, 13}  # doc 12 has < 2 tokens
-    for k in small:
-        assert small[k] == pytest.approx(joined[k], abs=1e-12)
+    texts[300] = "w3 w21 w3 w21"  # seen bigrams (w3 -> w21 is in bi)
+    texts[301] = "only"  # < 2 tokens: not scored
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
 
+    def py_score(text):
+        t = text.split()
+        total = 0.0
+        for a, b in zip(t, t[1:]):
+            c12 = bi.get(f"{a}\x1f{b}", 0)
+            c1 = uni.get(a, 0)
+            total += -math.log(float(c12 + 1) / float(c1 + model.vocab_size))
+        return total / float(len(t) - 1)
 
-def test_lm_map_literal_guard():
-    """mean_neg_log_prob refuses a model too big for a plan literal."""
-    from vlm_data_pipeline_spark.operators import lm
-
-    big = lm.BigramLM(
-        unigrams={f"w{i}": 1 for i in range(lm.MAP_LITERAL_LIMIT + 1)},
-        bigrams={},
-        vocab_size=lm.MAP_LITERAL_LIMIT + 1,
-    )
-    with pytest.raises(ValueError, match="score_corpus"):
-        lm.mean_neg_log_prob(F.lit("a b"), big)
+    got = {r.doc_id: r.mean_nlp for r in lm.score_corpus(docs, model).collect()}
+    want = {i: py_score(t) for i, t in texts.items() if len(t.split()) >= 2}
+    assert got == want  # exact float equality, no tolerance
 
 
 def test_mixing_plan_exact_integer_allocation(spark):
@@ -728,8 +717,8 @@ def test_dsir_ratios_and_scores_match_formula(spark):
 
 
 def test_dsir_scores_zero_shuffle(spark):
-    """The scoring pass is a pure in-row fold: the ratio table rides as a
-    map literal, so the scored plan has no Exchange and no Join."""
+    """The scoring pass is an in-row fold against the ONE-row broadcast
+    ratio array: no shuffle Exchange, one BroadcastExchange."""
     docs = spark.createDataFrame(
         [(i, f"w{i} w{i+1} w{i+2}") for i in range(20)],
         "doc_id long, text string",
@@ -741,18 +730,15 @@ def test_dsir_scores_zero_shuffle(spark):
         curation.dsir_scores(docs, ratios, n_buckets=8)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "Exchange" not in plan, plan[:1200]
-    assert "Join" not in plan, plan[:1200]
+    assert plan.count("BroadcastExchange") == 1, plan[:1200]
+    assert plan.count("Exchange") == 1, plan[:1200]
 
 
-def test_dsir_scores_paths_agree_at_paper_scale(spark):
-    """DSIR's published configuration is 10k hashed buckets — exactly the
-    MAP_LITERAL_LIMIT boundary (20k map entries). Above it the scorer
-    must switch to the broadcast-join fold; both paths fold in ascending
-    bucket order, so the scores must agree to the LAST BIT (the
-    lm.score_corpus dual-path contract)."""
-    from vlm_data_pipeline_spark.operators import lm
-
+def test_dsir_scores_match_python_at_paper_scale(spark):
+    """DSIR's published configuration is 10k hashed buckets. The score
+    must equal, to the LAST BIT, the pure-Python sum of the collected
+    log ratios over the doc's buckets in ascending order; a featureless
+    doc scores 0.0."""
     B = 10_000
     docs = spark.createDataFrame(
         [(i, f"w{i % 7} w{(i + 1) % 5} w{i % 3} w{(i * 3) % 11}") for i in range(60)]
@@ -760,21 +746,25 @@ def test_dsir_scores_paths_agree_at_paper_scale(spark):
         "doc_id long, text string",
     )
     ratios = curation.dsir_log_ratios(docs.limit(9), docs, n_buckets=B)
-    lit = {
+    lr = {r.bucket: r.log_ratio for r in ratios.collect()}
+    feats = {
+        r.doc_id: r.fb
+        for r in docs.select(
+            "doc_id", curation.dsir_feature_buckets(F.col("text"), B).alias("fb")
+        ).collect()
+    }
+    want = {}
+    for d, fb in feats.items():
+        acc = 0.0
+        for b in sorted(fb):
+            acc += lr[b]
+        want[d] = acc
+    got = {
         r.doc_id: r.score
         for r in curation.dsir_scores(docs, ratios, n_buckets=B).collect()
     }
-    orig = lm.MAP_LITERAL_LIMIT
-    lm.MAP_LITERAL_LIMIT = 0
-    try:
-        join_df = curation.dsir_scores(docs, ratios, n_buckets=B)
-        plan = join_df._jdf.queryExecution().executedPlan().toString()
-        assert "Join" in plan, plan[:1200]  # really took the join path
-        joined = {r.doc_id: r.score for r in join_df.collect()}
-    finally:
-        lm.MAP_LITERAL_LIMIT = orig
-    assert lit == joined  # exact float equality, no tolerance
-    assert lit[999] == 0.0
+    assert got == want  # exact float equality, no tolerance
+    assert got[999] == 0.0
 
 
 def test_dsir_scores_rejects_wrong_bucket_count(spark):
@@ -785,26 +775,21 @@ def test_dsir_scores_rejects_wrong_bucket_count(spark):
 
 
 def test_dsir_scores_broadcast_path_validates_ratio_table(spark):
-    """The join path must raise the SAME error the map-literal path
-    raises on a malformed ratio table — previously a missing bucket
-    silently nulled scores and a duplicate bucket inflated them through
-    the join (round-6 advice)."""
-    from vlm_data_pipeline_spark.operators import lm
-
+    """A malformed ratio table fails at call time, before the broadcast
+    row is built: a missing bucket would null scores, a duplicated or
+    out-of-range one would shift every later lookup."""
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
     good = curation.dsir_log_ratios(docs, docs, n_buckets=8)
     missing = good.filter(F.col("bucket") != 3)
     duplicated = good.union(good.limit(1))
-    orig = lm.MAP_LITERAL_LIMIT
-    lm.MAP_LITERAL_LIMIT = 0  # force the broadcast-join path
-    try:
-        for bad in (missing, duplicated):
-            with pytest.raises(ValueError, match="exactly once"):
-                curation.dsir_scores(docs, bad, n_buckets=8)
-        # and the well-formed table still scores
-        assert curation.dsir_scores(docs, good, n_buckets=8).count() == 1
-    finally:
-        lm.MAP_LITERAL_LIMIT = orig
+    out_of_range = good.withColumn(
+        "bucket", F.when(F.col("bucket") == 7, 8).otherwise(F.col("bucket"))
+    )
+    for bad in (missing, duplicated, out_of_range):
+        with pytest.raises(ValueError, match="exactly once"):
+            curation.dsir_scores(docs, bad, n_buckets=8)
+    # and the well-formed table still scores
+    assert curation.dsir_scores(docs, good, n_buckets=8).count() == 1
 
 
 def test_quality_classifier_separates_planted_corpus(spark):

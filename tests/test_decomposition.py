@@ -134,13 +134,12 @@ def test_pca_fit_rejects_mixed_dimensions(spark, monkeypatch):
 
 
 def test_pca_gram_path_equals_inrow(spark, monkeypatch):
-    """Path-equality pin (the score_corpus dual-path contract): the
-    Arrow partial-Gram fit must agree with the interpreted in-row fit.
-    NOT bit-exact by design — BLAS accumulates in a different order
-    than Spark's per-slot double sums — so the pin is a documented
-    tolerance: covariance-level quantities to rtol 1e-9, eigenvectors
-    to atol 1e-7 (well below any downstream quantization). Each path is
-    forced through the GRAM_PATH_MIN_D threshold."""
+    """Path-equality pin: the Arrow partial-Gram fit must agree with the
+    interpreted in-row fit. NOT bit-exact by design — BLAS accumulates in
+    a different order than Spark's per-slot double sums — so the pin is a
+    documented tolerance: covariance-level quantities to rtol 1e-9,
+    eigenvectors to atol 1e-7 (well below any downstream quantization).
+    Each path is forced through the GRAM_PATH_MIN_D threshold."""
     from vlm_data_pipeline_spark.operators import decomposition as dc
 
     rng = np.random.RandomState(7)

@@ -36,6 +36,7 @@ def test_good_values_and_defaults(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
     assert session._env_cpus() == 32
+    assert session._env_cpus(default=8) == 8
     assert session._env_driver_memory() == "8g"
     for raw, want in (("4", 4), ("64", 64)):
         monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
@@ -43,3 +44,16 @@ def test_good_values_and_defaults(monkeypatch):
     for raw in ("512m", "8g", "48G", "1t", "1024k"):
         monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", raw)
         assert session._env_driver_memory() == raw
+
+
+def test_bench_reads_cpus_through_the_checked_parser(monkeypatch):
+    """bench.main() rejects a bad SPARK_GRAFT_CPUS with the variable-named
+    error before it probes the box or starts a JVM."""
+    import bench
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "abc")
+    monkeypatch.setattr(
+        bench, "_foreign_jvms", lambda: pytest.fail("probed before the check")
+    )
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        bench.main()

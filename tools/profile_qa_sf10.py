@@ -52,13 +52,13 @@ if REPO not in sys.path:
 
 
 def main() -> int:
+    from vlm_data_pipeline_spark.session import _env_cpus, get_spark
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.path.join(REPO, ".scale", "sf10"))
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--out", default=os.path.join(REPO, "PROFILE_QA_SF10.json"))
-    ap.add_argument(
-        "--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    ap.add_argument("--cpus", type=int, default=_env_cpus())
     args = ap.parse_args()
 
     import bench  # foreign-JVM guard + protocol helpers live there
@@ -71,12 +71,11 @@ def main() -> int:
         foreign = bench._foreign_jvms()
 
     from vlm_data_pipeline_spark.qa.runner import TASKS, TASKS_3D, generate_all
-    from vlm_data_pipeline_spark.session import get_spark
     from vlm_data_pipeline_spark.sources.star_frames import synthetic_frames
 
     import __spark_entry__ as entry
 
-    spark = get_spark("profile-qa-sf10", cpus=int(args.cpus))
+    spark = get_spark("profile-qa-sf10", cpus=args.cpus)
     q = entry.queries()["qa_pipeline_full"]
 
     out: dict = {

@@ -140,13 +140,11 @@ def main() -> int:
     build_layout(args.src, args.dst, args.factor)
 
     from tools.plan_digest import count_fact_scan_broadcasts
-    from vlm_data_pipeline_spark.session import get_spark
+    from vlm_data_pipeline_spark.session import _env_cpus, get_spark
 
     import __spark_entry__ as entry
 
-    spark = get_spark(
-        "sf100-evidence", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    )
+    spark = get_spark("sf100-evidence", cpus=_env_cpus(default=8))
     qs = entry.queries()
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     session_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -114,8 +114,7 @@ def main() -> int:
     from vlm_data_pipeline_spark.plans import QUERIES
     from vlm_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("skew-evidence", cpus=int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("skew-evidence")
     out: dict[str, dict] = {}
     for name in args.names.split(","):
         q = QUERIES[name]

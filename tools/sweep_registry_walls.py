@@ -25,15 +25,16 @@ if REPO not in sys.path:
 
 
 def main() -> None:
+    from vlm_data_pipeline_spark.session import _env_cpus, get_spark
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--warm-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--runs", type=int, default=1)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=_env_cpus())
     args = ap.parse_args()
 
     from vlm_data_pipeline_spark.plans import QUERIES
-    from vlm_data_pipeline_spark.session import get_spark
 
     spark = get_spark("sweep-walls", cpus=args.cpus)
     spark.read.parquet(f"{args.sf_dir}/nation.parquet").count()

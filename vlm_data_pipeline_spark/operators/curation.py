@@ -738,93 +738,35 @@ def dsir_scores(
     stratified_sample on score buckets) to select raw data that looks
     like the target.
 
-    Two execution paths, identical to the last bit (the lm.score_corpus
-    dual-path contract, path-equality pinned in tests/test_curation.py):
-
-    - small model (2·n_buckets ≤ MAP_LITERAL_LIMIT, true at the 1024
-      default): the ratio table rides in the plan as a map literal and
-      scoring is an in-row fold — zero shuffle, zero join;
-    - paper-scale model (DSIR uses 10k buckets): explode the doc's
-      bucket list, equi-join the BROADCAST (bucket, log_ratio) table,
-      re-assemble per doc and fold over the sorted (bucket, ratio)
-      structs. The shuffle carries (id, bucket, ratio) — bounded by
-      corpus token count, never by the model.
-
-    Both paths fold in ascending-bucket order, so the double summation
-    order is a pure function of the data (oracle-bit-stable and
-    path-independent). Docs with < 2 tokens score 0.0 on both paths.
+    The ``n_buckets``-row ratio table is collected and checked once on
+    the driver, then ships as ONE broadcast row holding the ratios as an
+    ``array<double>`` indexed by bucket; each doc folds
+    ``lr[bucket]`` over its SORTED feature buckets. No shuffle, an O(1)
+    lookup per occurrence at any bucket count, and no literal per bucket
+    in the plan. The ascending-bucket fold makes the double summation
+    order a pure function of the data (oracle-bit-stable). Docs with
+    < 2 tokens score 0.0.
     """
-    from ..operators.lm import MAP_LITERAL_LIMIT
-
-    feats = dsir_feature_buckets(F.col(text_col), n_buckets)
-    if 2 * n_buckets <= MAP_LITERAL_LIMIT:
-        rows = sorted(ratios.collect(), key=lambda r: r[0])
-        if [int(r[0]) for r in rows] != list(range(n_buckets)):
-            raise ValueError(
-                f"ratio table must cover buckets 0..{n_buckets - 1} exactly "
-                f"once (got {len(rows)} rows); a duplicate bucket would fail "
-                "the map literal at runtime and a missing one would null out "
-                "scores"
-            )
-        entries: list[Column] = []
-        for r in rows:
-            entries.append(F.lit(int(r[0])))
-            entries.append(F.lit(float(r[1])))
-        lookup = F.create_map(*entries)
-
-        def score(fb: Column) -> Column:
-            return F.aggregate(
-                F.array_sort(fb),
-                F.lit(0.0),
-                lambda acc, b: acc + F.element_at(lookup, b),
-            )
-
-        return docs.select(F.col(id_col), score(feats).alias("score"))
-
-    # broadcast-join path: explode_outer keeps featureless docs (their
-    # null bucket matches nothing in the inner-complete ratio table and
-    # is filtered out of the fold, leaving score 0.0 — same as the
-    # literal path's empty-array fold).
-    #
-    # Validate the ratio table HERE too, matching the literal path's
-    # error: without this, a missing bucket silently nulls the fold and
-    # a duplicate bucket silently multiplies rows through the join —
-    # asymmetric failure modes between the two supposedly bit-identical
-    # paths. One tiny aggregate (3 longs) instead of collecting 10k rows.
-    chk = ratios.agg(
-        F.count("*").alias("n"),
-        F.count_distinct("bucket").alias("nd"),
-        F.sum(
-            F.when(
-                (F.col("bucket") >= 0) & (F.col("bucket") < n_buckets), 0
-            ).otherwise(1)
-        ).alias("oob"),
-    ).collect()[0]
-    if chk["n"] != n_buckets or chk["nd"] != n_buckets or (chk["oob"] or 0) != 0:
+    rows = sorted(ratios.collect(), key=lambda r: r[0])
+    if [int(r[0]) for r in rows] != list(range(n_buckets)):
         raise ValueError(
             f"ratio table must cover buckets 0..{n_buckets - 1} exactly "
-            f"once (got {chk['n']} rows, {chk['nd']} distinct, "
-            f"{chk['oob'] or 0} out of range); a duplicate bucket would "
-            "inflate scores through the join and a missing one would "
-            "null them out"
+            f"once (got {len(rows)} rows); a duplicate or out-of-range "
+            "bucket would score against the wrong ratio and a missing one "
+            "would null out scores"
         )
-    exploded = docs.select(F.col(id_col), F.explode_outer(feats).alias("bucket"))
-    joined = exploded.join(F.broadcast(ratios), "bucket", "left")
-    per_doc = joined.groupBy(id_col).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("bucket"), F.col("log_ratio")))
-        ).alias("arr")
+    ratio_row = docs.sparkSession.createDataFrame(
+        [([float(r[1]) for r in rows],)], "__dsir_lr array<double>"
     )
-    # collect_list drops nothing here (structs are non-null even when
-    # their fields are), so filter null buckets before folding; sorted by
-    # (bucket, ratio) the addition sequence matches the literal path's
-    # array_sort(bucket) fold exactly — equal buckets carry equal ratios.
-    folded = F.aggregate(
-        F.filter(F.col("arr"), lambda x: x["bucket"].isNotNull()),
+    feats = dsir_feature_buckets(F.col(text_col), n_buckets)
+    score = F.aggregate(
+        F.array_sort(feats),
         F.lit(0.0),
-        lambda acc, x: acc + x["log_ratio"],
+        lambda acc, b: acc + F.element_at(F.col("__dsir_lr"), (b + 1).cast("int")),
     )
-    return per_doc.select(F.col(id_col), folded.alias("score"))
+    return docs.crossJoin(F.broadcast(ratio_row)).select(
+        F.col(id_col), score.alias("score")
+    )
 
 
 # ---------------------------------------------------------------------------

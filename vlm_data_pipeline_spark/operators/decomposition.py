@@ -5,8 +5,8 @@ dimensionality-reduction step before clustering/ANN in corpus pipelines
 Scale shape (the driver-coordinated closed-form pattern, like the
 KMeans/PQ trainers):
 
-- FIT is one aggregation with TWO physical paths (the lm.score_corpus
-  dual-path pattern), selected by dimension:
+- FIT is one aggregation with TWO physical paths, selected by
+  dimension:
 
   * in-row (d < GRAM_PATH_MIN_D): each row expands its d-vector to the
     d·(d+1)/2 upper-triangle outer products IN-ROW (plus the d means),

@@ -4,12 +4,11 @@ filter or stratify on perplexity).
 
 Scale design: production CCNet ships a pretrained KenLM binary to every
 worker — the broadcast-model pattern. Here the model is a bigram
-add-one-smoothed LM whose counts are map LITERALS on the plan (vocab- and
-vocab²-bounded by construction — real deployments prune exactly so the
-model stays shippable), and scoring is an in-row fold over each
-document's own token pairs: ZERO shuffle at any corpus size, exactly like
-the repetition/quality signals. Training is one counts aggregation over a
-(reference) corpus, collected to the driver.
+add-one-smoothed LM whose count tables (vocab- and vocab²-bounded by
+construction — real deployments prune exactly so the model stays
+shippable) are broadcast and joined against each document's token pairs;
+the only shuffle is one groupBy on the document id. Training is one
+counts aggregation over a (reference) corpus, collected to the driver.
 
 The subword tokenizers (BPE, unigram-LM, WordPiece) train driver-side
 over a capped word-frequency table and encode through ONE execution,
@@ -27,7 +26,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import let, tokens
+from ..functions.text import tokens
 
 
 @dataclass(frozen=True)
@@ -101,77 +100,6 @@ def train_bigram_lm(
     )
 
 
-# Above this many count entries a create_map literal bloats the plan
-# (Catalyst optimization time + driver memory grow with plan size); the
-# broadcast-join path in score_corpus takes over.
-MAP_LITERAL_LIMIT = 20_000
-
-
-def mean_neg_log_prob(text: Column, model: BigramLM) -> Column:
-    """Per-document mean negative log-probability under the bigram model —
-    the (log-)perplexity proxy CCNet buckets on; lower = more fluent.
-    NULL for documents with fewer than 2 tokens.
-
-    In-row: two map-literal lookups per token pair inside one fold —
-    no explode, no join, no shuffle. Only valid for SMALL models (the
-    counts become plan literals): raises above MAP_LITERAL_LIMIT
-    entries — use :func:`score_corpus`, which auto-selects the
-    broadcast-join path for large models.
-    """
-    n_entries = len(model.unigrams) + len(model.bigrams)
-    if n_entries > MAP_LITERAL_LIMIT:
-        raise ValueError(
-            f"model has {n_entries} count entries (> {MAP_LITERAL_LIMIT}): "
-            f"a create_map plan literal this size blows up Catalyst — use "
-            f"score_corpus(), which joins against broadcast count tables"
-        )
-    v = model.vocab_size
-    uni_pairs: list[Column] = []
-    for w, c in sorted(model.unigrams.items()):
-        uni_pairs.append(F.lit(w))
-        uni_pairs.append(F.lit(int(c)))
-    bi_pairs: list[Column] = []
-    for b, c in sorted(model.bigrams.items()):
-        bi_pairs.append(F.lit(b))
-        bi_pairs.append(F.lit(int(c)))
-    uni_map = (
-        F.create_map(*uni_pairs) if uni_pairs else F.lit(None).cast("map<string,int>")
-    )
-    bi_map = (
-        F.create_map(*bi_pairs) if bi_pairs else F.lit(None).cast("map<string,int>")
-    )
-
-    def score(t: Column) -> Column:
-        n = F.size(t)
-        pair_lp = lambda i: F.log(  # noqa: E731 — ln((c12 + 1) / (c1 + V))
-            (
-                F.coalesce(
-                    F.element_at(
-                        bi_map,
-                        F.concat(
-                            F.element_at(t, i),
-                            F.lit("\x1f"),
-                            F.element_at(t, i + 1),
-                        ),
-                    ),
-                    F.lit(0),
-                )
-                + 1
-            ).cast("double")
-            / (
-                F.coalesce(F.element_at(uni_map, F.element_at(t, i)), F.lit(0)) + v
-            ).cast("double")
-        )
-        total = F.aggregate(
-            F.sequence(F.lit(1), n - 1),
-            F.lit(0.0),
-            lambda acc, i: acc - pair_lp(i),
-        )
-        return F.when(n >= 2, total / (n - 1).cast("double"))
-
-    return let(tokens(text), score)
-
-
 def score_corpus(
     docs: DataFrame,
     model: BigramLM,
@@ -179,28 +107,18 @@ def score_corpus(
     text_col: str = "text",
     out_col: str = "mean_nlp",
 ) -> DataFrame:
-    """Score every document (≥ 2 tokens) → (id, ``out_col``), choosing the
-    execution path by model size:
+    """Per-document mean negative log-probability under the bigram model
+    → (id, ``out_col``) for every document with ≥ 2 tokens — the
+    (log-)perplexity proxy CCNet buckets on; lower = more fluent.
 
-    - small model: the zero-shuffle in-row map-literal fold
-      (:func:`mean_neg_log_prob`);
-    - large model (> MAP_LITERAL_LIMIT count entries): explode each
-      document's token pairs and LEFT-join the unigram/bigram count
-      tables — both joins BROADCAST (the model is cap-bounded by
-      ``train_bigram_lm``, i.e. dimension-sized), then one partial-agg
-      groupBy(id) carrying only (id, partial sum, n). Identical scores
-      (the same add-one formula), shuffle bounded by documents, never by
-      the model.
-
-    SURVEY: "score_corpus auto-falls back to a broadcast-join scoring
-    path with bit-identical scores".
+    Explode each document's token pairs and LEFT-join the unigram and
+    bigram count tables, both BROADCAST (the model is cap-bounded by
+    ``train_bigram_lm``, i.e. dimension-sized), then one partial-agg
+    groupBy(id) carrying only (id, partial sum, n): the shuffle is
+    bounded by documents, never by the model. A document's pairs stay in
+    one partition and in text order up to the partial sum, so the
+    addition order is the document's own.
     """
-    if len(model.unigrams) + len(model.bigrams) <= MAP_LITERAL_LIMIT:
-        return docs.select(
-            F.col(id_col),
-            mean_neg_log_prob(F.col(text_col), model).alias(out_col),
-        ).filter(F.col(out_col).isNotNull())
-
     spark = docs.sparkSession
     uni_df = spark.createDataFrame(
         list(model.unigrams.items()), "w string, c_uni long"
@@ -721,6 +639,13 @@ def _viterbi_encoder(
     )
 
 
+# Word-table rows from which train_unigram_lm spreads the table across
+# spark.sql.shuffle.partitions: below it one task segments the table
+# faster than a shuffle stage can spread it (break-even measured near
+# 8,000 words on local[4]; OPTIMIZATION_r14.md).
+_SPREAD_MIN_WORDS = 8_192
+
+
 def train_unigram_lm(
     corpus: DataFrame,
     vocab_size: int = 256,
@@ -752,14 +677,15 @@ def train_unigram_lm(
     # ONE corpus pass builds the word table; the seed-vocab substring
     # statistics AND every EM round reuse it from cache (vocab-capped,
     # so the cache is dimension-sized). The top-K limit leaves it in one
-    # partition; spread it so each E-step segments in parallel.
+    # partition; a table of at least _SPREAD_MIN_WORDS rows is spread so
+    # each E-step segments in parallel.
     spark = corpus.sparkSession
-    words = (
-        _word_freqs(corpus, text_col, max_words)
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "w")
-        .persist()
-    )
+    table = _word_freqs(corpus, text_col, max_words).persist()
+    words = table
     try:
+        if table.count() >= _SPREAD_MIN_WORDS:
+            n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            words = table.repartition(n_parts, "w").persist()
         seed = unigram_seed_vocab(
             corpus, vocab_size, max_piece_len, text_col, max_words, words=words
         ).collect()
@@ -786,6 +712,7 @@ def train_unigram_lm(
                 model.setdefault(ch, floor)
     finally:
         words.unpersist()
+        table.unpersist()
     return model
 
 

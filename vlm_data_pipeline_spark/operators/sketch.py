@@ -17,8 +17,7 @@ oracle re-derives every bit, INCLUDING the false positives; nothing
 about the filter is approximate *between* engines, only with respect
 to exact membership.
 
-Two probe paths, same results (dual-path equality pytest, the
-``lm.score_corpus`` precedent):
+Two probe paths, same results (pinned equal by a pytest):
 
 - ``bloom_probe_join``: the positions stay a distributed table; probes
   explode their k positions and left-join. Scales to any ``m_bits``

@@ -1453,26 +1453,21 @@ FROM scored GROUP BY doc_id
     "N-gram LM quality scoring (extension; the CCNet/Wenzek 2020 "
     "pattern): an add-one-smoothed bigram LM trained on the held-out "
     "reference slice (every 20th doc — CCNet trains on Wikipedia), then "
-    "every corpus doc scored by mean negative log-probability IN-ROW "
-    "via two map-literal lookups per token pair — the broadcast-model "
-    "zero-shuffle scoring shape (production ships KenLM the same way). "
+    "every corpus doc with >= 2 tokens scored by mean negative "
+    "log-probability: its token pairs LEFT-join the broadcast unigram "
+    "and bigram count tables (the broadcast-model shape; production "
+    "ships KenLM the same way) and one groupBy on doc_id averages them. "
     "Training is one vocab-bounded counts pass. The oracle re-derives "
     "the counts and replays the scoring as joins. Library: "
-    "operators.lm.train_bigram_lm / mean_neg_log_prob.",
+    "operators.lm.train_bigram_lm / score_corpus.",
 )
 def curation_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import token_count
     from ..operators import lm
 
     docs = load_tables(spark, sf_dir, "documents")["documents"]
     model = lm.train_bigram_lm(docs.filter(F.col("doc_id") % 20 == 0))
-    corpus = docs.filter(
-        (F.col("doc_id") % 20 != 0) & (token_count(F.col("text")) >= 2)
-    )
-    return corpus.select(
-        "doc_id",
-        F.round(lm.mean_neg_log_prob(F.col("text"), model), 6).alias("mean_nlp"),
-    )
+    scored = lm.score_corpus(docs.filter(F.col("doc_id") % 20 != 0), model)
+    return scored.select("doc_id", F.round("mean_nlp", 6).alias("mean_nlp"))
 
 
 # ---------------------------------------------------------------------------
@@ -2281,11 +2276,11 @@ SELECT doc_id, round(score, 6) AS score FROM ({_DSIR_SCORED_SQL})
     "split vs the RAW corpus -> add-one-smoothed log importance ratio "
     "per bucket (the model is n_buckets-sized by construction) -> "
     "per-document importance as an in-row fold over the doc's SORTED "
-    "feature buckets with the ratio table riding in the plan as a map "
-    "literal (zero shuffle, zero join; sorted fold makes the double "
-    "summation order a pure function of the data). Sample raw docs "
-    "proportionally to select data that looks like the target. Library: "
-    "operators.curation.dsir_log_ratios / dsir_scores.",
+    "feature buckets, looking each one up in the ratio table shipped as "
+    "one broadcast array<double> row (zero shuffle; sorted fold makes "
+    "the double summation order a pure function of the data). Sample "
+    "raw docs proportionally to select data that looks like the target. "
+    "Library: operators.curation.dsir_log_ratios / dsir_scores.",
 )
 def curation_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import curation
@@ -4231,29 +4226,26 @@ FROM rk
     "curation_ccnet_buckets",
     _CCNET_ORACLE,
     "CCNet head/middle/tail perplexity buckets (Wenzek et al. 2020 "
-    "§4.3): bigram-LM mean-nlp per doc (the curation_lm_score model, "
-    "same held-out training slice), then per-language equal-count "
-    "terciles by ((rank-1)*3) div count over the (rounded-score, id) "
-    "order — pure integer bucket math on an engine-stable score, one "
-    "exchange on the language key (CCNet's own sharding unit). The "
-    "oracle replays model training, scoring, and the window cut. "
-    "Library: operators.curation.perplexity_buckets + operators.lm.",
+    "§4.3): bigram-LM mean-nlp per doc (the curation_lm_score model and "
+    "scorer, same held-out training slice; lang joined back by doc_id), "
+    "then per-language equal-count terciles by ((rank-1)*3) div count "
+    "over the (rounded-score, id) order — pure integer bucket math on "
+    "an engine-stable score, cut after one exchange on the language key "
+    "(CCNet's own sharding unit). The oracle replays model training, "
+    "scoring, and the window cut. Library: "
+    "operators.curation.perplexity_buckets + operators.lm.score_corpus.",
 )
 def curation_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import token_count
     from ..operators import curation, lm
 
     docs = load_tables(spark, sf_dir, "documents")["documents"]
     model = lm.train_bigram_lm(docs.filter(F.col("doc_id") % 20 == 0))
-    corpus = docs.filter(
-        (F.col("doc_id") % 20 != 0) & (token_count(F.col("text")) >= 2)
-    )
-    scored = corpus.select(
-        "doc_id",
-        "lang",
-        F.round(lm.mean_neg_log_prob(F.col("text"), model), 6).alias(
-            "mean_nlp"
-        ),
+    scored = (
+        lm.score_corpus(docs.filter(F.col("doc_id") % 20 != 0), model)
+        # merge hint: (doc_id, lang) is corpus-sized, never broadcast;
+        # the scores already arrive hash-partitioned on doc_id
+        .join(docs.select("doc_id", "lang").hint("merge"), "doc_id")
+        .select("doc_id", "lang", F.round("mean_nlp", 6).alias("mean_nlp"))
     )
     out = curation.perplexity_buckets(scored, "mean_nlp", lang_col="lang")
     return out.select("doc_id", "lang", "bucket")

@@ -23,10 +23,12 @@ from pyspark.sql import SparkSession
 _JVM_MEMORY = re.compile(r"^[1-9][0-9]*[kmgtKMGT]$")
 
 
-def _env_cpus() -> int:
-    """``SPARK_GRAFT_CPUS`` (default 32), checked before any JVM starts:
-    Spark reports a bad core count only as an opaque master-URL error."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+def _env_cpus(default: int = 32) -> int:
+    """``SPARK_GRAFT_CPUS`` (``default`` when unset), checked before any
+    JVM starts: Spark reports a bad core count only as an opaque
+    master-URL error. Every entry point that reads the variable reads it
+    here."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", str(default))
     if not raw.strip().isdecimal() or int(raw) < 1:
         raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
     return int(raw)
