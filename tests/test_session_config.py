@@ -1,23 +1,34 @@
 """Pin the session configuration `get_spark` ships.
 
-The default session carries NO JVM flag overrides: the
+The driver's only JVM flags are the class-data archive options
+(``-XX:ArchiveClassesAtExit`` or ``-XX:SharedArchiveFile``, with
+``-Xlog:cds*=off``), which change how classes load, not what runs. The
 ``-XX:-DontCompileHugeMethods`` flag once used to JIT a 64-term generated
 kernel taxed every query sharing the JVM about 2x (OPTIMIZATION_r14.md §1).
-These tests pin its absence, Spark's default codegen ceiling, the
-AQE and file-split settings the session inherits from Spark, the absence
-of allocator overrides in the executor env, and the Python worker path
-that lets workers import the engine from any cwd.
+These tests pin the archive launch, the flag's absence, Spark's default
+codegen ceiling, the AQE and file-split settings the session inherits from
+Spark, the absence of allocator overrides in the executor env, and the
+Python worker path that lets workers import the engine from any cwd.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
+
+import pytest
+from pyspark.find_spark_home import _find_spark_home
 
 import vlm_data_pipeline_spark
+from vlm_data_pipeline_spark import session
+
+ARCHIVE_FLAGS = ("-XX:ArchiveClassesAtExit=", "-XX:SharedArchiveFile=")
 
 
 def test_no_jvm_flag_overrides_by_default(spark):
-    """No -XX overrides ride the driver/executor JVMs."""
+    """The huge-method flag rides neither the driver nor the executors."""
     for role in ("driver", "executor"):
         try:
             opts = spark.conf.get(f"spark.{role}.extraJavaOptions")
@@ -77,3 +88,100 @@ def test_no_allocator_overrides_in_executor_env(spark):
         or k == "spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL"
     ]
     assert pinned == [], pinned
+
+
+def _input_args(spark) -> list[str]:
+    args = (
+        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+        .getInputArguments()
+    )
+    return [args.get(i) for i in range(args.size())]
+
+
+def _conf_dir_has_real_file() -> bool:
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        _find_spark_home(), "conf"
+    )
+    return os.path.isdir(conf_dir) and any(
+        not n.endswith(".template") for n in os.listdir(conf_dir)
+    )
+
+
+def test_live_driver_starts_from_the_class_archive(spark):
+    """One archive option rides the live driver, pointing into the cache,
+    and the launch's conf dir (first on the classpath) is empty; a conf dir
+    holding a real file launches with neither."""
+    archive_args = [a for a in _input_args(spark) if a.startswith(ARCHIVE_FLAGS)]
+    if _conf_dir_has_real_file():
+        assert archive_args == []
+        return
+    assert len(archive_args) == 1, archive_args
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "vlm_data_pipeline_spark",
+    )
+    path = archive_args[0].split("=", 1)[1]
+    assert os.path.dirname(path) == cache, path
+    first = spark._jvm.System.getProperty("java.class.path").split(os.pathsep)[0]
+    assert os.path.isdir(first) and os.listdir(first) == [], first
+
+
+def test_live_driver_shares_classes(spark):
+    assert "sharing" in spark._jvm.System.getProperty("java.vm.info")
+
+
+_ONE_SESSION = r"""
+import json, os
+from pyspark import SparkContext
+from vlm_data_pipeline_spark.session import get_spark
+
+before = os.environ.get("SPARK_CONF_DIR")
+spark = get_spark("archive-probe", cpus=2)
+spark.range(1000).selectExpr("sum(id)").collect()
+rt = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+args = [rt.getInputArguments().get(i) for i in range(rt.getInputArguments().size())]
+info = {"args": args, "env_kept": os.environ.get("SPARK_CONF_DIR") == before}
+gw = SparkContext._gateway
+proc = gw.proc
+spark.stop()
+gw.shutdown()
+proc.stdin.close()  # the gateway exits on EOF; the archive is written then
+proc.wait(timeout=300)
+print(json.dumps(info))
+"""
+
+
+@pytest.mark.skipif(_conf_dir_has_real_file(), reason="conf dir holds a real file")
+def test_first_session_records_and_second_maps(tmp_path):
+    """The first driver on a fresh cache writes a finished archive at exit
+    and prints nothing about it; the next driver maps that archive."""
+    env = dict(
+        os.environ,
+        XDG_CACHE_HOME=str(tmp_path),
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=os.pathsep.join(
+            p
+            for p in (
+                os.path.dirname(os.path.dirname(vlm_data_pipeline_spark.__file__)),
+                os.environ.get("PYTHONPATH"),
+            )
+            if p
+        ),
+    )
+    runs = []
+    for _ in range(2):
+        out = subprocess.run(
+            [sys.executable, "-c", _ONE_SESSION],
+            env=env, capture_output=True, text=True, timeout=600, check=True,
+        ).stdout
+        assert "[cds" not in out, out
+        runs.append(json.loads(out.strip().splitlines()[-1]))
+    (archive,) = tmp_path.glob("vlm_data_pipeline_spark/*.jsa")
+    with archive.open("rb") as f:
+        assert f.read(4) == session._ARCHIVE_MAGIC
+    recorded = [a for a in runs[0]["args"] if a.startswith(ARCHIVE_FLAGS)]
+    mapped = [a for a in runs[1]["args"] if a.startswith(ARCHIVE_FLAGS)]
+    assert recorded == [f"-XX:ArchiveClassesAtExit={archive}"], recorded
+    assert mapped == [f"-XX:SharedArchiveFile={archive}"], mapped
+    assert runs[0]["env_kept"] and runs[1]["env_kept"]
+    archive.unlink()  # about 100 MB

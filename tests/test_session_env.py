@@ -1,10 +1,15 @@
 """Bad session env knobs fail in Python, naming the variable, before any
 JVM starts (Spark would report them only as a gateway exit or an opaque
-master-URL error). No SparkSession is created here."""
+master-URL error), and the driver's class-data archive is chosen from the
+install and the cache alone. No SparkSession is created here."""
 
 from __future__ import annotations
 
+import os
+from types import SimpleNamespace
+
 import pytest
+from pyspark.sql import SparkSession
 
 from vlm_data_pipeline_spark import session
 
@@ -57,3 +62,106 @@ def test_bench_reads_cpus_through_the_checked_parser(monkeypatch):
     )
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
         bench.main()
+
+
+# -- class-data archive choice (no JVM) ---------------------------------------
+
+
+@pytest.fixture()
+def fake_install(tmp_path, monkeypatch):
+    """A SPARK_HOME with two jars and a conf dir of templates, a JDK with the
+    two files the archive key reads, and an XDG cache dir, all under tmp."""
+    spark_home, jdk, xdg = tmp_path / "spark", tmp_path / "jdk", tmp_path / "xdg"
+    (spark_home / "jars").mkdir(parents=True)
+    for jar in ("a.jar", "b.jar"):
+        (spark_home / "jars" / jar).write_bytes(b"PK")
+    (spark_home / "conf").mkdir()
+    for name in ("spark-defaults.conf.template", "log4j2.properties.template"):
+        (spark_home / "conf" / name).write_text("# template\n")
+    (jdk / "lib" / "server").mkdir(parents=True)
+    (jdk / "lib" / "modules").write_bytes(b"modules")
+    (jdk / "lib" / "server" / "libjvm.so").write_bytes(b"ELF")
+    monkeypatch.setenv("SPARK_HOME", str(spark_home))
+    monkeypatch.setenv("JAVA_HOME", str(jdk))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(xdg))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    return spark_home, xdg / "vlm_data_pipeline_spark"
+
+
+def _flag_path(opts: str, flag: str) -> str:
+    (path,) = [o.split("=", 1)[1] for o in opts.split() if o.startswith(flag + "=")]
+    return path
+
+
+def _fake_launch(monkeypatch) -> dict:
+    """Replace the JVM launch with a probe of what it would have been given."""
+    seen: dict = {}
+
+    def get_or_create(builder):
+        seen["options"] = dict(builder._options)
+        seen["conf_dir"] = os.environ.get("SPARK_CONF_DIR")
+        return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda _: None))
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    return seen
+
+
+def test_templates_only_conf_dir_gets_archive_and_empty_conf(fake_install):
+    _, cache = fake_install
+    opts, conf = session._class_archive("8g")
+    archive = _flag_path(opts, "-XX:ArchiveClassesAtExit")
+    assert os.path.dirname(archive) == str(cache) and archive.endswith(".jsa")
+    assert "-Xlog:cds*=off" in opts.split()
+    assert os.path.dirname(conf) == str(cache) and os.listdir(conf) == []
+
+
+def test_real_conf_file_starts_jvm_as_spark_would(fake_install, monkeypatch):
+    spark_home, _ = fake_install
+    (spark_home / "conf" / "spark-defaults.conf").write_text("spark.foo 1\n")
+    assert session._class_archive("8g") is None
+    seen = _fake_launch(monkeypatch)
+    session.get_spark(cpus=2)
+    assert "spark.driver.defaultJavaOptions" not in seen["options"]
+    assert seen["conf_dir"] is None and "SPARK_CONF_DIR" not in os.environ
+
+
+def test_launch_swaps_conf_dir_only_for_the_launch(fake_install, monkeypatch):
+    monkeypatch.setenv("SPARK_CONF_DIR", str(fake_install[0] / "conf"))
+    seen = _fake_launch(monkeypatch)
+    session.get_spark(cpus=2)
+    opts, conf = session._class_archive("8g")
+    assert seen["options"]["spark.driver.defaultJavaOptions"] == opts
+    assert seen["conf_dir"] == conf
+    assert os.environ["SPARK_CONF_DIR"] == str(fake_install[0] / "conf")
+
+
+def test_missing_or_unfinished_archive_records(fake_install):
+    opts, _ = session._class_archive("8g")
+    archive = _flag_path(opts, "-XX:ArchiveClassesAtExit")
+    # a dump cut short before the JVM wrote the header
+    with open(archive, "wb") as f:
+        f.write(b"\0" * 64)
+    assert session._class_archive("8g")[0] == opts
+
+
+def test_finished_archive_is_mapped(fake_install):
+    archive = _flag_path(session._class_archive("8g")[0], "-XX:ArchiveClassesAtExit")
+    with open(archive, "wb") as f:
+        f.write(session._ARCHIVE_MAGIC + b"\0" * 60)
+    opts, _ = session._class_archive("8g")
+    assert _flag_path(opts, "-XX:SharedArchiveFile") == archive
+    assert "ArchiveClassesAtExit" not in opts
+
+
+def test_new_jar_mtime_or_heap_is_a_new_key_and_drops_stale_archive(fake_install):
+    spark_home, cache = fake_install
+    old = _flag_path(session._class_archive("8g")[0], "-XX:ArchiveClassesAtExit")
+    with open(old, "wb") as f:
+        f.write(session._ARCHIVE_MAGIC)
+    st = os.stat(spark_home / "jars" / "b.jar")
+    os.utime(spark_home / "jars" / "b.jar", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    new = _flag_path(session._class_archive("8g")[0], "-XX:ArchiveClassesAtExit")
+    assert new != old and not os.path.exists(old)
+    other = _flag_path(session._class_archive("48g")[0], "-XX:ArchiveClassesAtExit")
+    assert other != new
+

@@ -359,11 +359,11 @@ def main() -> int:
     ap.add_argument("--names", default=None, help="comma list; default all")
     args = ap.parse_args()
 
-    from vlm_data_pipeline_spark.session import get_spark
+    from vlm_data_pipeline_spark.session import _env_cpus, get_spark
 
     import __spark_entry__ as e
 
-    spark = get_spark("plan-digest", cpus=8)
+    spark = get_spark("plan-digest", cpus=_env_cpus(default=8))
     qs = e.queries()
     names = args.names.split(",") if args.names else sorted(qs)
     out = digest_all(spark, qs, names, args.sf_dir, verbose=True)
