@@ -126,17 +126,15 @@ def test_live_driver_starts_from_the_class_archive(spark):
     assert os.path.isdir(first) and os.listdir(first) == [], first
 
 
-def test_live_driver_shares_classes(spark):
-    assert "sharing" in spark._jvm.System.getProperty("java.vm.info")
-
-
 _ONE_SESSION = r"""
-import json, os
+import json, os, sys
 from pyspark import SparkContext
 from vlm_data_pipeline_spark.session import get_spark
 
 before = os.environ.get("SPARK_CONF_DIR")
-spark = get_spark("archive-probe", cpus=2)
+# the caller's own driver options still apply next to the archive options
+log = {"spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={sys.argv[1]}"}
+spark = get_spark("archive-probe", cpus=2, extra_conf=log)
 spark.range(1000).selectExpr("sum(id)").collect()
 rt = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
 args = [rt.getInputArguments().get(i) for i in range(rt.getInputArguments().size())]
@@ -154,7 +152,9 @@ print(json.dumps(info))
 @pytest.mark.skipif(_conf_dir_has_real_file(), reason="conf dir holds a real file")
 def test_first_session_records_and_second_maps(tmp_path):
     """The first driver on a fresh cache writes a finished archive at exit
-    and prints nothing about it; the next driver maps that archive."""
+    and prints nothing about it; the next driver maps that archive and
+    loads Spark's classes from it (the dynamic archive is the "top" layer
+    over the JDK's base archive)."""
     env = dict(
         os.environ,
         XDG_CACHE_HOME=str(tmp_path),
@@ -169,14 +169,15 @@ def test_first_session_records_and_second_maps(tmp_path):
         ),
     )
     runs = []
-    for _ in range(2):
+    for i in range(2):
         out = subprocess.run(
-            [sys.executable, "-c", _ONE_SESSION],
+            [sys.executable, "-c", _ONE_SESSION, str(tmp_path / f"load{i}.log")],
             env=env, capture_output=True, text=True, timeout=600, check=True,
         ).stdout
         assert "[cds" not in out, out
         runs.append(json.loads(out.strip().splitlines()[-1]))
     (archive,) = tmp_path.glob("vlm_data_pipeline_spark/*.jsa")
+    assert archive.name.endswith("-coops.jsa"), archive
     with archive.open("rb") as f:
         assert f.read(4) == session._ARCHIVE_MAGIC
     recorded = [a for a in runs[0]["args"] if a.startswith(ARCHIVE_FLAGS)]
@@ -184,4 +185,7 @@ def test_first_session_records_and_second_maps(tmp_path):
     assert recorded == [f"-XX:ArchiveClassesAtExit={archive}"], recorded
     assert mapped == [f"-XX:SharedArchiveFile={archive}"], mapped
     assert runs[0]["env_kept"] and runs[1]["env_kept"]
+    source = "org.apache.spark.SparkContext source: shared objects file (top)"
+    assert source not in (tmp_path / "load0.log").read_text()
+    assert source in (tmp_path / "load1.log").read_text()
     archive.unlink()  # about 100 MB

@@ -106,62 +106,129 @@ def _fake_launch(monkeypatch) -> dict:
     return seen
 
 
+def _choose(heap: str = "8g", **conf: str):
+    return session._class_archive({"spark.driver.memory": heap, **conf})
+
+
 def test_templates_only_conf_dir_gets_archive_and_empty_conf(fake_install):
     _, cache = fake_install
-    opts, conf = session._class_archive("8g")
+    opts, conf = _choose()
     archive = _flag_path(opts, "-XX:ArchiveClassesAtExit")
     assert os.path.dirname(archive) == str(cache) and archive.endswith(".jsa")
     assert "-Xlog:cds*=off" in opts.split()
     assert os.path.dirname(conf) == str(cache) and os.listdir(conf) == []
 
 
+def _assert_launches_as_spark_would(monkeypatch, **extra_conf: str) -> None:
+    seen = _fake_launch(monkeypatch)
+    session.get_spark(cpus=2, extra_conf=extra_conf)
+    assert "spark.driver.defaultJavaOptions" not in seen["options"]
+    assert seen["conf_dir"] == os.environ.get("SPARK_CONF_DIR")
+
+
 def test_real_conf_file_starts_jvm_as_spark_would(fake_install, monkeypatch):
     spark_home, _ = fake_install
     (spark_home / "conf" / "spark-defaults.conf").write_text("spark.foo 1\n")
-    assert session._class_archive("8g") is None
-    seen = _fake_launch(monkeypatch)
-    session.get_spark(cpus=2)
-    assert "spark.driver.defaultJavaOptions" not in seen["options"]
-    assert seen["conf_dir"] is None and "SPARK_CONF_DIR" not in os.environ
+    assert _choose() is None
+    _assert_launches_as_spark_would(monkeypatch)
+    assert "SPARK_CONF_DIR" not in os.environ
+
+
+@pytest.mark.parametrize("name", session._CLASSPATH_ENV)
+def test_launcher_classpath_env_starts_jvm_as_spark_would(
+    fake_install, monkeypatch, tmp_path, name
+):
+    extra = tmp_path / "hadoop-conf"
+    extra.mkdir()
+    (extra / "core-site.xml").write_text("<configuration/>\n")
+    monkeypatch.setenv(name, str(extra))
+    assert _choose() is None
+    _assert_launches_as_spark_would(monkeypatch)
+
+
+@pytest.mark.parametrize("key", session._CLASSPATH_CONF)
+def test_driver_class_path_setting_starts_jvm_as_spark_would(
+    fake_install, monkeypatch, key
+):
+    assert _choose(**{key: "/srv/extra-classes"}) is None
+    _assert_launches_as_spark_would(monkeypatch, **{key: "/srv/extra-classes"})
+
+
+@pytest.mark.parametrize(
+    "args",
+    ["--driver-class-path /srv/x pyspark-shell", "--properties-file /srv/p pyspark-shell"],
+)
+def test_submit_args_class_path_starts_jvm_as_spark_would(fake_install, monkeypatch, args):
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", args)
+    assert _choose() is None
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--master local[2] pyspark-shell")
+    assert _choose() is not None
+
+
+def test_cache_that_cannot_be_made_starts_jvm_as_spark_would(
+    fake_install, monkeypatch, tmp_path
+):
+    # a path under a regular file cannot be made, even by root
+    (tmp_path / "not-a-dir").write_text("")
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "not-a-dir" / "cache"))
+    assert _choose() is None
+    _assert_launches_as_spark_would(monkeypatch)
+    assert "SPARK_CONF_DIR" not in os.environ
 
 
 def test_launch_swaps_conf_dir_only_for_the_launch(fake_install, monkeypatch):
     monkeypatch.setenv("SPARK_CONF_DIR", str(fake_install[0] / "conf"))
     seen = _fake_launch(monkeypatch)
     session.get_spark(cpus=2)
-    opts, conf = session._class_archive("8g")
+    opts, conf = _choose()
     assert seen["options"]["spark.driver.defaultJavaOptions"] == opts
     assert seen["conf_dir"] == conf
     assert os.environ["SPARK_CONF_DIR"] == str(fake_install[0] / "conf")
 
 
 def test_missing_or_unfinished_archive_records(fake_install):
-    opts, _ = session._class_archive("8g")
+    opts, _ = _choose()
     archive = _flag_path(opts, "-XX:ArchiveClassesAtExit")
     # a dump cut short before the JVM wrote the header
     with open(archive, "wb") as f:
         f.write(b"\0" * 64)
-    assert session._class_archive("8g")[0] == opts
+    assert _choose()[0] == opts
+
+
+def _finish(archive: str) -> None:
+    with open(archive, "wb") as f:
+        f.write(session._ARCHIVE_MAGIC + b"\0" * 60)
 
 
 def test_finished_archive_is_mapped(fake_install):
-    archive = _flag_path(session._class_archive("8g")[0], "-XX:ArchiveClassesAtExit")
-    with open(archive, "wb") as f:
-        f.write(session._ARCHIVE_MAGIC + b"\0" * 60)
-    opts, _ = session._class_archive("8g")
+    archive = _flag_path(_choose()[0], "-XX:ArchiveClassesAtExit")
+    _finish(archive)
+    opts, _ = _choose()
     assert _flag_path(opts, "-XX:SharedArchiveFile") == archive
     assert "ArchiveClassesAtExit" not in opts
 
 
-def test_new_jar_mtime_or_heap_is_a_new_key_and_drops_stale_archive(fake_install):
+def test_heaps_share_an_archive_per_compressed_oops_mode(fake_install):
+    """Alternating heaps below 32g map one archive; a heap of 32g or more
+    records its own beside it, and neither deletes the other."""
+    small = _flag_path(_choose("1g")[0], "-XX:ArchiveClassesAtExit")
+    _finish(small)
+    large = _flag_path(_choose("48g")[0], "-XX:ArchiveClassesAtExit")
+    assert large != small and os.path.exists(small)
+    _finish(large)
+    for heap, archive in [("8g", small), ("32g", large), ("1024m", small), ("48g", large)]:
+        assert _flag_path(_choose(heap)[0], "-XX:SharedArchiveFile") == archive, heap
+
+
+def test_new_jar_mtime_is_a_new_key_and_drops_stale_archive(fake_install):
     spark_home, cache = fake_install
-    old = _flag_path(session._class_archive("8g")[0], "-XX:ArchiveClassesAtExit")
-    with open(old, "wb") as f:
-        f.write(session._ARCHIVE_MAGIC)
+    old = _flag_path(_choose()[0], "-XX:ArchiveClassesAtExit")
+    _finish(old)
     st = os.stat(spark_home / "jars" / "b.jar")
     os.utime(spark_home / "jars" / "b.jar", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
-    new = _flag_path(session._class_archive("8g")[0], "-XX:ArchiveClassesAtExit")
+    new = _flag_path(_choose()[0], "-XX:ArchiveClassesAtExit")
     assert new != old and not os.path.exists(old)
-    other = _flag_path(session._class_archive("48g")[0], "-XX:ArchiveClassesAtExit")
-    assert other != new
 
+
+def test_unparsable_driver_memory_starts_jvm_as_spark_would(fake_install):
+    assert _choose("8192") is None

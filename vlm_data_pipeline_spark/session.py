@@ -16,15 +16,18 @@ The driver JVM starts from a JDK dynamic class-data archive of the classes
 Spark loads (JEP 350), so it links far fewer classes from jars at start-up
 (OPTIMIZATION_r14.md, "Driver start-up from a class-data archive").
 The archive lives at
-``${XDG_CACHE_HOME:-~/.cache}/vlm_data_pipeline_spark/<key>.jsa``, keyed by
-the JDK, Spark's jars and the driver heap size: the first driver on a
-machine writes it at JVM exit (``-XX:ArchiveClassesAtExit``), later ones
-map it (``-XX:SharedArchiveFile``). These are the only JVM flags the
-session adds. The JVM archives nothing while a non-empty directory is on
-the classpath, and Spark's launcher puts the conf directory first: a conf
-directory holding only ``*.template`` files is swapped for an empty one for
-the launch, and one holding any real file starts the JVM without the
-archive, exactly as Spark would.
+``${XDG_CACHE_HOME:-~/.cache}/vlm_data_pipeline_spark/<key>-<oops>.jsa``,
+keyed by the JDK and Spark's jars, and by whether the driver heap is below
+32g (compressed oops) or not: the first driver on a machine writes it at JVM
+exit (``-XX:ArchiveClassesAtExit``), later ones map it
+(``-XX:SharedArchiveFile``). These are the only JVM flags the session adds.
+The JVM archives nothing while a non-empty directory is on the classpath,
+and Spark's launcher puts the conf directory first: a conf directory holding
+only ``*.template`` files is swapped for an empty one for the launch. A conf
+directory holding any real file, any other classpath input of the launcher
+(``spark.driver.extraClassPath``, ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR``,
+``SPARK_DIST_CLASSPATH``, ...), or a cache directory that cannot be made
+starts the JVM without the archive, exactly as Spark would.
 """
 
 from __future__ import annotations
@@ -43,6 +46,18 @@ _JVM_MEMORY = re.compile(r"^[1-9][0-9]*[kmgtKMGT]$")
 # First bytes of a finished dynamic archive (CDS_DYNAMIC_ARCHIVE_MAGIC,
 # little-endian); the JVM writes the header last, so a cut-short dump lacks it.
 _ARCHIVE_MAGIC = bytes.fromhex("a8ab0bf0")
+# What else Spark's launcher puts on the driver classpath, any of which may
+# name a non-empty directory; the JVM then neither dumps nor maps an archive.
+_CLASSPATH_ENV = (
+    "HADOOP_CONF_DIR",
+    "YARN_CONF_DIR",
+    "SPARK_DIST_CLASSPATH",
+    "SPARK_PREPEND_CLASSES",
+    "SPARK_TESTING",
+    "SPARK_SQL_TESTING",
+)
+_CLASSPATH_CONF = ("spark.driver.extraClassPath", "spark.driver.defaultExtraClassPath")
+_SUBMIT_CLASSPATH = re.compile(r"class-?path|properties-file", re.IGNORECASE)
 
 
 def _env_cpus(default: int = 32) -> int:
@@ -69,6 +84,11 @@ def _env_driver_memory() -> str:
     return raw
 
 
+def _heap_bytes(size: str) -> int:
+    """Bytes in a JVM memory size that matches ``_JVM_MEMORY``."""
+    return int(size[:-1]) << 10 * (1 + "kmgt".index(size[-1].lower()))
+
+
 def _worker_pythonpath() -> str:
     """PYTHONPATH for Python workers: the directory holding this package,
     then any inherited PYTHONPATH. Workers unpickle the engine's kernels by
@@ -79,22 +99,37 @@ def _worker_pythonpath() -> str:
     return os.pathsep.join(p for p in (parent, inherited) if p)
 
 
-def _class_archive(driver_memory: str) -> tuple[str, str] | None:
+def _class_archive(conf: dict[str, str]) -> tuple[str, str] | None:
     """Driver JVM options that map (or, failing that, record) the class-data
     archive, and the empty conf directory to launch with; ``None`` when the
-    effective conf directory holds a real file or the JDK or jars cannot be
-    read, so the JVM starts as Spark would start it."""
-    spark_home = _find_spark_home()
-    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
-    if os.path.isdir(conf_dir) and any(
-        not name.endswith(".template") for name in os.listdir(conf_dir)
+    driver classpath may hold a non-empty directory (a conf directory with a
+    real file, or any of the launcher's other classpath inputs), or the
+    JDK, jars or cache cannot be read or made, so the JVM starts as Spark
+    would start it. ``conf`` is the session's settings."""
+    heap = conf.get("spark.driver.memory", "")
+    if (
+        not _JVM_MEMORY.fullmatch(heap)
+        or any(os.environ.get(name) for name in _CLASSPATH_ENV)
+        or any(conf.get(key) for key in _CLASSPATH_CONF)
+        or _SUBMIT_CLASSPATH.search(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
     ):
         return None
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     java_home = os.environ.get("JAVA_HOME") or os.path.dirname(
         os.path.dirname(os.path.realpath(shutil.which("java") or "java"))
     )
-    key = hashlib.sha256(driver_memory.encode())
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "vlm_data_pipeline_spark",
+    )
+    empty_conf = os.path.join(cache, "conf")
+    key = hashlib.sha256()
     try:
+        if os.path.isdir(conf_dir) and any(
+            not name.endswith(".template") for name in os.listdir(conf_dir)
+        ):
+            return None
         for path in (
             os.path.join(java_home, "lib", "modules"),
             os.path.join(java_home, "lib", "server", "libjvm.so"),
@@ -102,15 +137,15 @@ def _class_archive(driver_memory: str) -> tuple[str, str] | None:
         ):
             st = os.stat(path)
             key.update(f"{path}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+        os.makedirs(empty_conf, exist_ok=True)
+        if os.listdir(empty_conf):
+            return None
     except OSError:
         return None
-    cache = os.path.join(
-        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
-        "vlm_data_pipeline_spark",
-    )
-    empty_conf = os.path.join(cache, "conf")
-    os.makedirs(empty_conf, exist_ok=True)
-    archive = os.path.join(cache, key.hexdigest()[:32] + ".jsa")
+    # heaps of 32g and more turn compressed oops off, which the archive records
+    stem = key.hexdigest()[:32]
+    oops = "oops" if _heap_bytes(heap) >= 32 << 30 else "coops"
+    archive = os.path.join(cache, f"{stem}-{oops}.jsa")
     try:
         with open(archive, "rb") as f:
             finished = f.read(4) == _ARCHIVE_MAGIC
@@ -118,12 +153,15 @@ def _class_archive(driver_memory: str) -> tuple[str, str] | None:
         finished = False
     if finished:
         flag = f"-XX:SharedArchiveFile={archive}"
-    else:
+    elif os.access(cache, os.W_OK):
+        # archives of another JDK or jar set can never map again
         for stale in glob.glob(os.path.join(cache, "*.jsa")):
-            if stale != archive:
+            if not os.path.basename(stale).startswith(stem + "-"):
                 with contextlib.suppress(OSError):
                     os.remove(stale)
         flag = f"-XX:ArchiveClassesAtExit={archive}"
+    else:
+        return None
     # the JVM's stdout is the caller's: no per-class "Skipping" warnings
     return f"{flag} -Xlog:cds*=off", empty_conf
 
@@ -164,7 +202,7 @@ def get_spark(
         .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )
     extra_conf = extra_conf or {}
-    archive = _class_archive(extra_conf.get("spark.driver.memory", driver_memory))
+    archive = _class_archive({"spark.driver.memory": driver_memory, **extra_conf})
     if archive is not None:
         # Spark puts these in front of the caller's extraJavaOptions
         builder = builder.config("spark.driver.defaultJavaOptions", archive[0])
