@@ -232,3 +232,13 @@ def test_new_jar_mtime_is_a_new_key_and_drops_stale_archive(fake_install):
 
 def test_unparsable_driver_memory_starts_jvm_as_spark_would(fake_install):
     assert _choose("8192") is None
+
+
+def test_read_only_cache_maps_a_finished_archive_and_never_records(
+    fake_install, monkeypatch
+):
+    archive = _flag_path(_choose()[0], "-XX:ArchiveClassesAtExit")
+    monkeypatch.setattr(session.os, "access", lambda path, mode: False)
+    assert _choose() is None
+    _finish(archive)
+    assert _flag_path(_choose()[0], "-XX:SharedArchiveFile") == archive
