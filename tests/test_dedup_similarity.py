@@ -257,6 +257,54 @@ def test_ws_chunk_count_degenerate_rows(spark):
     assert spark_n == duck_n == [0, 0, 2, 2, 1]
 
 
+# four well-separated clusters of 12 float vectors in 3-d
+_IVF_ROWS = [
+    (c * 12 + i, [10.0 * c + (i % 3 - 1) * 0.5, (i % 4) * 0.25, -3.0 * c])
+    for c in range(4)
+    for i in range(12)
+]
+_IVF_SCHEMA = "vec_id long, embedding array<float>"
+
+
+def test_ivf_index_assigns_every_row_to_its_nearest_centroid(spark):
+    """The coarse quantizer fits on the plain array column (the session
+    loads no MLlib extension, so ``array_to_vector`` would not resolve):
+    ``n_lists`` centroids, every input row kept once with its vector, each
+    ``list_id`` the nearest centroid, and no vector-typed column out."""
+    corpus = spark.createDataFrame(_IVF_ROWS, _IVF_SCHEMA)
+    assigned, centroids = similarity.ivf_index(corpus, n_lists=4)
+    assert assigned.dtypes == [
+        ("vec_id", "bigint"),
+        ("embedding", "array<float>"),
+        ("list_id", "int"),
+    ]
+    assert centroids.dtypes == [("list_id", "int"), ("centroid", "array<double>")]
+    cents = {r.list_id: r.centroid for r in centroids.collect()}
+    assert sorted(cents) == [0, 1, 2, 3]
+    rows = assigned.collect()
+    assert sorted((r.vec_id, r.embedding) for r in rows) == sorted(
+        tuple(r) for r in corpus.collect()
+    )
+    for r in rows:
+        d2 = {
+            lid: sum((x - y) ** 2 for x, y in zip(r.embedding, c))
+            for lid, c in cents.items()
+        }
+        assert r.list_id == min(d2, key=d2.get), (r, d2)
+    assert len({r.list_id for r in rows}) == 4  # one list per cluster
+
+
+@pytest.mark.parametrize(
+    "bad", [(99, [1.0, None, 2.0]), (99, None)], ids=["null_element", "null_row"]
+)
+def test_ivf_index_raises_on_null_vectors(spark, bad):
+    """A NULL element or a NULL vector fails the fit: it is never dropped
+    or read as zero."""
+    corpus = spark.createDataFrame([*_IVF_ROWS, bad], _IVF_SCHEMA)
+    with pytest.raises(Exception, match="NULL"):
+        similarity.ivf_index(corpus, n_lists=4)
+
+
 def test_ivf_fixed_centroids_recall_and_degenerate_exactness(spark, sf_dir):
     """Deterministic-quantizer IVF: with nprobe == n_lists every list is
     probed, so the result must EQUAL brute force; with nprobe < n_lists

@@ -5,10 +5,12 @@ test compares the engine against). A function only tests call is surface to
 delete, or a fixture to keep under ``tests/``.
 
 Pure AST scan, no Spark. A reference is a name or attribute use, a
-``from ... import`` of the name, or an identifier-like string (``__all__``
-entries) in the package, ``tools/``, ``perfbench/``, ``bench.py`` or
-``__spark_entry__.py``; a function's use of its own name does not count.
-Functions registered with ``@register`` are used by the query registry.
+``from ... import`` of the name, or an identifier-like string in the
+package, ``tools/``, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``.
+Re-exports are not references: a package ``__init__.py``'s ``from ...
+import`` or ``__all__`` entry does not count, nor does a function's use of
+its own name. Functions registered with ``@register`` are used by the
+query registry.
 """
 
 from __future__ import annotations
@@ -56,6 +58,17 @@ def _names(node: ast.AST) -> list[str]:
     return out
 
 
+def _is_reexport(path: Path, top: ast.stmt) -> bool:
+    """An import or ``__all__`` assignment at the top of a package
+    ``__init__.py``: both name a function without calling it."""
+    if path.name != "__init__.py":
+        return False
+    return isinstance(top, ast.ImportFrom) or (
+        isinstance(top, ast.Assign)
+        and any(getattr(t, "id", None) == "__all__" for t in top.targets)
+    )
+
+
 def test_every_public_function_has_a_caller_or_a_citation():
     trees = {
         path: ast.parse(path.read_text(), str(path))
@@ -66,6 +79,8 @@ def test_every_public_function_has_a_caller_or_a_citation():
     self_uses: dict[tuple[Path, str], int] = {}
     for path, tree in trees.items():
         for top in tree.body:
+            if _is_reexport(path, top):
+                continue
             names = _names(top)
             uses.update(names)
             if isinstance(top, ast.FunctionDef):
@@ -88,3 +103,15 @@ def test_every_public_function_has_a_caller_or_a_citation():
         "test-reference citation:\n" + "\n".join(orphans)
     )
 
+
+def test_package_reexports_are_not_callers():
+    """A package ``__init__.py``'s imports and ``__all__`` name functions
+    without calling them; other statements there, and a module's own
+    imports, still count."""
+    init = ast.parse("from .m import f\n__all__ = ['f']\nx = g()\n")
+    assert [_is_reexport(PACKAGE / "__init__.py", t) for t in init.body] == [
+        True,
+        True,
+        False,
+    ]
+    assert not _is_reexport(PACKAGE / "m.py", init.body[0])

@@ -5,10 +5,11 @@ The driver's only JVM flags are the class-data archive options
 ``-Xlog:cds*=off``), which change how classes load, not what runs. The
 ``-XX:-DontCompileHugeMethods`` flag once used to JIT a 64-term generated
 kernel taxed every query sharing the JVM about 2x (OPTIMIZATION_r14.md §1).
-These tests pin the archive launch, the flag's absence, Spark's default
-codegen ceiling, the AQE and file-split settings the session inherits from
-Spark, the absence of allocator overrides in the executor env, and the
-Python worker path that lets workers import the engine from any cwd.
+These tests pin the archive launch, the flag's absence, a set-up that skips
+MLlib's class-path session extension, Spark's default codegen ceiling, the
+AQE and file-split settings the session inherits from Spark, the absence of
+allocator overrides in the executor env, and the Python worker path that
+lets workers import the engine from any cwd.
 """
 
 from __future__ import annotations
@@ -126,6 +127,20 @@ def test_live_driver_starts_from_the_class_archive(spark):
     assert os.path.isdir(first) and os.listdir(first) == [], first
 
 
+def _engine_env(**overrides: str) -> dict[str, str]:
+    """The caller's env with this checkout first on ``PYTHONPATH``, for a
+    driver started in a subprocess."""
+    path = os.pathsep.join(
+        p
+        for p in (
+            os.path.dirname(os.path.dirname(vlm_data_pipeline_spark.__file__)),
+            os.environ.get("PYTHONPATH"),
+        )
+        if p
+    )
+    return dict(os.environ, PYTHONPATH=path, **overrides)
+
+
 _ONE_SESSION = r"""
 import json, os, sys
 from pyspark import SparkContext
@@ -138,7 +153,11 @@ spark = get_spark("archive-probe", cpus=2, extra_conf=log)
 spark.range(1000).selectExpr("sum(id)").collect()
 rt = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
 args = [rt.getInputArguments().get(i) for i in range(rt.getInputArguments().size())]
-info = {"args": args, "env_kept": os.environ.get("SPARK_CONF_DIR") == before}
+info = {
+    "args": args,
+    "env_kept": os.environ.get("SPARK_CONF_DIR") == before,
+    "loadFromCp": spark.conf.get("spark.sql.extensions.test.loadFromCp"),
+}
 gw = SparkContext._gateway
 proc = gw.proc
 spark.stop()
@@ -155,19 +174,7 @@ def test_first_session_records_and_second_maps(tmp_path):
     and prints nothing about it; the next driver maps that archive and
     loads Spark's classes from it (the dynamic archive is the "top" layer
     over the JDK's base archive)."""
-    env = dict(
-        os.environ,
-        XDG_CACHE_HOME=str(tmp_path),
-        SPARK_GRAFT_DRIVER_MEM="1g",
-        PYTHONPATH=os.pathsep.join(
-            p
-            for p in (
-                os.path.dirname(os.path.dirname(vlm_data_pipeline_spark.__file__)),
-                os.environ.get("PYTHONPATH"),
-            )
-            if p
-        ),
-    )
+    env = _engine_env(XDG_CACHE_HOME=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g")
     runs = []
     for i in range(2):
         out = subprocess.run(
@@ -189,3 +196,24 @@ def test_first_session_records_and_second_maps(tmp_path):
     assert source not in (tmp_path / "load0.log").read_text()
     assert source in (tmp_path / "load1.log").read_text()
     archive.unlink()  # about 100 MB
+
+
+def test_set_up_skips_classpath_session_extensions(tmp_path):
+    """The session skips the class-path scan for session extensions, so
+    set-up never runs MLlib's extension, which builds Scala's
+    runtime-reflection universe to register functions no engine plan
+    resolves (OPTIMIZATION_r14.md, "Set-up without class-path session
+    extensions")."""
+    log = tmp_path / "load.log"
+    out = subprocess.run(
+        [sys.executable, "-c", _ONE_SESSION, str(log)],
+        env=_engine_env(), capture_output=True, text=True, timeout=600, check=True,
+    ).stdout
+    assert json.loads(out.strip().splitlines()[-1])["loadFromCp"] == "false"
+    loaded = log.read_text()
+    assert "org.apache.spark.sql.SparkSession " in loaded  # the log is live
+    for cls in (
+        "org.apache.spark.sql.ml.InternalFunctionRegistration",
+        "scala.reflect.runtime.JavaUniverse",
+    ):
+        assert f"{cls} " not in loaded, cls

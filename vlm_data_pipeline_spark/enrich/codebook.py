@@ -613,7 +613,8 @@ def refine_masks(
     crop rows → refined tight boxes via an Arrow-batched mapInPandas
     refiner (SAM in production, deterministic stub here). Output joins
     back on instance_id — the refined crops feed the Stage-B classifier
-    (two_stage_cascade / hierarchical_codebook_v2)."""
+    (two_stage_cascade / hierarchical_codebook_v2). SURVEY §2.10 M5 (SAM
+    mask refinement)."""
     fn = refiner or stub_mask_refiner()
     return crops.select(
         "instance_id", "x_min", "y_min", "x_max", "y_max"

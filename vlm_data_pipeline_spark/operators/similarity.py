@@ -272,14 +272,21 @@ def ivf_index(
     (pyspark.ml, distributed), store each vector with its inverted-list id.
     Returns (assigned DataFrame with ``list_id``, centroid table DataFrame).
     Centroids are a tiny dimension (n_lists × d) — always broadcast.
+    KMeans reads an ``array<double>`` of non-null elements itself
+    (``array_to_vector`` resolves only through MLlib's session extension,
+    which ``get_spark`` does not load). A NULL vector or element raises.
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
 
+    vec = F.col(vec_col).cast("array<double>")
+    has_null = vec.isNull() | F.exists(vec, lambda x: x.isNull())
     feat = corpus.select(
         F.col(id_col),
         F.col(vec_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
+        # the coalesce only types the elements non-null: a NULL raises first
+        F.when(has_null, F.raise_error(F.lit(f"ivf_index: NULL in {vec_col}")))
+        .otherwise(F.transform(vec, lambda x: F.coalesce(x, F.lit(0.0))))
+        .alias("features"),
     )
     model = KMeans(k=n_lists, seed=seed, maxIter=20).fit(feat)
     assigned = (

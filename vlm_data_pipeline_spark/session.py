@@ -8,6 +8,11 @@ settings that differ from Spark's own defaults are set:
   through ``extra_conf``)
 - Arrow enabled for every pandas-UDF boundary
 - session timezone pinned to UTC so results are oracle-comparable
+- no class-path scan for session extensions (``spark.sql.extensions.test.loadFromCp``)
+
+A Spark without that test-only conf ignores it and only loses the set-up gain
+(OPTIMIZATION_r14.md, "Set-up without class-path session extensions");
+``spark.sql.extensions`` still loads, and ``extra_conf`` can turn the scan on.
 
 AQE, its partition coalescing and skew-join splitting, and the 128 MiB
 file-split size are Spark's defaults and are inherited, not set.
@@ -200,6 +205,9 @@ def get_spark(
         # refuses by default; read as long and convert at the source wrapper
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
+        # MLlib's discovered extension builds Scala's runtime-reflection
+        # universe to register functions no engine plan resolves
+        .config("spark.sql.extensions.test.loadFromCp", "false")
     )
     extra_conf = extra_conf or {}
     archive = _class_archive({"spark.driver.memory": driver_memory, **extra_conf})

@@ -88,7 +88,8 @@ def stream_events(
 
 
 def batch_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same records via the batch reader (the streaming tests' oracle)."""
+    """The same records via the batch reader: the test reference that the
+    streaming operators' results are compared against."""
     path = f"{sf_dir}/events.parquet"
     nanos = _ts_is_nanos(spark, path)
     return _normalize(spark.read.schema(_events_schema(nanos)).parquet(path), nanos)
