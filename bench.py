@@ -89,11 +89,42 @@ def _foreign_jvms() -> int:
         return -1  # unknown — never abort the benchmark over the probe
 
 
+def _env_switch(name: str, default: str) -> bool:
+    """``name`` as ``0`` or ``1``: any other value used to read as off."""
+    raw = os.environ.get(name, default)
+    if raw not in ("0", "1"):
+        raise ValueError(f"{name} must be 0 or 1, got {raw!r}")
+    return raw == "1"
+
+
+def _env_quiet_wait() -> float:
+    """``BENCH_QUIET_WAIT_SEC`` (default 120) as a non-negative number of
+    seconds."""
+    raw = os.environ.get("BENCH_QUIET_WAIT_SEC", "120")
+    try:
+        seconds = float(raw)
+    except ValueError:
+        seconds = -1.0
+    if not 0 <= seconds < float("inf"):
+        raise ValueError(
+            f"BENCH_QUIET_WAIT_SEC must be a non-negative number of seconds, got {raw!r}"
+        )
+    return seconds
+
+
 def main() -> int | None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from vlm_data_pipeline_spark.session import _env_cpus
+    from vlm_data_pipeline_spark.session import _env_cpus, _env_positive_int
 
+    # every knob is checked before the box is probed or a JVM starts
     cpus = _env_cpus()
+    wait_budget = _env_quiet_wait()
+    warmup = _env_switch("BENCH_WARMUP", "1")
+    # BENCH_PLANS=1: also report per-query Exchange counts on stderr —
+    # plan-shape regressions (a new shuffle) matter more than wall-clock
+    # noise (±30% box variance); stdout stays the single JSON line.
+    audit_plans = _env_switch("BENCH_PLANS", "0")
+    runs = _env_positive_int("BENCH_RUNS", 2)
 
     # snapshot BEFORE our own JVM starts: anything alive now is foreign.
     # VERDICT r10 #3: a foreign JVM swings wall-clocks ±2.5× and the
@@ -102,7 +133,6 @@ def main() -> int | None:
     # `contaminated` so cross-round tooling can exclude it instead of
     # adjudicating after the fact.
     foreign_jvms = _foreign_jvms()
-    wait_budget = float(os.environ.get("BENCH_QUIET_WAIT_SEC", "120"))
     waited = 0.0
     while foreign_jvms > 0 and waited < wait_budget:
         time.sleep(5.0)
@@ -157,7 +187,7 @@ def main() -> int | None:
         "SPARK_GRAFT_WARMUP_DIR",
         os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001"),
     )
-    if os.environ.get("BENCH_WARMUP", "1") == "1" and os.path.isdir(warm_dir):
+    if warmup and os.path.isdir(warm_dir):
         t0 = time.perf_counter()
         for name in headline:
             q0 = QUERIES.get(name)
@@ -165,11 +195,6 @@ def main() -> int | None:
                 q0.build(spark, warm_dir).count()
         spark.catalog.clearCache()
         warmup_s = round(time.perf_counter() - t0, 3)
-
-    # BENCH_PLANS=1: also report per-query Exchange counts on stderr —
-    # plan-shape regressions (a new shuffle) matter more than wall-clock
-    # noise (±30% box variance); stdout stays the single JSON line.
-    audit_plans = os.environ.get("BENCH_PLANS") == "1"
 
     # Steady-state protocol (round 7): each query is executed BENCH_RUNS
     # times (default 2) and `queries` reports the per-query MIN; the
@@ -182,7 +207,6 @@ def main() -> int | None:
     # mechanism behind the r6 'drift on unchanged code'. Min-of-N is the
     # standard steady-state estimator; both numbers stay in the JSON so
     # cold-start cost is visible, not hidden.
-    runs = int(os.environ.get("BENCH_RUNS", "2"))
     timings: dict[str, float] = {}
     first_run: dict[str, float] = {}
     for name in headline:
@@ -190,7 +214,7 @@ def main() -> int | None:
         if q is None:
             continue
         walls = []
-        for _ in range(max(1, runs)):
+        for _ in range(runs):
             # Each run starts from a clean cache: generate_all (and
             # other pipelines) persist intermediates; clearing keeps
             # each run's persist cost inside its own timing — the

@@ -1,11 +1,14 @@
 """Pin the session configuration `get_spark` ships.
 
-The driver's only JVM flags are the class-data archive options
-(``-XX:ArchiveClassesAtExit`` or ``-XX:SharedArchiveFile``, with
-``-Xlog:cds*=off``), which change how classes load, not what runs. The
+The driver's only JVM flags are the Parallel collector
+(``-XX:+UseParallelGC``, unless the caller names a collector) and the
+class-data archive options (``-XX:ArchiveClassesAtExit`` or
+``-XX:SharedArchiveFile``, with ``-Xlog:cds*=off``), which change how
+memory is collected and classes load, not what runs. The
 ``-XX:-DontCompileHugeMethods`` flag once used to JIT a 64-term generated
 kernel taxed every query sharing the JVM about 2x (OPTIMIZATION_r14.md §1).
-These tests pin the archive launch, the flag's absence, a set-up that skips
+These tests pin the collector, a caller's collector winning over it, the
+archive launch, the huge-method flag's absence, a set-up that skips
 MLlib's class-path session extension, Spark's default codegen ceiling, the
 AQE and file-split settings the session inherits from Spark, the absence of
 allocator overrides in the executor env, and the Python worker path that
@@ -26,6 +29,8 @@ import vlm_data_pipeline_spark
 from vlm_data_pipeline_spark import session
 
 ARCHIVE_FLAGS = ("-XX:ArchiveClassesAtExit=", "-XX:SharedArchiveFile=")
+PARALLEL_BEANS = ["PS MarkSweep", "PS Scavenge"]
+G1_BEANS = ["G1 Old Generation", "G1 Young Generation"]
 
 
 def test_no_jvm_flag_overrides_by_default(spark):
@@ -108,6 +113,22 @@ def _conf_dir_has_real_file() -> bool:
     )
 
 
+def _collector_beans(spark) -> list[str]:
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    beans = mf.getGarbageCollectorMXBeans()
+    return sorted(beans.get(i).getName() for i in range(beans.size()))
+
+
+@pytest.mark.skipif(
+    session._caller_collector({}) != "", reason="the caller's env names a collector"
+)
+def test_live_driver_runs_the_parallel_collector(spark):
+    """The pipeline is a batch job: the driver runs the throughput
+    collector, and says so in its input arguments."""
+    assert _collector_beans(spark) == PARALLEL_BEANS
+    assert "-XX:+UseParallelGC" in _input_args(spark)
+
+
 def test_live_driver_starts_from_the_class_archive(spark):
     """One archive option rides the live driver, pointing into the cache,
     and the launch's conf dir (first on the classpath) is empty; a conf dir
@@ -147,14 +168,17 @@ from pyspark import SparkContext
 from vlm_data_pipeline_spark.session import get_spark
 
 before = os.environ.get("SPARK_CONF_DIR")
-# the caller's own driver options still apply next to the archive options
-log = {"spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={sys.argv[1]}"}
-spark = get_spark("archive-probe", cpus=2, extra_conf=log)
+# the caller's own driver options still apply next to the session's
+opts = " ".join([f"-Xlog:class+load=info:file={sys.argv[1]}", *sys.argv[2:]])
+spark = get_spark("archive-probe", cpus=2, extra_conf={"spark.driver.extraJavaOptions": opts})
 spark.range(1000).selectExpr("sum(id)").collect()
-rt = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+mf = spark._jvm.java.lang.management.ManagementFactory
+rt = mf.getRuntimeMXBean()
 args = [rt.getInputArguments().get(i) for i in range(rt.getInputArguments().size())]
+beans = mf.getGarbageCollectorMXBeans()
 info = {
     "args": args,
+    "collectors": sorted(beans.get(i).getName() for i in range(beans.size())),
     "env_kept": os.environ.get("SPARK_CONF_DIR") == before,
     "loadFromCp": spark.conf.get("spark.sql.extensions.test.loadFromCp"),
 }
@@ -192,6 +216,8 @@ def test_first_session_records_and_second_maps(tmp_path):
     assert recorded == [f"-XX:ArchiveClassesAtExit={archive}"], recorded
     assert mapped == [f"-XX:SharedArchiveFile={archive}"], mapped
     assert runs[0]["env_kept"] and runs[1]["env_kept"]
+    for run in runs:
+        assert "-XX:+UseParallelGC" in run["args"], run["args"]
     source = "org.apache.spark.SparkContext source: shared objects file (top)"
     assert source not in (tmp_path / "load0.log").read_text()
     assert source in (tmp_path / "load1.log").read_text()
@@ -217,3 +243,15 @@ def test_set_up_skips_classpath_session_extensions(tmp_path):
         "scala.reflect.runtime.JavaUniverse",
     ):
         assert f"{cls} " not in loaded, cls
+
+
+def test_callers_collector_wins(tmp_path):
+    """A collector the caller names in the driver's extra Java options
+    replaces the session's (two collector flags would stop the JVM)."""
+    out = subprocess.run(
+        [sys.executable, "-c", _ONE_SESSION, str(tmp_path / "load.log"), "-XX:+UseG1GC"],
+        env=_engine_env(), capture_output=True, text=True, timeout=600, check=True,
+    ).stdout
+    info = json.loads(out.strip().splitlines()[-1])
+    assert info["collectors"] == G1_BEANS
+    assert "-XX:+UseParallelGC" not in info["args"]

@@ -1,11 +1,15 @@
 """Bad session env knobs fail in Python, naming the variable, before any
 JVM starts (Spark would report them only as a gateway exit or an opaque
-master-URL error), and the driver's class-data archive is chosen from the
-install and the cache alone. No SparkSession is created here."""
+master-URL error), the driver's collector is the caller's wherever the
+caller names one, and the driver's class-data archive is chosen from the
+install and the cache alone. No SparkSession is created here; one test
+starts bare ``java -version`` JVMs to read their compressed-oops mode."""
 
 from __future__ import annotations
 
 import os
+import shutil
+import subprocess
 from types import SimpleNamespace
 
 import pytest
@@ -64,6 +68,49 @@ def test_bench_reads_cpus_through_the_checked_parser(monkeypatch):
         bench.main()
 
 
+@pytest.mark.parametrize(
+    "name, raw",
+    [
+        ("BENCH_WARMUP", "true"),
+        ("BENCH_WARMUP", ""),
+        ("BENCH_PLANS", "yes"),
+        ("BENCH_RUNS", "0"),
+        ("BENCH_RUNS", "-3"),
+        ("BENCH_RUNS", "abc"),
+        ("BENCH_QUIET_WAIT_SEC", "abc"),
+        ("BENCH_QUIET_WAIT_SEC", "-5"),
+        ("BENCH_QUIET_WAIT_SEC", "nan"),
+    ],
+)
+def test_bench_rejects_bad_knobs_before_any_jvm(monkeypatch, name, raw):
+    """bench.main() names a bad knob before it probes the box or starts a
+    JVM; ``BENCH_WARMUP=true`` used to skip the warm-up and
+    ``BENCH_RUNS=0`` to run once, silently."""
+    import bench
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    monkeypatch.setenv(name, raw)
+    monkeypatch.setattr(
+        bench, "_foreign_jvms", lambda: pytest.fail("probed before the check")
+    )
+    with pytest.raises(ValueError, match=name):
+        bench.main()
+
+
+def test_bench_knob_defaults_and_good_values(monkeypatch):
+    import bench
+
+    for name in ("BENCH_WARMUP", "BENCH_PLANS", "BENCH_QUIET_WAIT_SEC"):
+        monkeypatch.delenv(name, raising=False)
+    assert bench._env_switch("BENCH_WARMUP", "1") is True
+    assert bench._env_switch("BENCH_PLANS", "0") is False
+    assert bench._env_quiet_wait() == 120.0
+    monkeypatch.setenv("BENCH_WARMUP", "0")
+    monkeypatch.setenv("BENCH_QUIET_WAIT_SEC", "0")
+    assert bench._env_switch("BENCH_WARMUP", "1") is False
+    assert bench._env_quiet_wait() == 0.0
+
+
 # -- class-data archive choice (no JVM) ---------------------------------------
 
 
@@ -88,6 +135,9 @@ def fake_install(tmp_path, monkeypatch):
     return spark_home, xdg / "vlm_data_pipeline_spark"
 
 
+PARALLEL = "-XX:+UseParallelGC"
+
+
 def _flag_path(opts: str, flag: str) -> str:
     (path,) = [o.split("=", 1)[1] for o in opts.split() if o.startswith(flag + "=")]
     return path
@@ -106,8 +156,8 @@ def _fake_launch(monkeypatch) -> dict:
     return seen
 
 
-def _choose(heap: str = "8g", **conf: str):
-    return session._class_archive({"spark.driver.memory": heap, **conf})
+def _choose(heap: str = "8g", collector: str = "Parallel", **conf: str):
+    return session._class_archive({"spark.driver.memory": heap, **conf}, collector)
 
 
 def test_templates_only_conf_dir_gets_archive_and_empty_conf(fake_install):
@@ -120,9 +170,10 @@ def test_templates_only_conf_dir_gets_archive_and_empty_conf(fake_install):
 
 
 def _assert_launches_as_spark_would(monkeypatch, **extra_conf: str) -> None:
+    """No archive option and no conf-dir swap; the collector is still set."""
     seen = _fake_launch(monkeypatch)
     session.get_spark(cpus=2, extra_conf=extra_conf)
-    assert "spark.driver.defaultJavaOptions" not in seen["options"]
+    assert seen["options"]["spark.driver.defaultJavaOptions"] == PARALLEL
     assert seen["conf_dir"] == os.environ.get("SPARK_CONF_DIR")
 
 
@@ -181,7 +232,7 @@ def test_launch_swaps_conf_dir_only_for_the_launch(fake_install, monkeypatch):
     seen = _fake_launch(monkeypatch)
     session.get_spark(cpus=2)
     opts, conf = _choose()
-    assert seen["options"]["spark.driver.defaultJavaOptions"] == opts
+    assert seen["options"]["spark.driver.defaultJavaOptions"] == f"{PARALLEL} {opts}"
     assert seen["conf_dir"] == conf
     assert os.environ["SPARK_CONF_DIR"] == str(fake_install[0] / "conf")
 
@@ -242,3 +293,128 @@ def test_read_only_cache_maps_a_finished_archive_and_never_records(
     assert _choose() is None
     _finish(archive)
     assert _flag_path(_choose()[0], "-XX:SharedArchiveFile") == archive
+
+
+# -- the driver's collector (no JVM) ------------------------------------------
+
+
+def _launch_options(monkeypatch, **extra_conf: str) -> str | None:
+    seen = _fake_launch(monkeypatch)
+    session.get_spark(cpus=2, extra_conf=extra_conf)
+    return seen["options"].get("spark.driver.defaultJavaOptions")
+
+
+def test_parallel_collector_rides_next_to_the_archive(fake_install, monkeypatch):
+    """Driver options that name no collector (perfbench's, for one) get the
+    Parallel collector in front of the archive options."""
+    opts = _launch_options(
+        monkeypatch, **{"spark.driver.extraJavaOptions": "-XX:-UsePerfData -Xss4m"}
+    )
+    assert opts == f"{PARALLEL} {_choose()[0]}"
+
+
+@pytest.mark.parametrize("name", session._JAVA_OPTIONS_ENV)
+def test_collector_named_in_env_wins(fake_install, monkeypatch, name):
+    value = "-Xss4m -XX:+UseSerialGC"
+    if name == "PYSPARK_SUBMIT_ARGS":
+        value = f"--driver-java-options '{value}' pyspark-shell"
+    monkeypatch.setenv(name, value)
+    opts = _launch_options(monkeypatch)
+    assert opts == _choose(collector="Serial")[0]
+    assert "UseParallelGC" not in opts
+
+
+def test_callers_default_java_options_are_kept_whole(fake_install, monkeypatch):
+    """No collector, no archive and no conf-dir swap beside them."""
+    seen = _fake_launch(monkeypatch)
+    session.get_spark(cpus=2, extra_conf={"spark.driver.defaultJavaOptions": "-Xss4m"})
+    assert seen["options"]["spark.driver.defaultJavaOptions"] == "-Xss4m"
+    assert seen["conf_dir"] is None
+
+
+@pytest.mark.parametrize(
+    "line, want",
+    [
+        ("spark.driver.extraJavaOptions -Xss4m -XX:+UseG1GC\n", None),
+        ("spark.driver.defaultJavaOptions -Xss4m\n", None),
+        ("spark.driver.memory 4g\n", PARALLEL),
+    ],
+)
+def test_spark_defaults_conf_collector_or_default_options_win(
+    fake_install, monkeypatch, line, want
+):
+    """A real spark-defaults.conf starts the JVM without the archive; its
+    collector or default Java options are never replaced."""
+    spark_home, _ = fake_install
+    (spark_home / "conf" / "spark-defaults.conf").write_text(line)
+    assert _launch_options(monkeypatch) == want
+
+
+def test_properties_file_keeps_its_java_options(fake_install, monkeypatch):
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--properties-file /srv/p pyspark-shell")
+    assert _launch_options(monkeypatch) is None
+
+
+@pytest.mark.parametrize(
+    "opts, collector",
+    [
+        ("-XX:+UseG1GC", "G1"),
+        ("-XX:+UseParallelGC", "Parallel"),  # the caller's, not repeated
+        ("-XX:-UseG1GC", None),
+        ("-XX:+UseG1GC -XX:+UseSerialGC", None),
+    ],
+)
+def test_collector_named_in_extra_java_options_wins(
+    fake_install, monkeypatch, opts, collector
+):
+    """The caller's collector gets the archive of its own oops mode and no
+    second collector; one only switched off, or two switched on, leave the
+    launch to the caller: no collector and no archive."""
+    launched = _launch_options(monkeypatch, **{"spark.driver.extraJavaOptions": opts})
+    assert launched == (collector and _choose(collector=collector)[0])
+
+
+# -- compressed-oops mode of the archive --------------------------------------
+
+
+@pytest.mark.parametrize(
+    "collector, coops, oops",
+    [
+        ("Parallel", "32766m", "32767m"),
+        ("Serial", "33552384k", "33552385k"),
+        ("G1", "32736m", "32737m"),
+        ("Shenandoah", "33521664k", "33521665k"),
+        ("Z", None, "1g"),
+    ],
+)
+def test_archive_oops_mode_follows_the_collectors_edge(
+    fake_install, collector, coops, oops
+):
+    if coops is not None:
+        assert _choose(coops, collector)[0].endswith("-coops.jsa -Xlog:cds*=off")
+    assert _choose(oops, collector)[0].endswith("-oops.jsa -Xlog:cds*=off")
+
+
+def test_unknown_collector_starts_jvm_without_archive(fake_install):
+    assert _choose(collector="Epsilon") is None
+
+
+def _jvm_compressed_oops(collector: str, heap: str) -> bool:
+    out = subprocess.run(
+        ["java", f"-XX:+Use{collector}GC", f"-Xmx{heap}", "-XX:+PrintFlagsFinal", "-version"],
+        capture_output=True, text=True, timeout=60, check=True,
+    ).stdout
+    (line,) = [x for x in out.splitlines() if x.split()[1:2] == ["UseCompressedOops"]]
+    return line.split()[3] == "true"
+
+
+@pytest.mark.skipif(shutil.which("java") is None, reason="no java on PATH")
+@pytest.mark.parametrize("collector", sorted(session._COOPS_MAX_HEAP))
+def test_oops_edges_match_the_jvm(collector):
+    """The JVM itself agrees with the table at 1 KiB either side of each
+    collector's edge (ZGC: at 1g and 32g), and at 32g - 1m."""
+    edge = session._COOPS_MAX_HEAP[collector] >> 10
+    heaps = ["1g", "32g"] if edge == 0 else [f"{edge}k", f"{edge + 1}k", "32767m"]
+    for heap in heaps:
+        want = session._heap_bytes(heap) <= session._COOPS_MAX_HEAP[collector]
+        assert _jvm_compressed_oops(collector, heap) == want, (collector, heap)

@@ -22,10 +22,11 @@ Spark loads (JEP 350), so it links far fewer classes from jars at start-up
 (OPTIMIZATION_r14.md, "Driver start-up from a class-data archive").
 The archive lives at
 ``${XDG_CACHE_HOME:-~/.cache}/vlm_data_pipeline_spark/<key>-<oops>.jsa``,
-keyed by the JDK and Spark's jars, and by whether the driver heap is below
-32g (compressed oops) or not: the first driver on a machine writes it at JVM
+keyed by the JDK and Spark's jars, and by whether the driver heap keeps
+compressed oops (below about 32g, by an edge that depends on the
+collector): the first driver on a machine writes it at JVM
 exit (``-XX:ArchiveClassesAtExit``), later ones map it
-(``-XX:SharedArchiveFile``). These are the only JVM flags the session adds.
+(``-XX:SharedArchiveFile``).
 The JVM archives nothing while a non-empty directory is on the classpath,
 and Spark's launcher puts the conf directory first: a conf directory holding
 only ``*.template`` files is swapped for an empty one for the launch. A conf
@@ -33,6 +34,14 @@ directory holding any real file, any other classpath input of the launcher
 (``spark.driver.extraClassPath``, ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR``,
 ``SPARK_DIST_CLASSPATH``, ...), or a cache directory that cannot be made
 starts the JVM without the archive, exactly as Spark would.
+
+The driver runs the Parallel collector (``-XX:+UseParallelGC``): the
+pipeline is a batch job that needs throughput, not short pauses, and
+compiling G1's larger write barriers costs about 8% of set-up CPU
+(OPTIMIZATION_r14.md, "The driver on the Parallel collector"). A collector
+the caller names anywhere the driver JVM reads options, or driver default
+Java options the caller sets, replace it; these flags and the archive's are
+the only JVM flags the session adds, and executors keep Spark's defaults.
 """
 
 from __future__ import annotations
@@ -63,6 +72,37 @@ _CLASSPATH_ENV = (
 )
 _CLASSPATH_CONF = ("spark.driver.extraClassPath", "spark.driver.defaultExtraClassPath")
 _SUBMIT_CLASSPATH = re.compile(r"class-?path|properties-file", re.IGNORECASE)
+# A second collector option stops the JVM ("Multiple garbage collectors
+# selected"), so the session adds none where the caller names one: in the
+# driver's extra Java options, spark-defaults.conf, or these variables.
+_GC_OPTION = re.compile(r"-XX:([+-])Use(\w+)GC\b")
+_JAVA_OPTIONS_ENV = (
+    "JAVA_TOOL_OPTIONS",
+    "_JAVA_OPTIONS",
+    "JDK_JAVA_OPTIONS",
+    "SPARK_SUBMIT_OPTS",
+    "PYSPARK_SUBMIT_ARGS",
+)
+# The largest heap that keeps compressed oops under each JDK 17 collector:
+# 32g less the null page padded to the collector's largest heap alignment,
+# 32m for G1 and Shenandoah and 2m for Parallel and Serial (as
+# -XX:+PrintFlagsFinal reports them). ZGC never compresses oops.
+_COOPS_MAX_HEAP = {
+    "Parallel": (32 << 30) - (2 << 20),
+    "Serial": (32 << 30) - (2 << 20),
+    "G1": (32 << 30) - (32 << 20),
+    "Shenandoah": (32 << 30) - (32 << 20),
+    "Z": 0,
+}
+
+
+def _env_positive_int(name: str, default: int) -> int:
+    """Env var ``name`` (``default`` when unset) as a positive integer, or a
+    ``ValueError`` naming the variable."""
+    raw = os.environ.get(name, str(default))
+    if not raw.strip().isdecimal() or int(raw) < 1:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return int(raw)
 
 
 def _env_cpus(default: int = 32) -> int:
@@ -70,10 +110,7 @@ def _env_cpus(default: int = 32) -> int:
     JVM starts: Spark reports a bad core count only as an opaque
     master-URL error. Every entry point that reads the variable reads it
     here."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS", str(default))
-    if not raw.strip().isdecimal() or int(raw) < 1:
-        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
-    return int(raw)
+    return _env_positive_int("SPARK_GRAFT_CPUS", default)
 
 
 def _env_driver_memory() -> str:
@@ -104,23 +141,58 @@ def _worker_pythonpath() -> str:
     return os.pathsep.join(p for p in (parent, inherited) if p)
 
 
-def _class_archive(conf: dict[str, str]) -> tuple[str, str] | None:
+def _conf_dir() -> str:
+    """The conf directory Spark's launcher reads and puts on the classpath."""
+    return os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+
+
+def _caller_collector(conf: dict[str, str]) -> str | None:
+    """The collector the caller switched on for the driver JVM (``"G1"``,
+    ``"Z"``, ...), or ``""`` when no input of the driver's Java options
+    names one; ``None`` when the caller sets the driver's default Java
+    options (in ``conf``, spark-defaults.conf or a properties file), or
+    names collectors without switching exactly one on. ``conf`` is the
+    session's settings."""
+    submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    if "spark.driver.defaultJavaOptions" in conf or "properties-file" in submit_args:
+        return None
+    try:
+        with open(os.path.join(_conf_dir(), "spark-defaults.conf"), encoding="utf-8") as f:
+            defaults = f.read()
+    except FileNotFoundError:
+        defaults = ""
+    except (OSError, UnicodeDecodeError):
+        return None
+    if "spark.driver.defaultJavaOptions" in defaults:
+        return None
+    inputs = [conf.get("spark.driver.extraJavaOptions", ""), defaults]
+    inputs += [os.environ.get(name, "") for name in _JAVA_OPTIONS_ENV]
+    named = _GC_OPTION.findall(" ".join(inputs))
+    if not named:
+        return ""
+    switched_on = {name for sign, name in named if sign == "+"}
+    return switched_on.pop() if len(switched_on) == 1 else None
+
+
+def _class_archive(conf: dict[str, str], collector: str) -> tuple[str, str] | None:
     """Driver JVM options that map (or, failing that, record) the class-data
     archive, and the empty conf directory to launch with; ``None`` when the
     driver classpath may hold a non-empty directory (a conf directory with a
-    real file, or any of the launcher's other classpath inputs), or the
-    JDK, jars or cache cannot be read or made, so the JVM starts as Spark
-    would start it. ``conf`` is the session's settings."""
+    real file, or any of the launcher's other classpath inputs), the JDK,
+    jars or cache cannot be read or made, or ``collector``'s compressed-oops
+    edge is unknown, so the JVM starts as Spark would start it. ``conf`` is
+    the session's settings, ``collector`` the one the driver JVM runs."""
     heap = conf.get("spark.driver.memory", "")
     if (
         not _JVM_MEMORY.fullmatch(heap)
+        or collector not in _COOPS_MAX_HEAP
         or any(os.environ.get(name) for name in _CLASSPATH_ENV)
         or any(conf.get(key) for key in _CLASSPATH_CONF)
         or _SUBMIT_CLASSPATH.search(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
     ):
         return None
     spark_home = _find_spark_home()
-    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    conf_dir = _conf_dir()
     java_home = os.environ.get("JAVA_HOME") or os.path.dirname(
         os.path.dirname(os.path.realpath(shutil.which("java") or "java"))
     )
@@ -147,9 +219,9 @@ def _class_archive(conf: dict[str, str]) -> tuple[str, str] | None:
             return None
     except OSError:
         return None
-    # heaps of 32g and more turn compressed oops off, which the archive records
+    # the archive records whether the heap keeps compressed oops
     stem = key.hexdigest()[:32]
-    oops = "oops" if _heap_bytes(heap) >= 32 << 30 else "coops"
+    oops = "coops" if _heap_bytes(heap) <= _COOPS_MAX_HEAP[collector] else "oops"
     archive = os.path.join(cache, f"{stem}-{oops}.jsa")
     try:
         with open(archive, "rb") as f:
@@ -210,15 +282,25 @@ def get_spark(
         .config("spark.sql.extensions.test.loadFromCp", "false")
     )
     extra_conf = extra_conf or {}
-    archive = _class_archive({"spark.driver.memory": driver_memory, **extra_conf})
-    if archive is not None:
+    conf = {"spark.driver.memory": driver_memory, **extra_conf}
+    collector = _caller_collector(conf)
+    options, launch_conf_dir = [], None
+    if collector is not None:
+        if not collector:
+            collector = "Parallel"
+            options.append("-XX:+UseParallelGC")
+        archive = _class_archive(conf, collector)
+        if archive is not None:
+            options.append(archive[0])
+            launch_conf_dir = archive[1]
+    if options:
         # Spark puts these in front of the caller's extraJavaOptions
-        builder = builder.config("spark.driver.defaultJavaOptions", archive[0])
+        builder = builder.config("spark.driver.defaultJavaOptions", " ".join(options))
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     saved_conf_dir = os.environ.get("SPARK_CONF_DIR")
-    if archive is not None:
-        os.environ["SPARK_CONF_DIR"] = archive[1]
+    if launch_conf_dir is not None:
+        os.environ["SPARK_CONF_DIR"] = launch_conf_dir
     try:
         spark = builder.getOrCreate()
     finally:
