@@ -4,6 +4,7 @@ sensitivity, ANN subset relation."""
 
 from __future__ import annotations
 
+import math
 import re
 
 import pytest
@@ -139,8 +140,9 @@ def test_ivf_ann_recall_vs_brute_force(spark, sf_dir):
         (r.query_id, r.neighbor_id)
         for r in similarity.brute_force_topk(emb, queries, k=5).collect()
     }
+    centroids = similarity.ivf_index(emb, n_lists=8)
     ivf_rows = similarity.ivf_ann_topk(
-        emb, queries, k=5, n_lists=8, nprobe=3
+        emb, queries, centroids=centroids, k=5, nprobe=3
     ).collect()
     ivf = {(r.query_id, r.neighbor_id) for r in ivf_rows}
     recall = len(brute & ivf) / len(brute)
@@ -156,10 +158,38 @@ def test_ivf_ann_recall_vs_brute_force(spark, sf_dir):
     full = {
         (r.query_id, r.neighbor_id)
         for r in similarity.ivf_ann_topk(
-            emb, queries, k=5, n_lists=4, nprobe=4
+            emb, queries, centroids=similarity.ivf_index(emb, n_lists=4), k=5, nprobe=4
         ).collect()
     }
     assert full == brute
+
+
+def test_ivf_kmeans_centroids_full_probe_equals_brute_force(spark, sf_dir):
+    """KMeans-trained centroids with every list probed: the IVF search is
+    exhaustive, so its rows (neighbors, cosines, ranks) equal brute force's
+    row for row."""
+    emb = _emb(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") % 100 == 0)
+    ivf = similarity.ivf_ann_topk(
+        emb, queries, centroids=similarity.ivf_index(emb, n_lists=8), k=5, nprobe=8
+    )
+    brute = similarity.brute_force_topk(emb, queries, k=5)
+    assert ivf.columns == brute.columns
+    rows = sorted(map(tuple, ivf.collect()))
+    assert rows and rows == sorted(map(tuple, brute.collect()))
+
+
+def test_semantic_dedup_one_list_equals_unblocked_embedding_pairs(spark, sf_dir):
+    """With one coarse list, SemDeDup's within-cluster pairs are every pair
+    over the threshold: the same rows the embedding pair join gives over a
+    constant block column (both run the one salted block join)."""
+    emb = _emb(spark, sf_dir)
+    sem = similarity.semantic_dedup_pairs(emb, threshold=0.35, n_lists=1)
+    blocked = dedup.embedding_neardup_pairs(
+        emb.withColumn("one", F.lit(0)), block_col="one", threshold=0.35
+    )
+    rows = sorted(map(tuple, sem.collect()))
+    assert rows and rows == sorted(map(tuple, blocked.collect()))
 
 
 def test_embedding_neardup_salted_plan(spark, sf_dir):
@@ -266,32 +296,50 @@ _IVF_ROWS = [
 _IVF_SCHEMA = "vec_id long, embedding array<float>"
 
 
+def _int_scaled(x: float) -> int:
+    """Spark's ``round(x * SCALE)``: half away from zero."""
+    v = x * similarity.SCALE
+    return int(math.copysign(math.floor(abs(v) + 0.5), v))
+
+
 def test_ivf_index_assigns_every_row_to_its_nearest_centroid(spark):
-    """The coarse quantizer fits on the plain array column (the session
-    loads no MLlib extension, so ``array_to_vector`` would not resolve):
-    ``n_lists`` centroids, every input row kept once with its vector, each
-    ``list_id`` the nearest centroid, and no vector-typed column out."""
+    """KMeans fits ``n_lists`` centroids on the plain array column (the
+    session loads no MLlib extension, so ``array_to_vector`` would not
+    resolve) and returns only them; the search assigns every vector to
+    the integer-scaled squared-L2 argmin, ties to the lowest list id."""
     corpus = spark.createDataFrame(_IVF_ROWS, _IVF_SCHEMA)
-    assigned, centroids = similarity.ivf_index(corpus, n_lists=4)
-    assert assigned.dtypes == [
-        ("vec_id", "bigint"),
-        ("embedding", "array<float>"),
-        ("list_id", "int"),
-    ]
+    centroids = similarity.ivf_index(corpus, n_lists=4)
     assert centroids.dtypes == [("list_id", "int"), ("centroid", "array<double>")]
-    cents = {r.list_id: r.centroid for r in centroids.collect()}
+    cents = {
+        r.list_id: [_int_scaled(x) for x in r.centroid] for r in centroids.collect()
+    }
     assert sorted(cents) == [0, 1, 2, 3]
-    rows = assigned.collect()
-    assert sorted((r.vec_id, r.embedding) for r in rows) == sorted(
-        tuple(r) for r in corpus.collect()
-    )
-    for r in rows:
-        d2 = {
-            lid: sum((x - y) ** 2 for x, y in zip(r.embedding, c))
-            for lid, c in cents.items()
+
+    def assign(cent_table):
+        arr = similarity._centroid_array(corpus, cent_table, 4, "vec_id", "embedding")
+        return {
+            r.vec_id: r.list_id
+            for r in similarity._assign_lists(
+                corpus, arr, "vec_id", "embedding", "vec_id"
+            ).collect()
         }
-        assert r.list_id == min(d2, key=d2.get), (r, d2)
-    assert len({r.list_id for r in rows}) == 4  # one list per cluster
+
+    assigned = assign(centroids)
+    assert sorted(assigned) == [r[0] for r in _IVF_ROWS]
+    for vec_id, vec in _IVF_ROWS:
+        iv = [_int_scaled(x) for x in vec]
+        d2 = {
+            lid: sum((x - y) ** 2 for x, y in zip(iv, c)) for lid, c in cents.items()
+        }
+        assert assigned[vec_id] == min(d2, key=lambda lid: (d2[lid], lid)), d2
+    assert len(set(assigned.values())) == 4  # one list per cluster
+    # vec 13 = (10, 0.25, -3) is equidistant from both centroids and joins
+    # the lower list id; vec 12 = (9.5, 0, -3) is nearer list 1
+    tie = spark.createDataFrame(
+        [(1, [9.0, 0.25, -3.0]), (0, [11.0, 0.25, -3.0])],
+        "list_id int, centroid array<double>",
+    )
+    assert (assign(tie)[13], assign(tie)[12]) == (0, 1)
 
 
 @pytest.mark.parametrize(
@@ -317,14 +365,14 @@ def test_ivf_fixed_centroids_recall_and_degenerate_exactness(spark, sf_dir):
     }
     exact = {
         (r.query_id, r.neighbor_id): r.cosine
-        for r in similarity.ivf_ann_fixed_topk(
+        for r in similarity.ivf_ann_topk(
             emb, queries, k=5, n_lists=8, nprobe=8
         ).collect()
     }
     assert exact == brute  # all lists probed == exhaustive search
     part = {
         (r.query_id, r.neighbor_id): r.cosine
-        for r in similarity.ivf_ann_fixed_topk(
+        for r in similarity.ivf_ann_topk(
             emb, queries, k=5, n_lists=8, nprobe=3
         ).collect()
     }
@@ -426,7 +474,7 @@ def test_ivf_fixed_probes_broadcast(spark, sf_dir):
     """Fixed-centroid IVF: probes (queries × nprobe) broadcast into the
     inverted lists; the corpus side must never shuffle for the join."""
     emb = _emb(spark, sf_dir)
-    out = similarity.ivf_ann_fixed_topk(
+    out = similarity.ivf_ann_topk(
         emb, emb.filter(F.col("vec_id") % 100 == 0), k=5, n_lists=8, nprobe=3
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -989,8 +1037,6 @@ def test_winnow_pairs_overlap_and_boilerplate_cull(spark):
 
 
 def _unit2(x, y):
-    import math
-
     n = math.hypot(x, y)
     return [x / n, y / n]
 

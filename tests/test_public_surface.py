@@ -7,9 +7,9 @@ delete, or a fixture to keep under ``tests/``.
 Pure AST scan, no Spark. A reference is a name or attribute use, a
 ``from ... import`` of the name, or an identifier-like string in the
 package, ``tools/``, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``.
-Re-exports are not references: a package ``__init__.py``'s ``from ...
-import`` or ``__all__`` entry does not count, nor does a function's use of
-its own name. Functions registered with ``@register`` are used by the
+Re-exports are not references: an ``__all__`` entry in any module, or a
+package ``__init__.py``'s ``from ... import``, does not count, nor does a
+function's use of its own name. Functions registered with ``@register`` are used by the
 query registry.
 """
 
@@ -59,14 +59,14 @@ def _names(node: ast.AST) -> list[str]:
 
 
 def _is_reexport(path: Path, top: ast.stmt) -> bool:
-    """An import or ``__all__`` assignment at the top of a package
-    ``__init__.py``: both name a function without calling it."""
-    if path.name != "__init__.py":
-        return False
-    return isinstance(top, ast.ImportFrom) or (
-        isinstance(top, ast.Assign)
-        and any(getattr(t, "id", None) == "__all__" for t in top.targets)
-    )
+    """An ``__all__`` assignment at the top of any module, or an import at
+    the top of a package ``__init__.py``: both name a function without
+    calling it."""
+    if isinstance(top, ast.Assign) and any(
+        getattr(t, "id", None) == "__all__" for t in top.targets
+    ):
+        return True
+    return path.name == "__init__.py" and isinstance(top, ast.ImportFrom)
 
 
 def test_every_public_function_has_a_caller_or_a_citation():
@@ -105,8 +105,8 @@ def test_every_public_function_has_a_caller_or_a_citation():
 
 
 def test_package_reexports_are_not_callers():
-    """A package ``__init__.py``'s imports and ``__all__`` name functions
-    without calling them; other statements there, and a module's own
+    """A package ``__init__.py``'s imports and any module's ``__all__`` name
+    functions without calling them; other statements, and a module's own
     imports, still count."""
     init = ast.parse("from .m import f\n__all__ = ['f']\nx = g()\n")
     assert [_is_reexport(PACKAGE / "__init__.py", t) for t in init.body] == [
@@ -114,4 +114,8 @@ def test_package_reexports_are_not_callers():
         True,
         False,
     ]
-    assert not _is_reexport(PACKAGE / "m.py", init.body[0])
+    assert [_is_reexport(PACKAGE / "m.py", t) for t in init.body] == [
+        False,
+        True,
+        False,
+    ]

@@ -120,7 +120,7 @@ def _collector_beans(spark) -> list[str]:
 
 
 @pytest.mark.skipif(
-    session._caller_collector({}) != "", reason="the caller's env names a collector"
+    session._caller_collector({})[0] != "", reason="the caller's env names a collector"
 )
 def test_live_driver_runs_the_parallel_collector(spark):
     """The pipeline is a batch job: the driver runs the throughput

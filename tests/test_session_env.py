@@ -374,6 +374,36 @@ def test_collector_named_in_extra_java_options_wins(
     assert launched == (collector and _choose(collector=collector)[0])
 
 
+@pytest.mark.parametrize(
+    "source", ["extraJavaOptions", "spark-defaults.conf", *session._JAVA_OPTIONS_ENV]
+)
+def test_callers_oops_option_starts_jvm_without_archive(
+    fake_install, monkeypatch, source
+):
+    """An option that changes the oops mode, named in any input of the
+    driver's Java options, launches without the archive (whose name would
+    misstate the mode it records); the collector is still added."""
+    spark_home, cache = fake_install
+    for flag in (
+        "-XX:-UseCompressedOops",
+        "-XX:-UseCompressedClassPointers",
+        "-XX:ObjectAlignmentInBytes=16",
+    ):
+        extra_conf = {}
+        if source == "extraJavaOptions":
+            extra_conf["spark.driver.extraJavaOptions"] = f"-Xss4m {flag}"
+        elif source == "spark-defaults.conf":
+            (spark_home / "conf" / "spark-defaults.conf").write_text(
+                f"spark.driver.extraJavaOptions {flag}\n"
+            )
+        elif source == "PYSPARK_SUBMIT_ARGS":
+            monkeypatch.setenv(source, f"--driver-java-options '{flag}' pyspark-shell")
+        else:
+            monkeypatch.setenv(source, flag)
+        _assert_launches_as_spark_would(monkeypatch, **extra_conf)
+    assert not cache.exists()
+
+
 # -- compressed-oops mode of the archive --------------------------------------
 
 

@@ -14,11 +14,16 @@ from pyspark.sql import functions as F
 from vlm_data_pipeline_spark.sources.warc import (
     encode_warc_record,
     http_fields,
-    parse_warc_bytes,
+    iter_warc_records,
     read_warc,
     split_gzip_members,
     warc_fields,
 )
+
+
+def parse_warc_bytes(path: str, content: bytes) -> list[dict]:
+    """Every record of one WARC file at once."""
+    return list(iter_warc_records(path, content))
 
 
 def _http_response(body: bytes, status: int = 200) -> bytes:

@@ -80,7 +80,9 @@ def aabb_iou_3d(a: Column, b: Column) -> Column:
 def box_as_array(box: Column) -> Column:
     """9-DoF struct → flat array<double> (the sampling UDF's wire format:
     Arrow ships primitive arrays cheaply; struct inputs to scalar pandas
-    UDFs are not supported)."""
+    UDFs are not supported).
+    The input format of the SURVEY §2.11 IoU UDFs ("optional iou_3d / AP
+    aggregation functions")."""
     return F.array(
         *[box[f].cast("double") for f in ("x", "y", "z", "xl", "yl", "zl", "pitch", "yaw", "roll")]
     )
@@ -96,6 +98,7 @@ def monte_carlo_iou_3d_udf(n_samples: int = 2048):
     combine with the reference's volume-normalized two-sided estimate.
     Deterministic: numpy Generator seeded from the per-row seed column.
     Angles are the stored normalized [-1,1] values (×π = radians).
+    SURVEY §2.11, "Monte-Carlo IoU".
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -278,7 +281,9 @@ def exact_iou_3d_udf():
     """Pandas UDF ``(box_as_array(a), box_as_array(b)) → double`` over
     :func:`exact_iou_3d` — the rotation-exact sibling of
     :func:`monte_carlo_iou_3d_udf` (no seed: the result is
-    deterministic), Arrow-batched like every binary-kernel seam."""
+    deterministic), Arrow-batched like every binary-kernel seam.
+    SURVEY §2.11, "exact IoU via Sutherland–Hodgman clipping + convex
+    hull"."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")

@@ -33,6 +33,7 @@ from ..functions.text import (
     tokens,
     word_shingles,
 )
+from .similarity import _block_cosine_pairs, _int_vec
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -118,19 +119,9 @@ def minhash_lsh_pairs(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.8,
-    max_bucket: int | None = 256,
+    max_bucket: int = 256,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact-Jaccard verify.
-
-    BEHAVIOR NOTE (round-6 change): ``max_bucket`` defaults to 256, so
-    (band, bucket) groups above the cap are culled before pairing —
-    pairs among MASS-duplicated content (>256 docs sharing a band
-    slice) are only emitted if :func:`exact_dedup_groups` runs FIRST,
-    which is the documented pipeline order (see
-    plans/star_queries_llm.py's dedup pipeline and the rationale
-    below). Pass ``max_bucket=None`` to restore the uncapped pre-r6
-    semantics when composing without an exact pass — accepting the
-    O(m²·bands) candidate blowup that the cap exists to prevent.
 
     Pipeline: shingle → k-minhash → split signature into ``bands`` bands of
     r = k/bands rows → md5(band) bucket key → per-(band, bucket) member
@@ -154,8 +145,8 @@ def minhash_lsh_pairs(
     """
     r = k // bands
     assert bands * r == k, "k must divide into equal bands"
-    if max_bucket is not None and max_bucket < 2:
-        raise ValueError("max_bucket must be >= 2 (or None for uncapped)")
+    if max_bucket < 2:
+        raise ValueError("max_bucket must be >= 2")
 
     # Stage the column pipeline through real projections: a higher-order
     # lambda re-evaluates its input subexpression per element, so tokens
@@ -181,13 +172,10 @@ def minhash_lsh_pairs(
     # ids and shuffling the corpus.
     banded = banded_signatures(sig.select("doc_id", "sig"), k, bands).drop("sig")
 
-    size_ok = F.size("members") >= 2
-    if max_bucket is not None:
-        size_ok = size_ok & (F.size("members") <= max_bucket)
     grouped = (
         banded.groupBy("band", "bucket")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("members"))
-        .filter(size_ok)
+        .filter((F.size("members") >= 2) & (F.size("members") <= max_bucket))
     )
     cand_ids = (
         grouped.select(F.explode(_inrow_id_pairs(F.col("members"))).alias("p"))
@@ -375,7 +363,6 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    scale: int = 10**4,
 ) -> DataFrame:
     """Near-identical embedding pairs by cosine within a blocking key.
 
@@ -383,51 +370,16 @@ def embedding_neardup_pairs(
     arithmetic (deterministic under any partitioning; also how a fixed-point
     SIMD kernel would do it). Unit-norm inputs → dot == cosine.
 
-    Salted exactly like ngram_jaccard_pairs above: a blocking key with few
-    distinct values (a handful of labels) would otherwise serialize each
-    block's quadratic verify onto one task — side A takes salt = hash(id)
-    mod S, side B replicates S ways, every (x < y) pair still forms exactly
-    once, and the work spreads across S tasks per block.
+    The pair join is SemDeDup's (``similarity.semantic_dedup_pairs``),
+    salted 32 ways so a blocking key with few distinct values (a handful of
+    labels) does not serialize each block's quadratic verify onto one task.
     """
     v = df.select(
         F.col(block_col).alias("blk"),
-        F.col(id_col).alias("vid"),
-        F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * scale).cast("long")
-        ).alias("iv"),
+        F.col(id_col).alias("id"),
+        _int_vec(F.col(vec_col)).alias("iv"),
     )
-    salt = 32
-    a = (
-        v.withColumn("_salt", F.pmod(F.hash("vid"), F.lit(salt)))
-        .repartition(salt, "_salt")
-        .alias("a")
-    )
-    b = v.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    ).alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.iv"), F.col("b.iv"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    # same merge-hint rationale as ngram_jaccard_pairs above: the b side
-    # is 32× an O(corpus) table of integer vectors — never broadcast it
-    # off a compressed-parquet size estimate
-    return (
-        a.join(
-            b.hint("merge"),
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a._salt") == F.col("b._salt"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .withColumn("cosine", dot.cast("double") / float(scale * scale))
-        .filter(F.col("cosine") >= threshold)
-        .select(
-            F.col("a.vid").alias("id_a"),
-            F.col("b.vid").alias("id_b"),
-            "cosine",
-        )
-    )
+    return _block_cosine_pairs(v, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -811,7 +763,7 @@ def minhash_incremental_pairs(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.8,
-    max_bucket: int | None = 256,
+    max_bucket: int = 256,
 ) -> DataFrame:
     """Near-duplicate pairs for BATCH-APPEND ingestion — the MinHash
     sibling of :func:`dedup_incremental`: the new batch's signatures are
@@ -855,13 +807,11 @@ def minhash_incremental_pairs(
     """
     if k // bands * bands != k:
         raise ValueError("k must divide into equal bands")
-    if max_bucket is not None and max_bucket < 2:
-        raise ValueError("max_bucket must be >= 2 (or None for uncapped)")
+    if max_bucket < 2:
+        raise ValueError("max_bucket must be >= 2")
     from pyspark.sql import Window
 
     def cap(banded: DataFrame) -> DataFrame:
-        if max_bucket is None:  # explicit pre-r6 uncapped opt-out
-            return banded
         w = Window.partitionBy("band", "bucket")
         return (
             banded.withColumn("_bn", F.count("*").over(w))

@@ -272,7 +272,8 @@ def edit_distance_join_brute(
     """All-pairs witness for :func:`edit_distance_join` — a length-banded
     self-join with no blocking. O(n²) candidates: SMALL INPUTS ONLY
     (equality pinned in tests/test_fuzzyjoin.py, incl. hypothesis-driven
-    adversarial strings around every blocking boundary)."""
+    adversarial strings around every blocking boundary).
+    A test reference: nothing in the engine calls it."""
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(str_col).alias("s"),

@@ -141,7 +141,8 @@ def cluster_by_zorder(
     interleaved key. Every output file then covers a tight
     hyper-rectangle in ``cols`` space, so per-file min/max statistics
     prune multi-dimensional predicates. The key column is dropped from
-    the result; layout is the product, not the value."""
+    the result; layout is the product, not the value.
+    SURVEY round 7, "Data-layout family: Z-order clustering"."""
     bounds = df.agg(
         *[F.min(c).alias(f"lo_{c}") for c in cols],
         *[F.max(c).alias(f"hi_{c}") for c in cols],

@@ -1,19 +1,29 @@
-"""Approximate-nearest-neighbor search over embedding columns (scale
-extension per SURVEY §7.1 step 7; BASELINE.json north star).
+"""Nearest-neighbor search over embedding columns (scale extension per
+SURVEY §7.1 step 7; BASELINE.json north star).
 
-Two tiers:
+Every search here is one shape: a coarse quantizer narrows the corpus to
+candidates, each query probes its candidates, an exact integer rerank
+scores them, and one per-query top-k tail (:func:`_top_k`) keeps the best.
 
-- **brute-force top-k**: exact cosine against every corpus vector. The
-  query side is tiny → broadcast; the corpus streams. O(|Q|·|C|·d) but
-  embarrassingly parallel and shuffle-free until the final per-query top-k.
-  This is the correctness baseline every ANN variant is measured against.
-- **hyperplane LSH (SRP)**: sign-of-dot against ``planes`` deterministic
-  pseudo-random hyperplanes → bucket id (Charikar SRP). Candidates = same
-  bucket; exact rerank inside the bucket. At corpus scale the bucket join
-  replaces the full cross product with O(collisions); recall tunes with
-  planes/tables.
+- **brute force** (:func:`brute_force_topk`): no quantizer; every corpus
+  vector is a candidate. The correctness baseline every ANN variant is
+  measured against.
+- **hyperplane LSH** (:func:`lsh_ann_topk`): the quantizer is the sign
+  pattern against deterministic pseudo-random hyperplanes (Charikar SRP);
+  candidates share the query's bucket.
+- **IVF** (:func:`ivf_ann_topk`): the quantizer is a centroid table, either
+  KMeans-trained (:func:`ivf_index`) or the lowest-id corpus vectors. Each
+  corpus vector joins its nearest list in-row; each query probes its
+  ``nprobe`` nearest lists.
+- **PQ** (:func:`pq_ann_topk`): every vector is a candidate, scored by
+  asymmetric distance over product-quantization codes instead of an exact
+  rerank.
 
-Dot products use integer-scaled exact arithmetic (see dedup.py rationale).
+The IVF list assignment also blocks SemDeDup's within-cluster pair join
+(shared with ``dedup.embedding_neardup_pairs``) and ranks D4's per-cluster
+prototypicality. Dot products and distances use integer-scaled exact
+arithmetic (see dedup.py rationale), so scores and list membership agree
+in any engine.
 """
 
 from __future__ import annotations
@@ -22,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.text import hash32
+from ..functions.text import hash32, let
 
 SCALE = 10**4
 
@@ -39,17 +49,51 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _fixed_cent_arr(
+def _cosine(a: Column, b: Column) -> Column:
+    """Cosine of two integer-scaled unit vectors: their exact dot in SCALE²
+    units."""
+    return _dot(a, b).cast("double") / float(SCALE * SCALE)
+
+
+def _d2(a: Column, b: Column) -> Column:
+    """Exact squared L2 of two integer-scaled vectors."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _top_k(
+    cands: DataFrame, k: int, name: str, score: Column, ascending: bool = False
+) -> DataFrame:
+    """The per-query top-k tail of every search: drop self-matches, score
+    the (query_id, neighbor_id) candidates as ``name``, rank by it (highest
+    first unless ``ascending``, ties to the lowest neighbor_id) and keep
+    ranks up to ``k``. Returns (query_id, neighbor_id, name, rank)."""
+    order = F.col(name).asc() if ascending else F.col(name).desc()
+    w = W.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return (
+        cands.filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn(name, score)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", name, "rank")
+    )
+
+
+def _centroid_array(
     corpus: DataFrame,
     centroids: DataFrame | None,
     n_lists: int,
     id_col: str,
     vec_col: str,
 ) -> Column:
-    """Deterministic coarse-quantizer centroids as ONE array literal:
-    caller-supplied table, or the embeddings of the ``n_lists`` lowest-id
-    corpus vectors (re-derivable by any engine). Dimension-sized by
-    construction (n_lists × d) — the shippable-model contract."""
+    """The coarse quantizer's centroids as ONE array literal of
+    (list_id, integer-scaled civ): the caller's (list_id, centroid) table,
+    list ids renumbered 0.. in list_id order, or the embeddings of the
+    ``n_lists`` lowest-id corpus vectors (re-derivable by any engine).
+    Dimension-sized by construction (n_lists × d)."""
     if centroids is None:
         centroids = (
             corpus.orderBy(F.col(id_col).asc())
@@ -68,14 +112,6 @@ def _fixed_cent_arr(
     )
 
 
-def _cent_d2(iv: Column, civ: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(iv, civ, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _cent_ranking(cent_arr: Column, iv: Column) -> Column:
     """array<struct<d:long, list_id:int>> ascending by INTEGER-scaled
     squared L2 (ties → lowest list_id): exact arithmetic in any engine,
@@ -84,20 +120,18 @@ def _cent_ranking(cent_arr: Column, iv: Column) -> Column:
         F.transform(
             cent_arr,
             lambda e: F.struct(
-                _cent_d2(iv, e["civ"]).alias("d"), e["list_id"].alias("list_id")
+                _d2(iv, e["civ"]).alias("d"), e["list_id"].alias("list_id")
             ),
         )
     )
 
 
-def _assign_fixed(
+def _assign_lists(
     corpus: DataFrame, cent_arr: Column, id_col: str, vec_col: str, id_alias: str
 ) -> DataFrame:
     """(id_alias, iv, list_id): nearest-centroid assignment computed
     IN-ROW against the centroid literal — zero shuffle, scales with
     input splits."""
-    from ..functions.text import let
-
     return corpus.select(
         F.col(id_col).alias(id_alias), _int_vec(F.col(vec_col)).alias("iv")
     ).withColumn(
@@ -113,7 +147,9 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k neighbors for every query vector.
+    """Exact cosine top-k neighbors for every query vector. The query side
+    is tiny → broadcast; the corpus streams, shuffle-free until the final
+    per-query top-k.
 
     Returns (query_id, neighbor_id, cosine, rank). Self-matches excluded.
     """
@@ -123,19 +159,8 @@ def brute_force_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _int_vec(F.col(vec_col)).alias("cv")
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", _dot(F.col("qv"), F.col("cv")).cast("double") / float(SCALE * SCALE)
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    cos = _cosine(F.col("qv"), F.col("cv"))
+    return _top_k(c.crossJoin(F.broadcast(q)), k, "cosine", cos)
 
 
 def exact_pair_cosine(
@@ -180,10 +205,9 @@ def exact_pair_cosine(
         j2 = nv.join(F.broadcast(j1.limit(max_pairs)), "neighbor_id")
     else:
         j2 = p.join(qv, "query_id").join(nv, "neighbor_id")
-    return j2.withColumn(
-        "cosine",
-        _dot(F.col("_qv"), F.col("_nv")).cast("double") / float(SCALE * SCALE),
-    ).select("query_id", "neighbor_id", "cosine")
+    return j2.withColumn("cosine", _cosine(F.col("_qv"), F.col("_nv"))).select(
+        "query_id", "neighbor_id", "cosine"
+    )
 
 
 def srp_bucket(vec_col: Column, dim: int, planes: int = 8) -> Column:
@@ -229,6 +253,8 @@ def lsh_ann_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k: SRP bucket join, then exact rerank inside the bucket.
+    At corpus scale the bucket join replaces the full cross product with
+    O(collisions).
 
     Recall < 1 by construction (single table); raise ``planes`` for purer
     buckets or add OR-tables (union of several bucket joins) for recall.
@@ -244,133 +270,44 @@ def lsh_ann_topk(
         _int_vec(F.col(vec_col)).alias("cv"),
         srp_bucket(F.col(vec_col), dim, planes).alias("bucket"),
     )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", _dot(F.col("qv"), F.col("cv")).cast("double") / float(SCALE * SCALE)
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    cos = _cosine(F.col("qv"), F.col("cv"))
+    return _top_k(c.join(F.broadcast(q), "bucket"), k, "cosine", cos)
 
 
 def ivf_index(
     corpus: DataFrame,
     n_lists: int = 16,
     seed: int = 7,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-):
-    """IVF coarse quantizer: KMeans centroids + per-vector list assignment.
+) -> DataFrame:
+    """KMeans-trained IVF centroids: (list_id int, centroid array<double>),
+    the ``centroids`` input of :func:`ivf_ann_topk`.
 
-    The scale path for ANN beyond LSH: k-means cluster the corpus once
-    (pyspark.ml, distributed), store each vector with its inverted-list id.
-    Returns (assigned DataFrame with ``list_id``, centroid table DataFrame).
-    Centroids are a tiny dimension (n_lists × d) — always broadcast.
-    KMeans reads an ``array<double>`` of non-null elements itself
-    (``array_to_vector`` resolves only through MLlib's session extension,
-    which ``get_spark`` does not load). A NULL vector or element raises.
+    The fit is the one iterative, distributed step of IVF (pyspark.ml);
+    the search assigns lists itself. Centroids are a tiny dimension
+    (n_lists × d). KMeans reads an ``array<double>`` of non-null elements
+    itself (``array_to_vector`` resolves only through MLlib's session
+    extension, which ``get_spark`` does not load). A NULL vector or
+    element raises.
     """
     from pyspark.ml.clustering import KMeans
 
     vec = F.col(vec_col).cast("array<double>")
     has_null = vec.isNull() | F.exists(vec, lambda x: x.isNull())
     feat = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
         # the coalesce only types the elements non-null: a NULL raises first
         F.when(has_null, F.raise_error(F.lit(f"ivf_index: NULL in {vec_col}")))
         .otherwise(F.transform(vec, lambda x: F.coalesce(x, F.lit(0.0))))
         .alias("features"),
     )
     model = KMeans(k=n_lists, seed=seed, maxIter=20).fit(feat)
-    assigned = (
-        model.transform(feat)
-        .withColumnRenamed("prediction", "list_id")
-        .select(id_col, vec_col, "list_id")
-    )
-    spark = corpus.sparkSession
-    centroids = spark.createDataFrame(
+    return corpus.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "list_id int, centroid array<double>",
     )
-    return assigned, centroids
 
 
 def ivf_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_lists: int = 16,
-    nprobe: int = 4,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN top-k: probe the ``nprobe`` nearest inverted lists per query,
-    exact-rerank inside them.
-
-    Cost vs brute force ≈ nprobe/n_lists of the corpus per query; recall
-    grows with nprobe (nprobe=n_lists degenerates to exact). The KMeans fit
-    is the one iterative (non-SQL-expressible) step, so the driver check
-    for this operator is rows-only; recall is pinned against
-    brute_force_topk in tests.
-    Returns (query_id, neighbor_id, cosine, rank).
-    """
-    assigned, centroids = ivf_index(corpus, n_lists, seed, id_col, vec_col)
-
-    # nearest nprobe centroids per query — centroid dim is tiny: broadcast
-    qd = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qraw")
-    )
-    cdist = qd.crossJoin(F.broadcast(centroids)).withColumn(
-        "dist2",
-        F.aggregate(
-            F.zip_with(
-                F.col("qraw").cast("array<double>"),
-                F.col("centroid"),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    wq = W.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col("list_id").asc())
-    probes = (
-        cdist.withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "list_id", _int_vec(F.col("qraw")).alias("qv"))
-    )
-
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"), _int_vec(F.col(vec_col)).alias("cv"), "list_id"
-    )
-    scored = (
-        c.join(F.broadcast(probes), "list_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("qv"), F.col("cv")).cast("double") / float(SCALE * SCALE),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    # each corpus vector lives in exactly one list and each (query, list)
-    # probe is unique, so (query, neighbor) pairs are already distinct
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def ivf_ann_fixed_topk(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: DataFrame | None = None,
@@ -380,31 +317,30 @@ def ivf_ann_fixed_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF ANN with a DETERMINISTIC coarse quantizer: caller-supplied (or
-    corpus-seeded) centroids instead of the iterative KMeans fit — same
-    inverted-list probe + exact in-list rerank as :func:`ivf_ann_topk`,
-    but reproducible end-to-end in plain SQL, so the driver can VALUE-
-    check this variant (the KMeans path stays rows-only and remains the
-    production default when trained centroids exist).
+    """IVF ANN top-k: probe the ``nprobe`` nearest inverted lists per query,
+    exact-rerank inside them.
 
-    Determinism choices, both load-bearing:
+    ``centroids`` is the coarse quantizer, a (list_id, centroid) table:
+    KMeans-trained from :func:`ivf_index`, or by default the embeddings of
+    the ``n_lists`` LOWEST-ID corpus vectors, which any engine can
+    re-derive, so the driver can value-check that variant in plain SQL.
+    Assignment and probing order by INTEGER-scaled squared L2 (the dedup.py
+    integer-cosine rationale), ties to the lowest list id: exact in any
+    engine, no last-ulp float ties deciding list membership.
 
-    - centroids default to the embeddings of the ``n_lists`` LOWEST-ID
-      corpus vectors (any engine can re-derive that set);
-    - assignment/probing order by INTEGER-scaled squared L2 (the dedup.py
-      integer-cosine rationale): exact arithmetic in any engine, no
-      last-ulp float ties deciding list membership.
+    Cost vs brute force ≈ nprobe/n_lists of the corpus per query; recall
+    grows with nprobe (probing every list is exact search).
 
     Scale shape: centroids are dimension-sized → collected to ONE array
     literal; every corpus vector argmins its list IN-ROW (zero shuffle —
     the scan scales with splits); probes explode nprobe rows per query
     and broadcast into the inverted lists; only the final per-query
-    top-k windows.
+    top-k windows. Each corpus vector lives in exactly one list and each
+    (query, list) probe is unique, so candidate pairs are distinct.
+    Returns (query_id, neighbor_id, cosine, rank).
     """
-    from ..functions.text import let
-
-    cent_arr = _fixed_cent_arr(corpus, centroids, n_lists, id_col, vec_col)
-    assigned = _assign_fixed(
+    cent_arr = _centroid_array(corpus, centroids, n_lists, id_col, vec_col)
+    assigned = _assign_lists(
         corpus, cent_arr, id_col, vec_col, "neighbor_id"
     ).withColumnRenamed("iv", "cv")
     probes = (
@@ -422,22 +358,8 @@ def ivf_ann_fixed_topk(
         )
         .select("query_id", "qv", F.col("pl.list_id").alias("list_id"))
     )
-    scored = (
-        assigned.join(F.broadcast(probes), "list_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("qv"), F.col("cv")).cast("double") / float(SCALE * SCALE),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    cos = _cosine(F.col("qv"), F.col("cv"))
+    return _top_k(assigned.join(F.broadcast(probes), "list_id"), k, "cosine", cos)
 
 
 def pq_ann_topk(
@@ -477,8 +399,6 @@ def pq_ann_topk(
     Returns (query_id, neighbor_id, approx_dist2, rank) — approx_dist2
     in integer-scaled units (SCALE² per squared unit).
     """
-    from ..functions.text import let
-
     assert dim % m == 0, "dim must split evenly into m subspaces"
     dsub = dim // m
     if codebooks is None:
@@ -512,19 +432,12 @@ def pq_ann_topk(
     def subvec(iv: Column, j: int) -> Column:
         return F.slice(iv, j * dsub + 1, dsub)
 
-    def d2(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     def code_for(iv: Column, j: int) -> Column:
         ranked = F.array_sort(
             F.transform(
                 books[j],
                 lambda c, i: F.struct(
-                    d2(subvec(iv, j), c).alias("d"), i.alias("code")
+                    _d2(subvec(iv, j), c).alias("d"), i.alias("code")
                 ),
             )
         )
@@ -548,7 +461,7 @@ def pq_ann_topk(
             F.col("qv"),
             lambda iv: F.array(
                 *[
-                    F.transform(books[j], lambda c: d2(subvec(iv, j), c))
+                    F.transform(books[j], lambda c: _d2(subvec(iv, j), c))
                     for j in range(m)
                 ]
             ),
@@ -559,18 +472,8 @@ def pq_ann_topk(
         adc = adc + F.element_at(
             F.element_at(F.col("tab"), j + 1), F.col("codes")[j] + 1
         )
-    scored = (
-        encoded.crossJoin(F.broadcast(qtab))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("approx_dist2", adc)
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("approx_dist2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "approx_dist2", "rank")
+    return _top_k(
+        encoded.crossJoin(F.broadcast(qtab)), k, "approx_dist2", adc, ascending=True
     )
 
 
@@ -626,6 +529,49 @@ def train_pq_codebooks(
 # ---------------------------------------------------------------------------
 
 
+def _block_cosine_pairs(v: DataFrame, threshold: float) -> DataFrame:
+    """Pairs (id_a < id_b) within one block of ``v`` (blk, id, iv) whose
+    exact integer cosine reaches ``threshold``: (id_a, id_b, cosine).
+
+    Salted self-join, the pattern of dedup.ngram_jaccard_pairs: joining
+    on the block alone puts each block's entire quadratic pair generation
+    on the one task that owns its hash partition — one hot block (or a
+    handful of labels) serializes. Side A takes salt = hash(id) mod S and
+    is repartitioned on it (so a broadcast build side still probes across
+    S tasks); side B replicates S ways. Every (x < y) pair still forms
+    exactly once, at salt(x), and each block's verify spreads across S
+    tasks.
+
+    Merge hint — the sf10 (factor-100) spot check killed this join with
+    "Not enough memory to build the broadcast relation": the
+    ×32-replicated b side is O(corpus) integer vectors whose static size
+    estimate descends from the compressed parquet scan and sees neither
+    the decode amplification nor the explode. Same invariant as
+    dedup.ngram_jaccard_pairs and fuzzyjoin: a corpus-scaled blocking
+    side is never broadcast.
+    """
+    salt = 32
+    a = (
+        v.withColumn("_salt", F.pmod(F.hash("id"), F.lit(salt)))
+        .repartition(salt, "_salt")
+        .alias("a")
+    )
+    b = v.withColumn(
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+    ).alias("b")
+    return (
+        a.join(
+            b.hint("merge"),
+            (F.col("a.blk") == F.col("b.blk"))
+            & (F.col("a._salt") == F.col("b._salt"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .withColumn("cosine", _cosine(F.col("a.iv"), F.col("b.iv")))
+        .filter(F.col("cosine") >= threshold)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "cosine")
+    )
+
+
 def semantic_dedup_pairs(
     corpus: DataFrame,
     threshold: float,
@@ -645,60 +591,21 @@ def semantic_dedup_pairs(
     per-cluster quadratic stays bounded — roughly |corpus| / 1k vectors
     per cluster (SemDeDup used 100k clusters on LAION-440M). The default
     16 is demo-sized for the sf test tables only. Within-cluster pair
-    generation is additionally salted 32 ways (see below), so even a
-    skewed hot cluster spreads its verify across tasks rather than
-    serializing on the one task that owns its hash partition.
+    generation is additionally salted 32 ways (:func:`_block_cosine_pairs`),
+    so even a skewed hot cluster spreads its verify across tasks rather
+    than serializing on the one task that owns its hash partition.
 
-    Deterministic end-to-end: the coarse quantizer is the fixed-centroid
-    one from :func:`ivf_ann_fixed_topk` (lowest-id corpus vectors by
-    default, integer-scaled L2 assignment in-row), and cosines are exact
+    Deterministic end-to-end: the coarse quantizer is the one of
+    :func:`ivf_ann_topk` (lowest-id corpus vectors by default,
+    integer-scaled L2 assignment in-row), and cosines are exact
     integer-scaled dots — fully value-oracle-able. Feed the output to
     ``dedup.neardup_components`` + ``dedup.dedup_keep_filter`` for the
     retention pass.
     """
-    cent_arr = _fixed_cent_arr(corpus, centroids, n_lists, id_col, vec_col)
-    assigned = _assign_fixed(corpus, cent_arr, id_col, vec_col, "id")
-
-    # Salted self-join, same pattern as dedup.ngram_jaccard_pairs /
-    # embedding_neardup_pairs: joining on list_id alone puts each
-    # cluster's entire quadratic pair generation on the one task that
-    # owns its hash partition, and parallelism caps at n_lists with no
-    # skew protection — one hot cluster serializes. Side A takes
-    # salt = hash(id) mod S and is repartitioned on it (so a broadcast
-    # build side still probes across S tasks); side B replicates S ways.
-    # Every (x < y) pair still forms exactly once, at salt(x), and each
-    # cluster's verify spreads across S tasks.
-    salt = 32
-    a = (
-        assigned.withColumn("_salt", F.pmod(F.hash("id"), F.lit(salt)))
-        .repartition(salt, "_salt")
-        .alias("a")
-    )
-    b = assigned.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    ).alias("b")
-    cos = _dot(F.col("a.iv"), F.col("b.iv")).cast("double") / float(SCALE * SCALE)
-    # Merge hint — the sf10 (factor-100) spot check killed this exact
-    # join with "Not enough memory to build the broadcast relation": the
-    # ×32-replicated b side is O(corpus) integer vectors whose static
-    # size estimate descends from the compressed parquet scan and sees
-    # neither the decode amplification nor the explode. Same invariant
-    # as dedup.ngram_jaccard_pairs / embedding_neardup_pairs /
-    # fuzzyjoin: a corpus-scaled blocking side is never broadcast.
-    return (
-        a.join(
-            b.hint("merge"),
-            (F.col("a.list_id") == F.col("b.list_id"))
-            & (F.col("a._salt") == F.col("b._salt"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            "cosine",
-        )
+    cent_arr = _centroid_array(corpus, centroids, n_lists, id_col, vec_col)
+    assigned = _assign_lists(corpus, cent_arr, id_col, vec_col, "id")
+    return _block_cosine_pairs(
+        assigned.select(F.col("list_id").alias("blk"), "id", "iv"), threshold
     )
 
 
@@ -721,8 +628,8 @@ def prototypicality(
     MOST prototypical (centroid-nearest) examples are the redundancy the
     diversification pass removes.
 
-    Deterministic end-to-end: the fixed-centroid quantizer from
-    :func:`ivf_ann_fixed_topk` assigns lists in-row (zero shuffle), the
+    Deterministic end-to-end: the quantizer of :func:`ivf_ann_topk`
+    assigns lists in-row (zero shuffle), the
     centroid dot is exact integer-scaled arithmetic, and ranks tie-break
     on id. The ONE exchange is the per-cluster window (count + rank over
     the list_id hash partition). For unit-normalized embeddings and
@@ -731,8 +638,8 @@ def prototypicality(
     Returns (id, list_id, proto_cos, n_cluster, proto_rank) with
     proto_rank = 1 for the centroid-nearest member.
     """
-    cent_arr = _fixed_cent_arr(corpus, centroids, n_lists, id_col, vec_col)
-    assigned = _assign_fixed(corpus, cent_arr, id_col, vec_col, "id")
+    cent_arr = _centroid_array(corpus, centroids, n_lists, id_col, vec_col)
+    assigned = _assign_lists(corpus, cent_arr, id_col, vec_col, "id")
     own_civ = F.element_at(
         F.filter(cent_arr, lambda e: e["list_id"] == F.col("list_id")), 1
     )["civ"]

@@ -32,8 +32,10 @@ and Spark's launcher puts the conf directory first: a conf directory holding
 only ``*.template`` files is swapped for an empty one for the launch. A conf
 directory holding any real file, any other classpath input of the launcher
 (``spark.driver.extraClassPath``, ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR``,
-``SPARK_DIST_CLASSPATH``, ...), or a cache directory that cannot be made
-starts the JVM without the archive, exactly as Spark would.
+``SPARK_DIST_CLASSPATH``, ...), a cache directory that cannot be made, or
+a caller's Java option that changes the oops mode (``UseCompressedOops``,
+``UseCompressedClassPointers``, ``ObjectAlignmentInBytes``) starts the JVM
+without the archive, exactly as Spark would.
 
 The driver runs the Parallel collector (``-XX:+UseParallelGC``): the
 pipeline is a batch job that needs throughput, not short pauses, and
@@ -76,6 +78,11 @@ _SUBMIT_CLASSPATH = re.compile(r"class-?path|properties-file", re.IGNORECASE)
 # selected"), so the session adds none where the caller names one: in the
 # driver's extra Java options, spark-defaults.conf, or these variables.
 _GC_OPTION = re.compile(r"-XX:([+-])Use(\w+)GC\b")
+# Options that change the oops mode an archive records, which its name
+# (chosen from heap and collector) would then misstate.
+_OOPS_OPTION = re.compile(
+    r"-XX:(?:[+-]UseCompressed(?:Oops|ClassPointers)\b|ObjectAlignmentInBytes=)"
+)
 _JAVA_OPTIONS_ENV = (
     "JAVA_TOOL_OPTIONS",
     "_JAVA_OPTIONS",
@@ -146,32 +153,35 @@ def _conf_dir() -> str:
     return os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
 
 
-def _caller_collector(conf: dict[str, str]) -> str | None:
+def _caller_collector(conf: dict[str, str]) -> tuple[str | None, bool]:
     """The collector the caller switched on for the driver JVM (``"G1"``,
     ``"Z"``, ...), or ``""`` when no input of the driver's Java options
     names one; ``None`` when the caller sets the driver's default Java
     options (in ``conf``, spark-defaults.conf or a properties file), or
-    names collectors without switching exactly one on. ``conf`` is the
-    session's settings."""
+    names collectors without switching exactly one on. Second, whether
+    those inputs name an option that changes the oops mode. ``conf`` is
+    the session's settings."""
     submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
     if "spark.driver.defaultJavaOptions" in conf or "properties-file" in submit_args:
-        return None
+        return None, False
     try:
         with open(os.path.join(_conf_dir(), "spark-defaults.conf"), encoding="utf-8") as f:
             defaults = f.read()
     except FileNotFoundError:
         defaults = ""
     except (OSError, UnicodeDecodeError):
-        return None
+        return None, False
     if "spark.driver.defaultJavaOptions" in defaults:
-        return None
+        return None, False
     inputs = [conf.get("spark.driver.extraJavaOptions", ""), defaults]
     inputs += [os.environ.get(name, "") for name in _JAVA_OPTIONS_ENV]
-    named = _GC_OPTION.findall(" ".join(inputs))
+    options = " ".join(inputs)
+    oops_option = _OOPS_OPTION.search(options) is not None
+    named = _GC_OPTION.findall(options)
     if not named:
-        return ""
+        return "", oops_option
     switched_on = {name for sign, name in named if sign == "+"}
-    return switched_on.pop() if len(switched_on) == 1 else None
+    return (switched_on.pop() if len(switched_on) == 1 else None), oops_option
 
 
 def _class_archive(conf: dict[str, str], collector: str) -> tuple[str, str] | None:
@@ -283,13 +293,13 @@ def get_spark(
     )
     extra_conf = extra_conf or {}
     conf = {"spark.driver.memory": driver_memory, **extra_conf}
-    collector = _caller_collector(conf)
+    collector, oops_option = _caller_collector(conf)
     options, launch_conf_dir = [], None
     if collector is not None:
         if not collector:
             collector = "Parallel"
             options.append("-XX:+UseParallelGC")
-        archive = _class_archive(conf, collector)
+        archive = None if oops_option else _class_archive(conf, collector)
         if archive is not None:
             options.append(archive[0])
             launch_conf_dir = archive[1]

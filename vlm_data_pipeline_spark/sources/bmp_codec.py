@@ -123,7 +123,9 @@ def encode_bmp(
 ) -> bytes:
     """Minimal encoder (tests + fixture generation): RGB(A) rows →
     uncompressed 24/32-bit BITMAPINFOHEADER bytes. Round-trips exactly
-    through :func:`decode_bmp`."""
+    through :func:`decode_bmp`.
+    A test reference: the round-trip witness the decoder tests compare
+    against."""
     if channels not in (3, 4):
         raise ValueError("encode_bmp writes 24-bit RGB or 32-bit RGBA only")
     height = len(rows)

@@ -33,6 +33,7 @@ def write_bucketed(
 
     Sorting within buckets additionally removes the sort from sort-merge
     operators over the same key (the layout pre-pays it).
+    SURVEY §7.1 step 1, "Parquet bronze", laid out bucketed.
     """
     writer = (
         df.write.mode("overwrite")

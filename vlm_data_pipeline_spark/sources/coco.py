@@ -55,6 +55,7 @@ def coco_frames(
       (the geometry.py:272-296 normalization, done once at ingest).
     - camera: no intrinsics in COCO (coco_processor.py:370-379); dimensions
       from the images table metadata when present.
+    SURVEY §2.4 J5, "COCO images ⋈ annotations ⋈ categories".
     """
     t = read_coco_tables(spark, labels_path)
     anns = (

@@ -287,7 +287,8 @@ def _read_dataset(buf: bytes, ohdr_addr: int) -> np.ndarray:
 
 
 def list_datasets(content: bytes) -> list[str]:
-    """Names of the root group's children (hypersim files are flat)."""
+    """Names of the root group's children (hypersim files are flat).
+    Part of SURVEY §2.1 S5, "HDF5 dataset scan"."""
     return sorted(_root_entries(content))
 
 

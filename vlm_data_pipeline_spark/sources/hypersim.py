@@ -52,6 +52,7 @@ def scene_parameter(
     """S4 key/value probe: ``parameter_name → parameter_value`` lookup as a
     one-row DataFrame (join-able, broadcastable) instead of a driver-side
     scalar — e.g. ``meters_per_asset_unit`` (hypersim_processor.py:388-397).
+    SURVEY §2.1 S4, "CSV metadata scan".
     """
     df = (
         read_metadata_csv(spark, scene_csv_path)
@@ -128,6 +129,7 @@ def read_hdf5_datasets(
     flattened layout keeps downstream math in native array functions.
     ``on_error='skip'`` drops corrupt files instead of failing the job
     (sources.robust).
+    SURVEY §2.1 S5, "HDF5 dataset scan".
     """
     from .robust import guard
 
@@ -167,6 +169,7 @@ def nearest_keyframe_pose(
     ties broken toward the exact/earlier keyframe so the result is
     deterministic. The scene key keeps the join partitioned; keyframe sets
     are per-scene small (camera trajectories), so AQE typically broadcasts.
+    SURVEY §2.4 J9, "Nearest-keyframe lookup (as-of-style)".
     """
     by = by or ["scene_id"]
     joined = frames.join(keyframes, by, "left")
@@ -189,6 +192,7 @@ def visible_instance_names(
 ) -> DataFrame:
     """J4: mask-visible instance ids ⋈ mesh-box table ⋈ node names
     (hypersim_processor.py:252-284,402-403) — two broadcast equi-joins.
+    SURVEY §2.4 J4, "visible-instances ⋈ bbox-metadata ⋈ node-metadata".
     """
     return visible.join(F.broadcast(mesh_boxes), instance_col, "left").join(
         F.broadcast(nodes), instance_col, "left"

@@ -135,7 +135,8 @@ def read_embodiedscan(
 def embodiedscan_to_parquet(
     spark: SparkSession, pkl_paths: list[str] | str, out_dir: str
 ) -> None:
-    """One-time pickle → Parquet conversion (the scale path: never re-parse)."""
+    """One-time pickle → Parquet conversion (the scale path: never re-parse).
+    SURVEY §2.1 S7, "Pickle scan (EmbodiedScan)"."""
     tables = read_embodiedscan(spark, pkl_paths)
     for name, df in tables.items():
         df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
@@ -205,6 +206,7 @@ def matterport_frames(
     ``{base}_pose_{view}_{num}.txt`` named; matterport_processor.py:171-181)
     join by remapping the frame id's ``_i`` infix — done with one regexp on
     the file path instead of per-frame filesystem probes.
+    SURVEY §2.4 J1, "Frames ⋈ EmbodiedScan boxes".
     """
     tables = read_embodiedscan(spark, pkl_paths)
     boxes = embodiedscan_boxes(tables)

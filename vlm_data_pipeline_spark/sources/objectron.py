@@ -124,6 +124,7 @@ def read_pbdata_frames(
     frames cost nothing (objectron_processor.py:126-128).
     ``on_error='skip'`` drops corrupt files instead of failing the job
     (sources.robust).
+    SURVEY §2.1 S6, "Protobuf sequence scan".
     """
     from .robust import guard
 
@@ -150,7 +151,8 @@ def read_pbdata_frames(
 def objectron_filter(frames: DataFrame) -> DataFrame:
     """P6: keep objects with ≥9 3D keypoints, then frames with ≥1 object
     (objectron_processor.py:84-94,163-164,209-210) — array filter + size
-    predicate, no shuffle."""
+    predicate, no shuffle.
+    SURVEY §2.3 P6, "keypoint-completeness predicate"."""
     return frames.withColumn(
         "objects",
         F.filter(
@@ -162,7 +164,8 @@ def objectron_filter(frames: DataFrame) -> DataFrame:
 
 def parse_video_ids(frames: DataFrame) -> DataFrame:
     """S10: derive category / video_id from the ``<category>/batch-B_N``
-    path layout (objectron_processor.py:295-304) with one regexp each."""
+    path layout (objectron_processor.py:295-304) with one regexp each.
+    SURVEY §2.1 S10, "Filesystem listing as a table"."""
     return frames.withColumns(
         {
             "category": F.regexp_extract(F.col("path"), r"([^/]+)/[^/]+\.pbdata$", 1),
@@ -184,6 +187,7 @@ def objectron_frames(parsed: DataFrame, split: str = "train") -> DataFrame:
     a valid box are dropped.
 
     Input is ``parse_video_ids(objectron_filter(read_pbdata_frames(...)))``.
+    SURVEY §2.3 P8, "projection to unified record".
     """
     from ..schemas import FRAME
 

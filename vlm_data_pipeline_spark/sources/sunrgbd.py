@@ -185,6 +185,7 @@ def sunrgbd_frames(
     One frame per scene (the reference processes one image per scene dir,
     sunrgbd_processor.py:225-246). Left joins: scenes may lack extrinsics
     or annotations — camera.extrinsics / boxes stay null.
+    SURVEY §2.3 P8, "projection to unified record".
     """
     intr = read_intrinsics(spark, intrinsics_pattern)
     extr = read_extrinsics(spark, extrinsics_pattern)

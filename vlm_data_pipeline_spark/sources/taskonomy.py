@@ -48,6 +48,7 @@ def list_view_files(spark: SparkSession, pattern: str, glob: str = "*.png") -> D
     (taskonomy_processor.py:424-447). Listing distributes with the
     binaryFile source; only metadata columns are selected so file contents
     are not read until a decode stage asks for them.
+    SURVEY §2.1 S10, "Filesystem listing as a table".
     """
     files = (
         spark.read.format("binaryFile")
@@ -147,6 +148,7 @@ def read_instance_pixels(
     (taskonomy_processor.py:307-329) — so executors ship kilobytes, not
     megapixel masks, into the shuffle. ``on_error='skip'`` drops corrupt
     files instead of failing the job (sources.robust).
+    SURVEY §2.1 S8, "Image scan (RGB/JPG/PNG)".
     """
     from .robust import guard
 
@@ -176,6 +178,7 @@ def dominant_semantic_class(pixels: DataFrame) -> DataFrame:
 
     groupBy + max_by(struct) — ties break toward the smaller class id so
     results are deterministic (np.argmax's first-wins, same outcome).
+    SURVEY §2.4 J10, "Instance ⋈ dominant-semantic-class".
     """
     per_class = pixels.groupBy("path", "instance_id", "sem_class").agg(
         F.sum("n_pixels").alias("n_pixels")
@@ -195,7 +198,7 @@ def dominant_semantic_class(pixels: DataFrame) -> DataFrame:
 def pixel_aabb_boxes(pixels: DataFrame, min_side: int = 5, min_area: int = 100) -> DataFrame:
     """F7 tail: instance AABB over all its pixel tiles + the reference's 2D
     validity predicates (box > 5×5 px, area ≥ 100 px²,
-    taskonomy_processor.py:334-353)."""
+    taskonomy_processor.py:334-353). SURVEY §2.9 F7, "pixel geometry"."""
     agg = pixels.groupBy("path", "instance_id").agg(
         F.min("x_min").alias("x_min"),
         F.min("y_min").alias("y_min"),
@@ -232,7 +235,8 @@ DEPTH_BOX = T.StructType(
 
 
 def read_view_contents(spark: SparkSession, pattern: str, glob: str) -> DataFrame:
-    """(point_id, view_id, content) rows for one modality's files."""
+    """(point_id, view_id, content) rows for one modality's files.
+    SURVEY §2.1 S8, "Image scan (RGB/JPG/PNG)"."""
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
@@ -271,6 +275,7 @@ def instance_depth_boxes(
     min/max per axis IN-STAGE, so only (center, dims) rows — never point
     clouds — enter the shuffle. The reference's validity gates are kept:
     depth ∈ (0, 100), ≥ 10 points, dims ∈ [0.05, 50].
+    SURVEY §2.9 F7, "pixel geometry".
     """
     import numpy as np
 

@@ -73,7 +73,6 @@ from . import robust
 
 __all__ = [
     "split_gzip_members",
-    "parse_warc_bytes",
     "encode_warc_record",
     "read_warc",
     "warc_fields",
@@ -144,17 +143,6 @@ def _split_http(payload: bytes) -> tuple[int | None, str | None, bytes]:
     return status, ctype, body
 
 
-def parse_warc_bytes(path: str, content: bytes) -> list[dict[str, Any]]:
-    """Eager wrapper over :func:`iter_warc_records` (tests, the robust
-    audit probe, small files). The production scan streams the iterator
-    through bounded batches instead — see :func:`read_warc`: a real
-    Common Crawl segment is ~1 GB compressed / 3-5 GB decompressed, and
-    materializing every record dict of one segment at once (×32
-    concurrent tasks) is exactly the executor-OOM shape this split
-    avoids (round-6 verdict #4)."""
-    return list(iter_warc_records(path, content))
-
-
 def iter_warc_records(path: str, content: bytes):
     """Split one WARC file (possibly multi-member gzip) into record
     dicts, LAZILY — gzip members decompress one at a time
@@ -209,7 +197,9 @@ def iter_warc_records(path: str, content: bytes):
 def encode_warc_record(headers: dict[str, str], payload: bytes) -> bytes:
     """The writer half (tests/fixtures round-trip through the engine's
     own encoder, like every codec in ``sources``): Content-Length is
-    computed, callers pass the named fields only."""
+    computed, callers pass the named fields only.
+    A test reference: the round-trip witness the decoder tests compare
+    against."""
     lines = ["WARC/1.0"]
     lines += [f"{k}: {v}" for k, v in headers.items()]
     lines.append(f"Content-Length: {len(payload)}")
@@ -256,8 +246,8 @@ def batched_record_frames(
     ``on_error='skip'`` semantics under streaming: a file is dropped
     from its FIRST corrupt record onward — records before the
     corruption that already left in a flushed frame cannot be
-    retracted (the memory bound is the point). The eager path
-    (``robust.guard(parse_warc_bytes, 'skip')``) drops whole files;
+    retracted (the memory bound is the point). An eager decode under
+    ``robust.guard(..., 'skip')`` drops whole files;
     :func:`robust.file_decode_errors` audits identically for both."""
     robust.check_on_error(on_error)
     cols = [f.name for f in WARC_RECORDS.fields]
@@ -296,7 +286,8 @@ def read_warc(
     records never leave their file's task, bodies cross only the Arrow
     boundary in BOUNDED frames (the streaming splitter above — a 3-5 GB
     decompressed segment peaks at ~batch_bytes per task, not the whole
-    segment); everything downstream is a column program. No shuffle."""
+    segment); everything downstream is a column program. No shuffle.
+    SURVEY round 7, "WARC splitter streams bounded batches"."""
     robust.check_on_error(on_error)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -338,7 +329,7 @@ def _named_field(rec: Column, name: str) -> Column:
 
 def warc_fields(rec: Column) -> dict[str, Column]:
     """Parse one WARC record string into its fields, in-row. Framing
-    mirrors :func:`parse_warc_bytes` exactly (CRLFCRLF header
+    mirrors :func:`iter_warc_records` exactly (CRLFCRLF header
     terminator, Content-Length-framed payload) but counts CHARACTERS —
     the column is decoded text. ``payload`` is sliced by the declared
     length, so blank lines INSIDE payloads do not break framing (the

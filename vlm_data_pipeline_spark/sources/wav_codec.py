@@ -130,7 +130,9 @@ def encode_wav(
 ) -> bytes:
     """Minimal encoder (tests + fixtures): float frames in [−1, 1) →
     integer-PCM RIFF bytes. Round-trips through :func:`decode_wav` with
-    quantization error ≤ 1 LSB."""
+    quantization error ≤ 1 LSB.
+    A test reference: the round-trip witness the decoder tests compare
+    against."""
     samples = np.asarray(samples, dtype=np.float64)
     if samples.ndim == 1:
         samples = samples[:, None]  # mono convenience: (n,) → (n, 1)

@@ -67,7 +67,8 @@ def read_tar_shards(spark: SparkSession, path: str) -> DataFrame:
     """One row per shard file: (path, length, content). Backed by the
     built-in ``binaryFile`` source — partition pruning and listing
     parallelism come for free; each shard's bytes land in exactly one
-    task, the WebDataset contract."""
+    task, the WebDataset contract.
+    SURVEY round 11, "WebDataset tar-shard source/sink"."""
     return (
         spark.read.format("binaryFile")
         .load(path)

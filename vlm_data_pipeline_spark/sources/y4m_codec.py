@@ -184,7 +184,9 @@ def encode_y4m(
 ) -> bytes:
     """Minimal encoder (tests + fixtures): mono or 420 (chroma filled
     neutral 128) from luma row-lists. Round-trips through
-    :func:`decode_y4m`."""
+    :func:`decode_y4m`.
+    A test reference: the round-trip witness the decoder tests compare
+    against."""
     if not luma_frames:
         raise ValueError("no frames")
     height = len(luma_frames[0])

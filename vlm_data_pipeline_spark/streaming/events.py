@@ -76,6 +76,7 @@ def stream_events(
     The driver's testdata is one parquet file; a production feed would be a
     growing directory (or Kafka — swap the reader, the transformations are
     source-agnostic). ``maxFilesPerTrigger`` bounds per-microbatch work.
+    SURVEY §2.12, "optional Structured Streaming demonstration".
     """
     nanos = _ts_is_nanos(spark, f"{sf_dir}/events.parquet")
     reader = (
@@ -107,6 +108,7 @@ def tumbling_event_stats(
     count(DISTINCT) is not allowed in streaming aggregations —
     approx_count_distinct is the scalable substitute (exact distinct would
     need unbounded per-window state).
+    SURVEY §2.12, "optional Structured Streaming demonstration".
     """
     df = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
@@ -132,7 +134,8 @@ def sliding_event_stats(
     slide: str = "3 hours",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Sliding (overlapping) event-time windows over the error rate."""
+    """Sliding (overlapping) event-time windows over the error rate.
+    SURVEY §2.12, "optional Structured Streaming demonstration"."""
     df = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
         df.groupBy(F.window("ts", window, slide).alias("w"))
@@ -160,6 +163,7 @@ def session_window_stats(
     streaming counterpart of the batch ``sessionize_events`` query
     (plans/star_queries.py), which derives sessions with lag/sum windows.
     ``session_window`` keeps the same gap semantics with managed state.
+    SURVEY §2.12, "optional Structured Streaming demonstration".
     """
     df = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
@@ -181,6 +185,7 @@ def dedupe_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     Batch: dropDuplicates. Streaming: dropDuplicatesWithinWatermark so the
     dedupe state is bounded by the watermark horizon instead of growing
     forever — the streaming face of the K7/dedup operators.
+    SURVEY §2.12, "optional Structured Streaming demonstration".
     """
     if events.isStreaming:
         return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
@@ -206,6 +211,7 @@ def running_user_totals(events: DataFrame, watermark: str = "1 hour") -> DataFra
     applyInPandasWithState — the pattern a custom sketch/session operator
     would use when built-ins can't express it. Batch fallback: a plain
     groupBy aggregate (identical final answer for a finite input).
+    SURVEY §2.12, "optional Structured Streaming demonstration".
     """
     if not events.isStreaming:
         return events.groupBy("user_id").agg(
